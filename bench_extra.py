@@ -6,10 +6,10 @@ so optimization work can time one phase at a time with the noop sink
 inferring phase costs from end-to-end walls.
 
 Usage:
-    SPARK_GRAFT_AMPLIFY=6 python bench_extra.py --what resolve
     python bench_extra.py --what minhash
     python bench_extra.py --what simhash
-Prints one JSON line per phase set.
+Prints one JSON line per phase set. Resolve stages are timed from the
+shipped plan by ``perfbench/run.py --trace 1``.
 """
 
 from __future__ import annotations
@@ -48,139 +48,13 @@ def _timed(spark, label: str, fn, out: dict) -> object:
     return res
 
 
-def bench_resolve(spark, docs, out: dict) -> None:
-    """Phase-by-phase timing of the flagship resolve pipeline. Mirrors
-    plans/resolve.py stage structure; each phase materializes via noop or
-    an eager checkpoint so the next phase starts from computed input."""
-    from gpu_entity_resolver_spark.config import ResolverConfig
-    from gpu_entity_resolver_spark.operators.blocking import (
-        blocking_keys,
-        candidate_pairs,
-    )
-    from gpu_entity_resolver_spark.operators.connected_components import (
-        connected_components,
-    )
-    from gpu_entity_resolver_spark.operators.scoring import (
-        edges_above_threshold,
-        score_pairs,
-    )
-    from gpu_entity_resolver_spark.plans.resolve import (
-        prepare_documents,
-        resolve_documents,
-    )
-
-    cfg = ResolverConfig()
-    prepared = _timed(
-        spark,
-        "01_prepare",
-        lambda: prepare_documents(docs, cfg).localCheckpoint(eager=True),
-        out,
-    )
-    _timed(
-        spark,
-        "02a_keys_only",
-        lambda: _noop(blocking_keys(prepared, "doc_id", "norm_text", cfg=cfg.blocking)),
-        out,
-    )
-    pairs = _timed(
-        spark,
-        "02_block_pairs",
-        lambda: candidate_pairs(
-            blocking_keys(prepared, "doc_id", "norm_text", cfg=cfg.blocking),
-            cfg.blocking,
-        ).localCheckpoint(eager=True),
-        out,
-    )
-    out["n_pairs"] = pairs.count()
-    scored = _timed(
-        spark,
-        "03_score",
-        lambda: score_pairs(
-            pairs, prepared, "doc_id", "norm_text", cfg.scoring
-        ).localCheckpoint(eager=True),
-        out,
-    )
-    edges = edges_above_threshold(scored, cfg.scoring.edge_threshold)
-    labels = _timed(
-        spark,
-        "04_cc",
-        lambda: connected_components(
-            edges, max_iterations=cfg.clustering.cc_max_iterations
-        ).localCheckpoint(eager=True),
-        out,
-    )
-    out["n_labels"] = labels.count()
-
-    # hygiene phases, mirroring plans/resolve.py build_hygiene (default cfg:
-    # ensemble off, attach_noise + merge_similar + consolidate + split on)
-    from gpu_entity_resolver_spark.operators.canonical import canonical_map
-    from gpu_entity_resolver_spark.operators.hygiene import (
-        attach_singletons,
-        consolidate_identical_entities,
-        merge_similar_clusters,
-        split_clusters_by,
-    )
-
-    clustered = (
-        prepared.join(
-            labels.withColumnsRenamed({"vertex": "doc_id", "component": "cluster"}),
-            "doc_id",
-            "left",
-        )
-        .withColumn("cluster", F.coalesce("cluster", "doc_id"))
-        .localCheckpoint(eager=True)
-    )
-    hy = _timed(
-        spark,
-        "04b_attach",
-        lambda: attach_singletons(
-            scored.where(F.col("jw").isNotNull()).select("src", "dst", "score"),
-            clustered,
-            tau=cfg.clustering.attachment_similarity_threshold,
-            min_matching=cfg.clustering.attachment_min_matching,
-            ratio_threshold=cfg.clustering.attachment_ratio_threshold,
-        ).localCheckpoint(eager=True),
-        out,
-    )
-    canon0 = _timed(
-        spark,
-        "04b_canon0",
-        lambda: canonical_map(hy, "cluster", "norm_text").localCheckpoint(
-            eager=True
-        ),
-        out,
-    )
-    hy2 = _timed(
-        spark,
-        "04b_merge_similar",
-        lambda: merge_similar_clusters(hy, canon0, cfg).localCheckpoint(eager=True),
-        out,
-    )
-    hy3 = _timed(
-        spark,
-        "04b_consolidate",
-        lambda: consolidate_identical_entities(hy2, "norm_text", "cluster")
-        .localCheckpoint(eager=True),
-        out,
-    )
-    _timed(
-        spark,
-        "04b_split_lang",
-        lambda: split_clusters_by(hy3, "lang", "cluster").localCheckpoint(
-            eager=True
-        ).count(),
-        out,
-    )
-    # end-to-end for reference (fresh run, includes hygiene + finalize)
-    _timed(spark, "resolve_total", lambda: resolve_documents(spark, docs).count(), out)
-
-
 def bench_minhash(spark, docs, out: dict) -> None:
     """Component timing of minhash_dedup over the documents table."""
     from gpu_entity_resolver_spark.config import BlockingConfig
     from gpu_entity_resolver_spark.operators.blocking import (
         candidate_pairs,
         lsh_block_keys,
+        sort_token_table,
     )
     from gpu_entity_resolver_spark.operators.connected_components import (
         connected_components,
@@ -209,7 +83,9 @@ def bench_minhash(spark, docs, out: dict) -> None:
         spark,
         "mh_pairs",
         lambda: candidate_pairs(
-            lsh_block_keys(norm, "doc_id", "nt", cfg), cfg
+            lsh_block_keys(norm, "doc_id", "nt", cfg),
+            cfg,
+            tokens=sort_token_table(norm, "doc_id", "nt"),
         ).localCheckpoint(eager=True),
         out,
     )
@@ -261,44 +137,28 @@ def bench_simhash(spark, docs, out: dict) -> None:
 
 def main() -> None:
     p = argparse.ArgumentParser()
-    p.add_argument("--what", default="resolve",
-                   choices=["resolve", "minhash", "simhash", "ops"])
-    p.add_argument("--amplify", type=int,
-                   default=int(os.environ.get("SPARK_GRAFT_AMPLIFY", "1")))
+    p.add_argument("--what", default="minhash", choices=["minhash", "simhash"])
     args = p.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from gpu_entity_resolver_spark.session import get_spark
-    from gpu_entity_resolver_spark.sources.webgen import (
-        INPUT_COLUMNS,
-        generate_documents,
-    )
 
     spark = get_spark(app_name="bench_extra", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    out: dict = {"what": args.what, "amplify": args.amplify, "cpus": cpus}
-    if args.what == "resolve":
-        # the flagship pipeline runs over the generated web corpus, exactly
-        # as bench.py does
-        docs = generate_documents(spark, sf_dir, amplify=args.amplify).select(
-            *INPUT_COLUMNS
-        ).localCheckpoint(eager=True)
-        out["n_docs"] = docs.count()
-        bench_resolve(spark, docs, out)
+    out: dict = {"what": args.what, "cpus": cpus}
+    # the operator queries read the documents parquet directly, exactly as
+    # __spark_entry__.queries() does
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").localCheckpoint(
+        eager=True
+    )
+    out["n_docs"] = docs.count()
+    if args.what == "minhash":
+        bench_minhash(spark, docs, out)
     else:
-        # the operator queries read the documents parquet directly, exactly
-        # as __spark_entry__.queries() does
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").localCheckpoint(
-            eager=True
-        )
-        out["n_docs"] = docs.count()
-        if args.what == "minhash":
-            bench_minhash(spark, docs, out)
-        elif args.what == "simhash":
-            bench_simhash(spark, docs, out)
+        bench_simhash(spark, docs, out)
 
     print(json.dumps(out))
 

@@ -19,7 +19,7 @@ def main() -> None:
 
     from gpu_entity_resolver_spark.config import ResolverConfig
     from gpu_entity_resolver_spark.operators.blocking import (
-        blocking_keys,
+        blocking_plan,
         candidate_pairs,
     )
     from gpu_entity_resolver_spark.operators.scoring import score_pairs
@@ -57,10 +57,8 @@ def main() -> None:
 
     dump("resolve_prepare_stage", prepared)
     prepared_c = prepared.localCheckpoint(eager=False)  # mirror ckpt.stage
-    pairs = candidate_pairs(
-        blocking_keys(prepared_c, "doc_id", "norm_text", cfg=cfg.blocking),
-        cfg.blocking,
-    )
+    keys, tokens = blocking_plan(prepared_c, "doc_id", "norm_text", cfg=cfg.blocking)
+    pairs = candidate_pairs(keys, cfg.blocking, tokens=tokens)
     dump("resolve_pairs_stage", pairs)
     pairs_c = pairs.localCheckpoint(eager=False)  # mirror ckpt.stage
     scfg = cfg.scoring

@@ -53,7 +53,6 @@ class BlockingConfig:
     seed: int = 42                        # deterministic hash seed
     sorted_neighborhood_prefix: int = 8   # chars of normalized text for SN key
     max_block_size: int = 128             # blocks above this get salted/capped
-    salt_buckets: int = 8                 # salt fan-out for hot blocks
     # Document-frequency ceiling for a single blocking key: keys shared by
     # more than this many docs are DROPPED before salting (they carry no
     # discriminative signal — an empty-text LSH band, a boilerplate footer
@@ -168,7 +167,6 @@ class ClusteringConfig:
     """
 
     cc_max_iterations: int = 50
-    min_cluster_size: int = 1             # reference HDBSCAN uses 3; CC keeps all
     # hygiene stages (reference stage order, resolver.py:1573-1620)
     consolidate_identical: bool = True    # C6
     split_by_lang: bool = True            # C7 (state-split analog)
@@ -230,12 +228,9 @@ class ConfidenceConfig:
 
 @dataclass
 class RuntimeConfig:
-    """Spark execution knobs — the analog of the reference's GPU memory
-    management (chunk sizes, free_all_blocks; resolver.py:2537-2619)."""
+    """Run-time placement. Spark sizing (cores, shuffle partitions, driver
+    memory) comes from ``session.get_spark``, not from the model config."""
 
-    shuffle_partitions: int = 32
-    arrow_batch_size: int = 10_000
-    broadcast_threshold_rows: int = 1_000_000
     checkpoint_dir: str | None = None     # parquet stage tables + lineage
 
 

@@ -1,27 +1,28 @@
 """Multi-key blocking: MinHash-LSH over char shingles + sorted-neighborhood
-prefix keys + host keys, with hot-block salting.
+prefix keys + host keys (+ soundex keys), with hot-block salting.
 
 This is the single most important semantic→Spark transformation (SURVEY.md
 §2.3 J5): the reference bounds all-pairs work with a chunked cross join
 (resolver.py:2534-2562) and kNN searches (utils.py:313-359); at 10^12-doc
 scale candidate generation must instead be an equi-join on blocking keys.
 
-MinHash is hand-rolled with ``xxhash64`` column math rather than
-``ml.feature.MinHashLSH`` to guarantee cross-run determinism, avoid
-VectorUDT round-trips, and keep everything inside whole-stage codegen
-(SURVEY.md §7.3). ``xxhash64(shingle, perm_index)`` varies the hash per
-permutation; band hashes combine ``rows_per_band`` minima.
+MinHash is hand-rolled over Spark-compatible XXH64 rather than
+``ml.feature.MinHashLSH`` to guarantee cross-run determinism and avoid
+VectorUDT round-trips (SURVEY.md §7.3). ``xxhash64(shingle_hash, perm)``
+varies the hash per permutation; band hashes combine ``rows_per_band``
+minima.
 
-Hot blocks (template boilerplate producing giant LSH buckets) are handled
-by salting: a block of size s > cap is split into ceil(s/cap) salt groups
-and pairs are generated only within a salt group. Recall loss is bounded
-because every doc carries ``bands + extra`` independent keys; duplicate
-pairs from multiple keys are deduped downstream.
+:func:`blocking_plan` is the one entry point: every key family emits
+narrow (doc_id, block_key) rows, and one per-doc token table orders the
+members of hot blocks. Hot blocks (template boilerplate producing giant
+LSH buckets) are split into sorted-neighborhood salt ranges of
+``max_block_size`` members (see :func:`salt_blocks`); duplicate pairs from
+multiple keys are deduped in :func:`candidate_pairs`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import BlockingConfig
@@ -39,10 +40,13 @@ _SORT_OFFSETS = (0, 256, 1024, 4096)
 _SORT_SEG = 16
 
 
-def _sort_tokens(text_col: str) -> tuple[Column, Column]:
-    """Two content sort tokens for in-block sorted-neighborhood salting:
+def sort_token_table(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "norm_text"
+) -> DataFrame:
+    """One (doc_id, sort_key, sort_key2) row per DOC: the two content sort
+    tokens that order hot-block members in :func:`salt_blocks`. Both are
     the same fixed-offset windows (plus the last ``_SORT_SEG`` chars of the
-    squeezed text) concatenated LEFT-TO-RIGHT (``sort_key``) and
+    squeezed text), concatenated LEFT-TO-RIGHT (``sort_key``) and
     RIGHT-TO-LEFT (``sort_key2``).
 
     Lexicographic orders lose a pair as soon as the FIRST differing window
@@ -51,7 +55,12 @@ def _sort_tokens(text_col: str) -> tuple[Column, Column]:
     matches. With both orders, a pair differing in one region stays
     adjacent in the order that reads that region LAST — classic multi-pass
     sorted-neighborhood (Hernandez & Stolfo 1995), expressed as two salted
-    range partitions per hot block."""
+    range partitions per hot block.
+
+    A doc carries ~10 key rows; keeping its two ~85-char tokens here
+    instead of on every key row means they are attached ONLY to the
+    hot-block rows that the rank windows actually order (guide §8: shuffle
+    keys and metadata, attach heavy payload late and only where needed)."""
     squeezed = F.regexp_replace(F.col(text_col), r"\s+", "")
     n = F.length(squeezed)
     wins = [
@@ -60,107 +69,10 @@ def _sort_tokens(text_col: str) -> tuple[Column, Column]:
     last = F.substr(
         squeezed, F.greatest(n - _SORT_SEG + 1, F.lit(1)), F.lit(_SORT_SEG)
     )
-    fwd = F.concat_ws("|", *wins, last)
-    rev = F.concat_ws("|", last, *reversed(wins))
-    return fwd, rev
-
-
-def _sort_token(text_col: str) -> Column:
-    """Single-order token (kept for callers that build raw key tables)."""
-    return _sort_tokens(text_col)[0]
-
-
-def sort_token_table(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "norm_text"
-) -> DataFrame:
-    """One (doc_id, sort_key, sort_key2) row per DOC — the narrow-key
-    companion table. The wide key tables repeat both ~85-char tokens on
-    every key row (~10 rows/doc), so the salting checkpoint and join moved
-    ~10x the token bytes that exist; with narrow keys the tokens ride this
-    per-doc table and are attached ONLY to the hot-block rows that the
-    rank windows actually order (guide §8: shuffle keys and metadata,
-    attach heavy payload late and only where needed)."""
-    fwd, rev = _sort_tokens(text_col)
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        fwd.alias("sort_key"),
-        rev.alias("sort_key2"),
-    )
-
-
-def minhash_signature(text_col: str, cfg: BlockingConfig) -> Column:
-    """All ``num_perm`` min-hashes as ONE array<long> column, computed in a
-    single pass over the distinct char shingles.
-
-    Structure matters for speed: the shingle array is referenced exactly once
-    (evaluated once per row); the ``aggregate`` fold then computes, per
-    shingle, all permutation hashes ``xxhash64(shingle_hash, p, seed)`` (long
-    math, no string re-hash) and keeps the element-wise minimum via
-    ``zip_with``. A naive 64-column formulation re-evaluated the shingling 64
-    times per row and was ~60x slower.
-    """
-    hs_all = f"transform(array_distinct({_shingle_expr(text_col, cfg.shingle_size)}), x -> xxhash64(x, {cfg.seed}))"
-    # Deterministic shingle subsampling (keep hashes ≡ 0 mod m): an unbiased
-    # MinHash over the subsampled shingle sets at 1/m the permutation cost —
-    # the standard trick for long documents. Short docs (sample would be
-    # empty) fall back to the full set.
-    if cfg.minhash_shingle_mod > 1:
-        # Bind the expensive shingle-hash array ONCE via lambda variables
-        # (transform over a 1-element array), so neither the full set nor the
-        # filtered subset is re-evaluated per reference. The previous CASE
-        # formulation inlined `hs_all` textually into the condition, the THEN
-        # branch and the fallback — 2 evaluations per row of the most
-        # expensive sub-expression on the default config path.
-        m = cfg.minhash_shingle_mod
-        hs = (
-            f"transform(transform(array({hs_all}), "
-            f"a -> struct(a AS a, filter(a, h -> pmod(h, {m}) = 0) AS f)), "
-            f"s -> CASE WHEN size(s.f) > 0 THEN s.f ELSE s.a END)[0]"
-        )
-    else:
-        hs = hs_all
-    perms = f"sequence(0, {cfg.num_perm - 1})"
-    return F.expr(
-        f"aggregate({hs}, "
-        f"transform({perms}, p -> 9223372036854775807L), "
-        f"(acc, h) -> zip_with(acc, transform({perms}, p -> xxhash64(h, p)), "
-        f"(a, b) -> least(a, b)))"
-    )
-
-
-def _shingle_expr(col: str, n: int) -> str:
-    return (
-        f"CASE WHEN length({col}) >= {n} THEN "
-        f"transform(sequence(1, length({col}) - {n} + 1), i -> substring({col}, i, {n})) "
-        f"ELSE array({col}) END"
-    )
-
-
-def lsh_block_keys_jvm(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "norm_text",
-    cfg: BlockingConfig | None = None,
-) -> DataFrame:
-    """(doc_id, block_key) rows: one key per LSH band — all-JVM reference
-    formulation (kept as the A/B + equivalence baseline for
-    :func:`lsh_block_keys`, which emits bit-identical keys)."""
-    cfg = cfg or BlockingConfig()
-    r = cfg.num_perm // cfg.bands
-    fwd, rev = _sort_tokens(text_col)
-    sig = docs.select(
-        F.col(id_col).alias("doc_id"),
-        minhash_signature(text_col, cfg).alias("mhs"),
-        fwd.alias("sort_key"),
-        rev.alias("sort_key2"),
-    )
-    # Band hash = xxhash64 over the band's r minima (banding via slice).
-    bands = F.expr(
-        f"transform(sequence(0, {cfg.bands - 1}), "
-        f"b -> concat('mh', b, ':', xxhash64(slice(mhs, b * {r} + 1, {r}), b)))"
-    )
-    return sig.select(
-        "doc_id", F.explode(bands).alias("block_key"), "sort_key", "sort_key2"
+        F.concat_ws("|", *wins, last).alias("sort_key"),
+        F.concat_ws("|", last, *reversed(wins)).alias("sort_key2"),
     )
 
 
@@ -169,14 +81,12 @@ def lsh_block_keys(
     id_col: str = "doc_id",
     text_col: str = "norm_text",
     cfg: BlockingConfig | None = None,
-    with_tokens: bool = True,
 ) -> DataFrame:
-    """(doc_id, block_key) rows: one key per LSH band (plus the per-row
-    sort tokens when ``with_tokens`` — narrow callers pair the keys with
-    :func:`sort_token_table` instead and skip the 10x token duplication).
+    """(doc_id, block_key) rows: one key per LSH band.
 
-    Emits EXACTLY the rows of :func:`lsh_block_keys_jvm` (pinned by
-    tests/test_lsh_numpy.py) but computes the whole signature in numpy:
+    Emits EXACTLY the rows of the all-JVM MinHash formulation kept in
+    tests/baselines/lsh_jvm.py (pinned by tests/test_lsh_numpy.py) but
+    computes the whole signature in numpy:
 
     - gram hashing: Spark's ``xxhash64(gram, seed)`` over a 4-byte ASCII
       gram is ``hash_int(seed, hash_int(le_bytes, 42))`` — for XXH64 a
@@ -212,18 +122,7 @@ def lsh_block_keys(
     mod = cfg.minhash_shingle_mod
     n_sh = cfg.shingle_size
     seed = cfg.seed
-    if with_tokens:
-        fwd, rev = _sort_tokens(text_col)
-        base = docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(text_col).alias("_t"),
-            fwd.alias("sort_key"),
-            rev.alias("sort_key2"),
-        )
-    else:
-        base = docs.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t")
-        )
+    base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
     perms = np.arange(num_perm, dtype=np.uint64)
     # Tile the (hashes x num_perm) permutation matrix to ~2 MB: the sweep is
     # ~14 elementwise uint64 passes over the matrix, so DRAM-sized tiles make
@@ -273,19 +172,11 @@ def lsh_block_keys(
                 key_cols.append([f"mh{b}:{v}" for v in bh.tolist()])
             out_keys = [key_cols[b][i] for i in range(n) for b in range(bands)]
             idx = np.repeat(np.arange(n), bands)
-            out = {
-                "doc_id": pdf["doc_id"].to_numpy()[idx],
-                "block_key": out_keys,
-            }
-            if with_tokens:
-                out["sort_key"] = pdf["sort_key"].to_numpy()[idx]
-                out["sort_key2"] = pdf["sort_key2"].to_numpy()[idx]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"].to_numpy()[idx], "block_key": out_keys}
+            )
 
-    schema = "doc_id long, block_key string"
-    if with_tokens:
-        schema += ", sort_key string, sort_key2 string"
-    return base.mapInPandas(per_batch, schema)
+    return base.mapInPandas(per_batch, "doc_id long, block_key string")
 
 
 def sorted_neighborhood_keys(
@@ -293,7 +184,6 @@ def sorted_neighborhood_keys(
     id_col: str = "doc_id",
     text_col: str = "norm_text",
     cfg: BlockingConfig | None = None,
-    with_tokens: bool = True,
 ) -> DataFrame:
     """Prefix-block keys on the normalized text — the sorted-neighborhood
     analog expressed as an equi-joinable key (docs sharing the first K chars
@@ -307,14 +197,10 @@ def sorted_neighborhood_keys(
     # DBA-style prefix noise) — a second sort order, as classic sorted-
     # neighborhood uses multiple passes.
     tail = F.concat(F.lit("st:"), F.substr(squeezed, F.length(squeezed) - k + 1, F.lit(k)))
-    cols = [
+    return docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array(head, tail)).alias("block_key"),
-    ]
-    if with_tokens:
-        fwd, rev = _sort_tokens(text_col)
-        cols += [fwd.alias("sort_key"), rev.alias("sort_key2")]
-    return docs.select(*cols).where(F.length("block_key") > 3)
+    ).where(F.length("block_key") > 3)
 
 
 def host_keys(
@@ -325,13 +211,9 @@ def host_keys(
     host = F.lower(
         F.regexp_extract(F.col(url_col), r"^(?:[a-zA-Z][a-zA-Z0-9+.-]*://)?(?:www\.)?([^/:?#]+)", 1)
     )
-    fwd, rev = _sort_tokens(url_col)
     return docs.select(
         F.col(id_col).alias("doc_id"),
         F.concat(F.lit("host:"), host).alias("block_key"),
-        # sort by the url text: near-dup urls of one host sort adjacent
-        fwd.alias("sort_key"),
-        rev.alias("sort_key2"),
     ).where(F.col("block_key") != "host:")
 
 
@@ -349,114 +231,72 @@ def phonetic_block_keys(
     from ..functions.phonetic import soundex_key
 
     key = F.concat(F.lit("ph:"), soundex_key(F.col(text_col), max_words))
-    fwd, rev = _sort_tokens(text_col)
     return docs.select(
-        F.col(id_col).alias("doc_id"),
-        key.alias("block_key"),
-        fwd.alias("sort_key"),
-        rev.alias("sort_key2"),
+        F.col(id_col).alias("doc_id"), key.alias("block_key")
     ).where(F.length("block_key") > 3)
 
 
 def salt_blocks(
     blocks: DataFrame,
     cfg: BlockingConfig | None = None,
-    tokens: DataFrame | None = None,
+    *,
+    tokens: DataFrame,
 ) -> DataFrame:
     """Split oversized blocks into salt groups of at most ``max_block_size``
     members, keeping pair cost LINEAR in block size without the silent
     cross-salt recall hole.
 
+    ``blocks`` holds narrow (doc_id, block_key) rows; ``tokens`` holds one
+    (doc_id, sort_key, sort_key2) row per DOC (:func:`sort_token_table`).
+
     Hot-block strategy (SURVEY §4's salt x neighbor-salt / sorted-
-    neighborhood prescription):
+    neighborhood prescription): members of a hot block are ORDERED by
+    (sort_key, doc_id) and cut into consecutive rank ranges of
+    ``max_block_size``; every member also joins its NEXT range. Any pair
+    within ``max_block_size`` sort positions is therefore always generated
+    (same or adjacent range), so near-duplicates — whose content sketches
+    sort adjacent — survive regardless of block size, while pair fan-out
+    stays O(s * cap). The ~170 bytes of sort tokens are attached by a join
+    ONLY to the hot-block rows the rank windows order, instead of riding
+    every key row through the count window (guide §8 — heavy payload moves
+    late and once; measured: hot rows are ~0.5% of key rows on the bench
+    corpus).
 
-    - With a ``sort_key`` column (content sketch emitted by every key
-      family): members of a hot block are ORDERED by (sort_key, doc_id) and
-      cut into consecutive rank ranges of ``max_block_size``; every member
-      also joins its NEXT range. Any pair within ``max_block_size`` sort
-      positions is therefore always generated (same or adjacent range), so
-      near-duplicates — whose content sketches sort adjacent — survive
-      regardless of block size, while pair fan-out stays O(s * cap).
-      The former hash-salting generated pairs only WITHIN a random salt
-      group: two true duplicates in a 5000-member template block had a
-      ~(1 - 1/n_salts) miss chance per key, and because the salt ignored
-      the key, misses were perfectly correlated across a pair's keys.
-    - With NARROW keys plus a ``tokens`` table (one (doc_id, sort_key,
-      sort_key2) row per DOC from :func:`sort_token_table`): identical
-      semantics to the wide form, but the ~170 bytes of sort tokens are
-      attached by a join ONLY to the hot-block rows the rank windows
-      order, instead of riding every key row through the checkpoint,
-      count and join (guide §8 — heavy payload moves late and once;
-      measured: hot rows are ~0.5% of key rows on the bench corpus).
-    - Without ``sort_key`` and without ``tokens`` (caller-supplied raw key
-      tables): hash salting, but keyed on (doc_id, block_key) so misses
-      are INDEPENDENT across a pair's keys, and each member also joins the
-      next salt — per-key meet probability 3/n_salts instead of
-      1/n_salts, compounded across keys.
-
-    A block so large that even one rank range per task is too big (10^8-row
-    boilerplate keys at true web scale) would serialize the window sort into
-    one task. ``cfg.hot_key_ceiling`` handles that IN-PATH: keys whose
-    document frequency exceeds the ceiling are dropped entirely before the
-    salting window — they carry no discriminative signal (an empty-text
-    band, a sitewide boilerplate key), so the pairs they would generate are
-    overwhelmingly garbage, and every doc still carries many independent
-    keys (see hygiene.assign_new_documents's cross-table analog).
+    Keys shared by more than ``cfg.hot_key_ceiling`` docs are dropped
+    before the window, which would otherwise sort such a key's members in
+    one task (see BlockingConfig.hot_key_ceiling).
     """
     cfg = cfg or BlockingConfig()
     cap = cfg.max_block_size
-    sort_cols = [c for c in ("sort_key", "sort_key2") if c in blocks.columns]
-    if not sort_cols and tokens is not None:
-        # NARROW-key path (r6b): block sizes as ONE count window over the
-        # (doc_id, block_key) table — a single exchange of ~30-byte rows —
-        # instead of checkpoint -> map-side count agg -> join -> second
-        # checkpoint. The r6 measurement that rejected the count-window
-        # form ("~30% slower") was taken on the WIDE key table, where the
-        # window shuffled every row's ~170 bytes of sort tokens; with
-        # narrow keys the window moves fewer bytes than the two
-        # materializations it replaces, and the size filters (>= 2,
-        # df ceiling) apply identically after the count. One barrier on
-        # the window output serves all three consumers (cold + both rank
-        # orders), so the python key build runs exactly once.
-        counted = blocks.withColumn(
-            "block_n", F.count("*").over(Window.partitionBy("block_key"))
-        ).where(F.col("block_n") >= 2)
-        if cfg.hot_key_ceiling is not None:
-            counted = counted.where(F.col("block_n") <= cfg.hot_key_ceiling)
-        joined = counted.withColumn(
-            "n_salts", F.ceil(F.col("block_n") / F.lit(cap)).cast("int")
-        ).localCheckpoint(eager=False)
-    else:
-        # WIDE-key path (host/phonetic families, caller-supplied tables):
-        # keep the groupBy+join form — a count window here would shuffle
-        # every row's sort tokens (measured ~30% slower, r6).
-        # Materialization barrier: `blocks` (whose plan contains the
-        # MinHash signatures) is referenced by both the size aggregation
-        # and the join — without it the signature computation runs twice.
-        blocks = blocks.localCheckpoint(eager=False)
-        counts = blocks.groupBy("block_key").agg(F.count("*").alias("block_n"))
-        useful = counts.where(F.col("block_n") >= 2)
-        if cfg.hot_key_ceiling is not None:
-            useful = useful.where(F.col("block_n") <= cfg.hot_key_ceiling)
-        # Second barrier: `joined` feeds the cold branch AND each sort
-        # order's ranged() window — without it the blocks-x-counts join
-        # (shuffling the wide sort-key columns) re-executes once per
-        # consumer, three times on the default config (guide §2.4).
-        joined = blocks.join(useful, "block_key").withColumn(
-            "n_salts", F.ceil(F.col("block_n") / F.lit(cap)).cast("int")
-        ).localCheckpoint(eager=False)
+    # Block sizes as ONE count window over the ~30-byte key rows. The size
+    # filters (>= 2, df ceiling) apply after the count; one barrier on the
+    # window output serves all three consumers (cold + both rank orders),
+    # so the python key build runs exactly once.
+    counted = blocks.withColumn(
+        "block_n", F.count("*").over(Window.partitionBy("block_key"))
+    ).where(F.col("block_n") >= 2)
+    if cfg.hot_key_ceiling is not None:
+        counted = counted.where(F.col("block_n") <= cfg.hot_key_ceiling)
+    joined = counted.withColumn(
+        "n_salts", F.ceil(F.col("block_n") / F.lit(cap)).cast("int")
+    ).localCheckpoint(eager=False)
     cold = joined.where(F.col("n_salts") <= 1).select("doc_id", "block_key")
-    hot = joined.where(F.col("n_salts") >= 2)
+    # barrier so the token join runs once, not once per sort order
+    hot = (
+        joined.where(F.col("n_salts") >= 2)
+        .join(tokens, "doc_id")
+        .localCheckpoint(eager=False)
+    )
 
-    def ranged(frame: DataFrame, sort_col: str, tag: str) -> DataFrame:
+    def ranged(sort_col: str, tag: str) -> DataFrame:
         rn = F.row_number().over(
             Window.partitionBy("block_key").orderBy(sort_col, "doc_id")
         )
         grp = F.floor((rn - F.lit(1)) / F.lit(cap)).cast("int")
-        with_g = frame.withColumn("_g", grp)
         neighbor = F.least(F.col("_g") + 1, F.col("n_salts") - 1)
         return (
-            with_g.select(
+            hot.withColumn("_g", grp)
+            .select(
                 "doc_id",
                 "block_key",
                 F.explode(
@@ -473,54 +313,22 @@ def salt_blocks(
             )
         )
 
-    if not sort_cols and tokens is not None:
-        # narrow-key mode: attach the per-doc tokens to hot rows only;
-        # barrier so the join runs once, not once per sort order
-        hot = hot.join(tokens, "doc_id").localCheckpoint(eager=False)
-        sort_cols = ["sort_key", "sort_key2"]
-    if sort_cols:
-        parts = [
-            ranged(hot, c, tag) for c, tag in zip(sort_cols, ("F", "R"))
-        ]
-        salted_hot = parts[0]
-        for p in parts[1:]:
-            salted_hot = salted_hot.unionByName(p)
-    else:
-        with_g = hot.withColumn(
-            "_g",
-            F.pmod(F.xxhash64("doc_id", "block_key"), F.col("n_salts")).cast(
-                "int"
-            ),
-        )
-        neighbor = F.pmod(F.col("_g") + 1, F.col("n_salts"))
-        salted_hot = (
-            with_g.select(
-                "doc_id",
-                "block_key",
-                F.explode(
-                    F.array_distinct(F.array(F.col("_g"), neighbor))
-                ).alias("_salt"),
-            )
-            .select(
-                "doc_id",
-                F.concat_ws(
-                    "#", "block_key", F.col("_salt").cast("string")
-                ).alias("block_key"),
-            )
-        )
-    return cold.unionByName(salted_hot)
+    return cold.unionByName(ranged("sort_key", "F")).unionByName(
+        ranged("sort_key2", "R")
+    )
 
 
 def candidate_pairs(
     blocks: DataFrame,
     cfg: BlockingConfig | None = None,
-    tokens: DataFrame | None = None,
+    *,
+    tokens: DataFrame,
 ) -> DataFrame:
     """Self-join blocks on block_key, canonical order src < dst, dedup pairs
     that co-occur in several blocks. The shuffle key is block_key (bounded
     cardinality per key after salting); the dedup groupBy shuffles on the
-    pair itself. ``tokens`` is the narrow-key companion table (see
-    salt_blocks / blocking_plan)."""
+    pair itself. ``blocks`` and ``tokens`` are the two tables
+    :func:`blocking_plan` returns (see salt_blocks)."""
     # No barrier here (r6b): both join sides re-derive the salted rows from
     # salt_blocks' internal `joined` checkpoint — a cheap JVM filter/window/
     # union each — so materializing the full salted table bought nothing
@@ -541,15 +349,21 @@ def candidate_pairs(
     )
 
 
-def blocking_keys(
+def blocking_plan(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "norm_text",
     url_col: str | None = None,
     cfg: BlockingConfig | None = None,
-) -> DataFrame:
-    """Union of all key families — MinHash-LSH bands, sorted-neighborhood
-    prefix, and (when urls exist) normalized host."""
+) -> tuple[DataFrame, DataFrame]:
+    """(keys, tokens) for candidate generation. ``keys`` is the union of
+    every configured key family — MinHash-LSH bands and sorted-neighborhood
+    prefix/suffix keys always, normalized host keys when ``url_col`` is
+    given, soundex keys when ``cfg.use_phonetic_keys`` — as narrow
+    (doc_id, block_key) rows. ``tokens`` is the per-doc
+    :func:`sort_token_table` over ``text_col`` that orders hot blocks of
+    every family, so the salting count window never moves the ~170-byte
+    tokens per key row (guide §8; see salt_blocks)."""
     cfg = cfg or BlockingConfig()
     keys = lsh_block_keys(docs, id_col, text_col, cfg).unionByName(
         sorted_neighborhood_keys(docs, id_col, text_col, cfg)
@@ -560,31 +374,4 @@ def blocking_keys(
         keys = keys.unionByName(
             phonetic_block_keys(docs, id_col, text_col, cfg.phonetic_key_words)
         )
-    return keys
-
-
-def blocking_plan(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "norm_text",
-    url_col: str | None = None,
-    cfg: BlockingConfig | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """(keys, tokens) for candidate generation — the narrow-key form of
-    :func:`blocking_keys`: key rows carry only (doc_id, block_key) and the
-    salting sort tokens live in ONE per-doc table, so the salting
-    checkpoint/count/join never move the ~170-byte tokens per key row
-    (guide §8; see salt_blocks). Same candidate pairs as the wide form
-    (pinned by tests/test_salting.py::test_narrow_equals_wide).
-
-    Key families with a different token source (host keys sort by url,
-    phonetic keys are an entity-path option) fall back to the wide form
-    with ``tokens=None`` — bit-identical behavior, just without the
-    narrow-path savings."""
-    cfg = cfg or BlockingConfig()
-    if url_col is not None or cfg.use_phonetic_keys:
-        return blocking_keys(docs, id_col, text_col, url_col, cfg), None
-    keys = lsh_block_keys(docs, id_col, text_col, cfg, with_tokens=False).unionByName(
-        sorted_neighborhood_keys(docs, id_col, text_col, cfg, with_tokens=False)
-    )
     return keys, sort_token_table(docs, id_col, text_col)

@@ -26,6 +26,28 @@ from .connected_components import connected_components
 from .shingles import doc_vector_table, pair_cosine_vecs
 
 
+def _lsh_pairs(
+    docs: DataFrame, id_col: str, text_col: str, cfg: BlockingConfig | None
+) -> tuple[DataFrame, DataFrame]:
+    """(norm, pairs): the lower-cased (doc_id, nt) table and its
+    MinHash-LSH candidate pairs."""
+    from ..util import spread_input
+
+    # one-split inputs would run the python key/vector builds on one core
+    norm = spread_input(
+        docs.select(
+            F.col(id_col).alias("doc_id"),
+            F.lower(F.coalesce(F.col(text_col), F.lit(""))).alias("nt"),
+        )
+    )
+    pairs = candidate_pairs(
+        lsh_block_keys(norm, "doc_id", "nt", cfg),
+        cfg,
+        tokens=sort_token_table(norm, "doc_id", "nt"),
+    )
+    return norm, pairs
+
+
 def exact_dedup_groups(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -58,21 +80,7 @@ def minhash_dedup(
     Returns (doc_id, dup_group, group_size) for every doc in a near-dup
     group of size >= 2, dup_group = min doc id of the group.
     """
-    cfg = cfg or BlockingConfig()
-    from ..util import spread_input
-
-    # one-split inputs would run the python key/vector builds on one core
-    norm = spread_input(
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))).alias("nt"),
-        )
-    )
-    pairs = candidate_pairs(
-        lsh_block_keys(norm, "doc_id", "nt", cfg, with_tokens=False),
-        cfg,
-        tokens=sort_token_table(norm, "doc_id", "nt"),
-    )
+    norm, pairs = _lsh_pairs(docs, id_col, text_col, cfg)
     # single-width shingles + pruned vectors: same separation at a third of
     # the exploded-token volume (see ScoringConfig.tfidf_ngram_lo). Vectors
     # come from the broadcast-IDF map-side build (doc_vector_table): same
@@ -258,20 +266,7 @@ def ngram_jaccard_pairs(
     """Exact n-gram Jaccard for candidate pairs (blocked, never all-pairs):
     (src, dst, jaccard). Set intersection/union are JVM array ops over the
     distinct-shingle arrays attached per side."""
-    cfg = cfg or BlockingConfig()
-    from ..util import spread_input
-
-    norm = spread_input(
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))).alias("nt"),
-        )
-    )
-    pairs = candidate_pairs(
-        lsh_block_keys(norm, "doc_id", "nt", cfg, with_tokens=False),
-        cfg,
-        tokens=sort_token_table(norm, "doc_id", "nt"),
-    )
+    norm, pairs = _lsh_pairs(docs, id_col, text_col, cfg)
     grams = norm.select(
         "doc_id",
         F.expr(

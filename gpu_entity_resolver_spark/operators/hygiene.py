@@ -544,7 +544,7 @@ def consolidate_similar_addresses(
     replaces every member's key. Runs over DISTINCT keys only, so the heavy
     work is proportional to unique addresses, not rows."""
     from ..config import BlockingConfig
-    from .blocking import blocking_keys, candidate_pairs
+    from .blocking import blocking_plan, candidate_pairs
     from .connected_components import connected_components
     from .scoring import make_jw_udf
 
@@ -559,9 +559,8 @@ def consolidate_similar_addresses(
         .withColumn("_aid", F.xxhash64(addr_col))
         .localCheckpoint(eager=False)
     )
-    pairs = candidate_pairs(
-        blocking_keys(uniq, "_aid", addr_col, cfg=blocking_cfg), blocking_cfg
-    )
+    keys, tokens = blocking_plan(uniq, "_aid", addr_col, cfg=blocking_cfg)
+    pairs = candidate_pairs(keys, blocking_cfg, tokens=tokens)
     jw = make_jw_udf(jw_chars)
     texts = uniq.select(F.col("_aid"), F.col(addr_col).alias("_t"))
     edges = (

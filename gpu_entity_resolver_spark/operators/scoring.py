@@ -7,8 +7,9 @@ reference's stream energy proportions become score weights — SURVEY.md V6):
   re-expressing reference utils.py:211-232;
 - Jaro-Winkler — Arrow-batched pandas UDF over the numpy kernel
   (functions/simfns.py), no per-row Python;
-- Levenshtein ratio — Spark's built-in JVM ``levenshtein`` with threshold
-  early-exit, stays inside whole-stage codegen.
+- Levenshtein ratio — Arrow-batched pandas UDF over the numpy Myers
+  bit-parallel kernel (functions/simfns.levenshtein_batch), distances
+  equal to Spark's builtin ``levenshtein``.
 """
 
 from __future__ import annotations
@@ -32,16 +33,14 @@ def make_jw_udf(max_chars: int = 64):
 
 
 def make_lev_udf(max_chars: int):
-    """Arrow-batched exact Levenshtein (functions/simfns.levenshtein_batch).
+    """Arrow-batched exact Levenshtein (functions/simfns.levenshtein_batch:
+    Myers' bit-parallel kernel vectorized across pairs; see its docstring
+    for the measured per-pair cost).
 
-    Replaces Spark's builtin ``levenshtein()`` in the scorer: the builtin
-    decodes UTF8 code points cell-by-cell through the full O(L²) DP per
-    pair (~530 core-µs at L=144 — measured as the single largest term of
-    the scoring stage), while the batch kernel runs the same DP vectorized
-    across pairs (~110 core-µs). Distances are bit-equal to the builtin
-    (tests/test_levenshtein.py), so every downstream score value is
-    unchanged. ``max_chars`` must bound the longest input for that parity —
-    the scorer's sketches are <= 3*sketch_chars by construction."""
+    Distances are bit-equal to Spark's builtin ``levenshtein()``
+    (tests/test_levenshtein.py). ``max_chars`` must bound the longest input
+    for that parity — the scorer's sketches are <= 3*sketch_chars by
+    construction."""
 
     @pandas_udf("int")
     def lev(a: pd.Series, b: pd.Series) -> pd.Series:

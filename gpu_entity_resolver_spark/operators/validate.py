@@ -132,7 +132,7 @@ def validate_reassign(
     (the weighted match score for reassigned/rescued rows, 1.0 for kept).
     """
     from ..config import BlockingConfig
-    from .blocking import blocking_keys
+    from .blocking import blocking_plan
 
     blocking_cfg = blocking_cfg or BlockingConfig()
     if profiles is None:
@@ -167,12 +167,12 @@ def validate_reassign(
 
     # --- pass 2: blocked candidate search for evicted + singleton rows ----
     moving = cur.where(~F.col("_valid")).select(*member_cols, "_is_singleton")
-    m_keys = blocking_keys(
+    m_keys = blocking_plan(
         moving, id_col, name_col, cfg=blocking_cfg
-    ).withColumnRenamed("doc_id", "_mid")
-    p_keys = blocking_keys(
+    )[0].withColumnRenamed("doc_id", "_mid")
+    p_keys = blocking_plan(
         profiles, "cluster", "profile_name", cfg=blocking_cfg
-    ).withColumnRenamed("doc_id", "_pid")
+    )[0].withColumnRenamed("doc_id", "_pid")
     cand = (
         m_keys.join(p_keys, "block_key")
         .select(F.col("_mid"), F.col("_pid"))

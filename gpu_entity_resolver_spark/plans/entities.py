@@ -33,7 +33,7 @@ from ..functions.normalize import (
     confidence_bin,
     normalize_entity_text,
 )
-from ..operators.blocking import blocking_keys, candidate_pairs
+from ..operators.blocking import blocking_plan, candidate_pairs
 from ..operators.canonical import canonical_map
 from ..operators.connected_components import connected_components
 from ..operators.scoring import make_jw_udf, score_pairs
@@ -409,9 +409,8 @@ class EntityResolver:
         # short entity names: the phonetic key family earns its keep here
         # (V2; useless on long web documents)
         bcfg = dataclasses.replace(cfg.blocking, use_phonetic_keys=True)
-        pairs = candidate_pairs(
-            blocking_keys(ent, "doc_id", "norm_text", cfg=bcfg), bcfg
-        )
+        keys, tokens = blocking_plan(ent, "doc_id", "norm_text", cfg=bcfg)
+        pairs = candidate_pairs(keys, bcfg, tokens=tokens)
         scored = score_pairs(pairs, ent, "doc_id", "norm_text", scfg)
         # C4 state-compatibility gate (reference resolver.py:2653-2678):
         # different non-null states never merge (unless configured neighbors).

@@ -3,10 +3,11 @@
 documents(url, warc_ts, html, text, lang)
   1 EXTRACT+NORMALIZE  byte-identical html→text UDF; P1 normalization;
                        doc_id = xxhash64(url)
-  2 BLOCK              MinHash-LSH bands ∪ sorted-neighborhood ∪ host keys,
-                       hot blocks salted
-  3 SCORE              TF-IDF-cosine (JVM join) + Jaro-Winkler (Arrow UDF)
-                       + Levenshtein (JVM builtin); weighted; threshold τ
+  2 BLOCK              MinHash-LSH bands ∪ sorted-neighborhood keys
+                       (blocking_plan), hot blocks salted
+  3 SCORE              TF-IDF-cosine (JVM join) + Levenshtein and
+                       Jaro-Winkler (Arrow UDFs over numpy kernels);
+                       weighted; threshold τ
   4 CLUSTER            large-star/small-star connected components
   5 FINALIZE           canonical election (V11), per-cluster stats,
                        confidence (C10 shape), review flags (C11)
@@ -148,8 +149,8 @@ def resolve_documents(
     # Host keys are deliberately NOT in the default key set: MinHash bands +
     # sorted-neighborhood already block every textual duplicate (measured
     # 100% labeled-pair recall), while Zipf-hot hosts contributed ~80% of
-    # candidate pairs with no additional recall. Use
-    # operators.blocking.host_keys for URL-duplicate-specific workloads.
+    # candidate pairs with no additional recall. Pass blocking_plan a
+    # url_col for URL-duplicate-specific workloads.
     def build_pairs() -> DataFrame:
         keys, tokens = blocking_plan(
             prepared, "doc_id", "norm_text", cfg=cfg.blocking

@@ -1,9 +1,10 @@
 """SparkSession factory.
 
 One place to set the scale-oriented defaults: AQE (runtime re-planning +
-skew-join handling), Arrow for every pandas-UDF boundary, and a shuffle
-partition count sized by environment. On a real cluster these come from
-spark-submit conf; locally we emulate with ``local[N]``.
+skew-join handling), Arrow for every pandas-UDF boundary, and cores,
+driver memory and shuffle partitions sized by argument, environment or,
+failing both, the host. On a real cluster these come from spark-submit
+conf; locally we emulate with ``local[N]``.
 """
 
 from __future__ import annotations
@@ -18,7 +19,13 @@ def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    # In local mode the driver JVM is the whole executor: half of physical
+    # RAM (capped at 48g) leaves the other half to the python workers.
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or (
+        f"{min(48 << 10, ram_mb // 2)}m"
+    )
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
     )
@@ -31,7 +38,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -69,7 +69,7 @@ def _separate_entities(base, cos_threshold: float = 0.5):
         normalize_entity_text(F.col("text")).alias("nt"),
     )
     pairs = candidate_pairs(
-        lsh_block_keys(norm, "doc_id", "nt", with_tokens=False),
+        lsh_block_keys(norm, "doc_id", "nt"),
         tokens=sort_token_table(norm, "doc_id", "nt"),
     )
     cos = pair_cosine(pairs, tfidf_weights(norm, "doc_id", "nt"))

@@ -1,16 +1,15 @@
 """The numpy LSH key builder must emit EXACTLY the rows of the all-JVM
-formulation — same doc_ids, same band-key strings, same sort tokens — on a
-corpus that exercises short docs, empty text, subsample fallback and
-repeated texts. Any divergence would silently change candidate pairs for
+formulation (tests/baselines/lsh_jvm.py) — same doc_ids, same band-key
+strings — on a corpus that exercises short docs, empty text, subsample
+fallback and repeated texts. Any divergence would silently change candidate pairs for
 every LSH consumer (resolve blocking, minhash_dedup, ngram_jaccard)."""
 
 import random
 
+from baselines.lsh_jvm import lsh_block_keys_jvm
+
 from gpu_entity_resolver_spark.config import BlockingConfig
-from gpu_entity_resolver_spark.operators.blocking import (
-    lsh_block_keys,
-    lsh_block_keys_jvm,
-)
+from gpu_entity_resolver_spark.operators.blocking import lsh_block_keys
 
 
 def _corpus(spark):
@@ -37,9 +36,8 @@ def _corpus(spark):
 
 
 def _rows(df):
-    return sorted(
-        (r.doc_id, r.block_key, r.sort_key, r.sort_key2) for r in df.collect()
-    )
+    assert df.columns == ["doc_id", "block_key"]
+    return sorted((r.doc_id, r.block_key) for r in df.collect())
 
 
 def test_lsh_numpy_matches_jvm(spark):

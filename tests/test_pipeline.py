@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from gpu_entity_resolver_spark.config import ResolverConfig
 from gpu_entity_resolver_spark.functions.extraction import extract_text_series
 from gpu_entity_resolver_spark.operators.blocking import (
-    blocking_keys,
+    blocking_plan,
     candidate_pairs,
 )
 from gpu_entity_resolver_spark.plans.resolve import (
@@ -72,10 +72,8 @@ def test_blocking_recall(spark, corpus, truth):
         eager=True
     )
     # same key families the pipeline uses (MinHash bands + SN prefix)
-    pairs = candidate_pairs(
-        blocking_keys(prep, "doc_id", "norm_text", cfg=cfg.blocking),
-        cfg.blocking,
-    )
+    keys, tokens = blocking_plan(prep, "doc_id", "norm_text", cfg=cfg.blocking)
+    pairs = candidate_pairs(keys, cfg.blocking, tokens=tokens)
     t = truth
     true_pairs = (
         t.alias("a")

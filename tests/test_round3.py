@@ -109,11 +109,21 @@ def test_config_round_trip_exact():
 
 
 def test_config_round_trip_ignores_unknown_keys():
-    d = config_to_dict(ResolverConfig())
-    d["scoring"]["added_in_future_version"] = 1
-    d["brand_new_section"] = {"x": 1}
-    cfg = config_from_dict(d)
-    assert cfg.scoring.edge_threshold == ResolverConfig().scoring.edge_threshold
+    newer = config_to_dict(ResolverConfig())
+    newer["scoring"]["added_in_future_version"] = 1
+    newer["brand_new_section"] = {"x": 1}
+    # fields that older saved models still carry after their removal
+    older = config_to_dict(ResolverConfig())
+    older["blocking"]["salt_buckets"] = 8
+    older["clustering"]["min_cluster_size"] = 1
+    older["runtime"].update(
+        shuffle_partitions=32,
+        arrow_batch_size=10_000,
+        broadcast_threshold_rows=1_000_000,
+    )
+    for d in (newer, older):
+        cfg = config_from_dict(d)
+        assert cfg == ResolverConfig()
 
 
 def test_save_load_restores_thresholds(spark, tmp_path):

@@ -19,9 +19,10 @@ from pyspark.sql import functions as F
 
 from gpu_entity_resolver_spark.config import BlockingConfig
 from gpu_entity_resolver_spark.operators.blocking import (
-    _sort_tokens,
+    blocking_plan,
     candidate_pairs,
     salt_blocks,
+    sort_token_table,
 )
 
 TEMPLATE = "corporate homepage boilerplate navigation header " * 2  # ~98 chars
@@ -52,20 +53,18 @@ def _corpus():
 
 
 def _keys(docs):
-    fwd, rev = _sort_tokens("text")
-    return docs.select(
-        "doc_id",
-        F.lit("hot").alias("block_key"),
-        fwd.alias("sort_key"),
-        rev.alias("sort_key2"),
-    )
+    return docs.select("doc_id", F.lit("hot").alias("block_key"))
+
+
+def _tokens(docs):
+    return sort_token_table(docs, "doc_id", "text")
 
 
 def test_hot_block_recall_and_cost(spark):
     rows, true_pairs = _corpus()
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     cfg = BlockingConfig(max_block_size=128)
-    pairs = candidate_pairs(_keys(docs), cfg)
+    pairs = candidate_pairs(_keys(docs), cfg, tokens=_tokens(docs))
     got = {(r["src"], r["dst"]) for r in pairs.collect()}
     n_found = sum(1 for p in true_pairs if p in got)
     recall = n_found / len(true_pairs)
@@ -74,21 +73,6 @@ def test_hot_block_recall_and_cost(spark):
     # cost stays LINEAR in block size: 2 orderings x (own + neighbor range)
     n_pairs = len(got)
     assert n_pairs <= 3000 * cfg.max_block_size * 8
-
-
-def test_hash_salt_fallback_without_sort_key(spark):
-    # key tables without sort columns fall back to key-dependent hash
-    # salting + neighbor-salt join: bounded groups, pairs produced
-    rows, _ = _corpus()
-    docs = spark.createDataFrame(rows[:600], "doc_id long, text string")
-    keys = docs.select("doc_id", F.lit("hot").alias("block_key"))
-    cfg = BlockingConfig(max_block_size=64)
-    salted = salt_blocks(keys, cfg)
-    sizes = salted.groupBy("block_key").count().collect()
-    # neighbor emission doubles membership: each group holds ~2 salts
-    assert max(r["count"] for r in sizes) <= 4 * cfg.max_block_size
-    pairs = candidate_pairs(keys, cfg)
-    assert pairs.count() > 0
 
 
 def test_hot_key_ceiling_drops_degenerate_key(spark):
@@ -101,13 +85,7 @@ def test_hot_key_ceiling_drops_degenerate_key(spark):
         [(i, f"document number {i} with some distinct words") for i in range(n)],
         "doc_id long, text string",
     )
-    fwd, rev = _sort_tokens("text")
-    degenerate = docs.select(
-        "doc_id",
-        F.lit("mega").alias("block_key"),
-        fwd.alias("sort_key"),
-        rev.alias("sort_key2"),
-    )
+    degenerate = docs.select("doc_id", F.lit("mega").alias("block_key"))
     # a legitimate hot-but-useful key under the ceiling, and cold keys
     ok_hot = degenerate.where(F.col("doc_id") < 600).withColumn(
         "block_key", F.lit("hot")
@@ -117,7 +95,7 @@ def test_hot_key_ceiling_drops_degenerate_key(spark):
     )
     keys = degenerate.unionByName(ok_hot).unionByName(cold)
     cfg = BlockingConfig(max_block_size=128, hot_key_ceiling=1024)
-    salted = salt_blocks(keys, cfg)
+    salted = salt_blocks(keys, cfg, tokens=_tokens(docs))
     out_keys = [r["block_key"] for r in salted.select("block_key").distinct().collect()]
     assert not any(k == "mega" or k.startswith("mega#") for k in out_keys), (
         "degenerate key above the ceiling must be dropped"
@@ -130,31 +108,12 @@ def test_hot_key_ceiling_drops_degenerate_key(spark):
     sizes = salted.groupBy("block_key").count().collect()
     assert max(r["count"] for r in sizes) <= 2 * cfg.max_block_size
     # ceiling=None restores the old behavior (mega gets salted, not dropped)
-    unlimited = salt_blocks(keys, BlockingConfig(max_block_size=128, hot_key_ceiling=None))
+    unlimited = salt_blocks(
+        keys,
+        BlockingConfig(max_block_size=128, hot_key_ceiling=None),
+        tokens=_tokens(docs),
+    )
     assert unlimited.where(F.col("block_key").startswith("mega#")).count() > 0
-
-
-def test_narrow_equals_wide(spark):
-    """Narrow keys + per-doc token table (r6) must produce EXACTLY the
-    candidate pairs of the wide key rows — the hot-block windows read the
-    same token values either way, just attached late."""
-    from gpu_entity_resolver_spark.operators.blocking import (
-        blocking_keys,
-        blocking_plan,
-    )
-
-    rows, _ = _corpus()
-    docs = spark.createDataFrame(rows, "doc_id long, norm_text string")
-    cfg = BlockingConfig(max_block_size=64)
-    wide = candidate_pairs(
-        blocking_keys(docs, "doc_id", "norm_text", cfg=cfg), cfg
-    )
-    keys, tokens = blocking_plan(docs, "doc_id", "norm_text", cfg=cfg)
-    assert tokens is not None
-    narrow = candidate_pairs(keys, cfg, tokens=tokens)
-    a = {(r["src"], r["dst"]) for r in wide.collect()}
-    b = {(r["src"], r["dst"]) for r in narrow.collect()}
-    assert a == b and len(a) > 0
 
 
 def test_cold_blocks_not_salted(spark):
@@ -164,6 +123,52 @@ def test_cold_blocks_not_salted(spark):
     keys = _keys(docs).withColumn(
         "block_key", (F.col("doc_id") % 3).cast("string")
     )
-    salted = salt_blocks(keys, BlockingConfig(max_block_size=128))
+    salted = salt_blocks(
+        keys, BlockingConfig(max_block_size=128), tokens=_tokens(docs)
+    )
     # block keys unchanged (no '#' suffix) for blocks under the cap
     assert all("#" not in r["block_key"] for r in salted.collect())
+
+
+def test_host_keys_pair_and_salt(spark):
+    """``blocking_plan(url_col=...)`` adds the host key family: two docs on
+    one host pair even when their texts share no other key, and a planted
+    near-duplicate inside a host block above ``max_block_size`` is still
+    generated by the host keys alone, ordered by the docs' text tokens."""
+    rng = random.Random(7)
+    n_big = 600
+    rows = [
+        (
+            i,
+            f"https://big.example.com/p/{i}",
+            " ".join(rng.choice(VOCAB) for _ in range(50)),
+        )
+        for i in range(n_big)
+    ]
+    words = rows[10][2].split()
+    words[25] = "zulu"
+    rows.append((n_big, "https://big.example.com/copy", " ".join(words)))
+    rows += [
+        (n_big + 1, "http://www.small.example.org/a", "acme widgets and sprockets"),
+        (n_big + 2, "https://small.example.org:8080/b?q=1", "zebra logistics limited"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, url string, norm_text string")
+    cfg = BlockingConfig(max_block_size=16)
+    keys, tokens = blocking_plan(docs, url_col="url", cfg=cfg)
+    keys = keys.localCheckpoint(eager=True)
+
+    def pairs(k):
+        got = candidate_pairs(k, cfg, tokens=tokens).collect()
+        return {(r["src"], r["dst"]) for r in got}
+
+    a, b = n_big + 1, n_big + 2
+    shared = keys.where(F.col("doc_id") == a).join(
+        keys.where(F.col("doc_id") == b), "block_key"
+    )
+    assert [r["block_key"] for r in shared.collect()] == ["host:small.example.org"]
+    assert (a, b) in pairs(keys)
+
+    got = pairs(keys.where(F.col("block_key") == "host:big.example.com"))
+    assert (10, n_big) in got
+    # salted, not all-pairs: 2 orders x (own + neighbor range)
+    assert len(got) <= (n_big + 1) * cfg.max_block_size * 4 < n_big * (n_big + 1) // 2

@@ -126,29 +126,18 @@ class ScoringConfig:
     # (2.82M -> 0.74M). The JW stage is memory-bandwidth-bound, so survivor
     # count is the scaling lever for the whole scoring stage.
     cosine_prefilter: float = 0.35
-    # Decision-band Jaro-Winkler: JW carries only `jaro_winkler_weight /
-    # total` of the score, so a pair whose tfidf+lev partial score cannot
-    # reach `lo` even with a perfect JW doesn't need the kernel — its true
-    # score is provably < lo, below every engine threshold AND below every
-    # mean/median/rank consumer's admission bar (attach tau, merge
-    # centroid prefilter, ensemble thresholds). ONLY that low side is
-    # skipped; pairs at or above it — including confident ones — get an
-    # exact JW, because attach_singletons' neighbor means,
-    # merge_similar_clusters' interpolated median, mutual-rank orderings
-    # and avg_pair_score/confidence all consume score VALUES, not just
-    # threshold outcomes. Skipped pairs report score = partial (`jw`
-    # null): underreported by at most jw_share, never overreported, and
-    # always strictly below lo either way. Threshold DECISIONS at >= lo
-    # are exactly invariant; MEANS over pair sets that include sub-band
-    # pairs are not — which is why the resolve pipeline filters jw-null
-    # rows out of attach_singletons' neighbor set (plans/resolve.py)
-    # instead of letting approximate scores into its mean/ratio tests. `hi` documents the top of the
-    # engine's threshold range for band-aware consumers but no longer
-    # gates the kernel. The default lo matches the lowest engine
-    # threshold (edge 0.55); lower it if you move a threshold below.
-    # None = always compute JW (exact scores everywhere — the entity path
-    # uses this, where JW carries 35% weight).
-    jw_decision_band: tuple[float, float] | None = (0.55, 0.90)
+    # Decision-band Jaro-Winkler floor: JW carries only
+    # `jaro_winkler_weight / total` of the score, so a pair whose
+    # tfidf+lev partial score cannot reach the floor even with a perfect
+    # JW has a true score provably below it. score_pairs drops such pairs
+    # without running the kernel and returns only exact rows, so every
+    # consumer that thresholds at or above the floor (edge, attach tau,
+    # merge centroid prefilter, assign winner) sees the same rows as with
+    # no floor. The default matches the lowest engine threshold (edge
+    # 0.55); lower it if you move a threshold below (resolve lowers it to
+    # the ensemble recall threshold itself). 0.0 = every cosine survivor
+    # gets JW — the entity path uses this, where JW carries 35% weight.
+    jw_decision_band: float = 0.55
     # JW/Levenshtein run over a bounded "content sketch" (first+middle+last
     # sketch_chars of the normalized text) rather than a prefix truncation:
     # web corpora contain documents sharing long identical prefixes, which a
@@ -156,6 +145,16 @@ class ScoringConfig:
     # (measured on the sf0.001 fixture: 13 cross-entity prefix collisions at
     # 256 chars). The sketch keeps per-pair cost O(sketch²) at any doc size.
     sketch_chars: int = 48
+
+    def __post_init__(self):
+        # legacy band forms (saved models, older callers): [lo, hi] keeps
+        # its floor lo; None meant "always compute JW", i.e. floor 0.0 —
+        # left as None it would compare as null and drop every pair
+        band = self.jw_decision_band
+        if band is None:
+            self.jw_decision_band = 0.0
+        elif isinstance(band, (list, tuple)):
+            self.jw_decision_band = band[0]
 
 
 @dataclass
@@ -243,7 +242,6 @@ class ResolverConfig:
     clustering: ClusteringConfig = field(default_factory=ClusteringConfig)
     confidence: ConfidenceConfig = field(default_factory=ConfidenceConfig)
     runtime: RuntimeConfig = field(default_factory=RuntimeConfig)
-    random_seed: int = 42
 
 
 # --- JSON round-trip (S3/S4) ------------------------------------------------
@@ -268,9 +266,6 @@ def config_from_dict(d: dict) -> ResolverConfig:
         names = {f.name for f in _dc.fields(cls)}
         return cls(**{k: v for k, v in (dd or {}).items() if k in names})
 
-    scoring = sub(ScoringConfig, d.get("scoring"))
-    if isinstance(scoring.jw_decision_band, list):
-        scoring.jw_decision_band = tuple(scoring.jw_decision_band)
     clustering = sub(ClusteringConfig, d.get("clustering"))
     clustering.allow_neighboring_states = tuple(
         tuple(p) for p in (clustering.allow_neighboring_states or ())
@@ -279,9 +274,8 @@ def config_from_dict(d: dict) -> ResolverConfig:
         replacements=dict(d.get("replacements", DEFAULT_REPLACEMENTS)),
         suffixes_to_remove=tuple(d.get("suffixes_to_remove", DEFAULT_SUFFIXES)),
         blocking=sub(BlockingConfig, d.get("blocking")),
-        scoring=scoring,
+        scoring=sub(ScoringConfig, d.get("scoring")),
         clustering=clustering,
         confidence=sub(ConfidenceConfig, d.get("confidence")),
         runtime=sub(RuntimeConfig, d.get("runtime")),
-        random_seed=d.get("random_seed", 42),
     )

@@ -7,14 +7,14 @@ no per-row Python. No similarity library ships in this environment, so both
 kernels are implemented batch-vectorized in numpy: the only Python loop is
 over character positions (bounded by ``max_chars``), never over rows.
 
-``levenshtein_batch`` (r6) replaces the engine's use of Spark's built-in
-JVM ``levenshtein()`` in the pair scorer: the builtin runs the full
-O(L²) dynamic program row-at-a-time per pair (~17 µs/pair at L=144 —
-measured as THE dominant term of the scoring stage), while the batch
-kernel runs the same DP vectorized ACROSS pairs with int16 rows that fit
-in L2, one ``np.minimum.accumulate`` resolving the insert chain per row.
-Distances are exactly the classic unit-cost DP over code points — equal to
-Spark's builtin (pinned by tests/test_levenshtein.py).
+``levenshtein_batch`` replaces the engine's use of Spark's built-in JVM
+``levenshtein()`` in the pair scorer: the builtin runs the full O(L²)
+dynamic program row-at-a-time per pair, while the batch kernel runs
+Myers' bit-parallel edit distance vectorized ACROSS pairs (see its
+docstring for the measured per-pair cost). ``levenshtein_batch_dp`` is the
+row-DP form it superseded, kept as a parity baseline. Distances are
+exactly the classic unit-cost DP over code points — equal to Spark's
+builtin (pinned by tests/test_levenshtein.py).
 """
 
 from __future__ import annotations

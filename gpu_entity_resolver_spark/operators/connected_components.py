@@ -15,7 +15,7 @@ Each round is two shuffles (groupBy min + equi-join back). Frontiers are
 GPU pools per batch, resolver.py:2613-2619). Convergence is detected by a
 (count, bit_xor-of-xxhash64) signature of the edge set — O(1) driver data.
 
-Round 5 adds a PARTITION-LOCAL CONTRACTION pre-phase (on by default):
+A PARTITION-LOCAL CONTRACTION pre-phase runs first:
 each input partition collapses its internal structure with a vectorized
 Shiloach-Vishkin-style union-find (numpy, zero shuffle), and only the
 cross-partition boundary graph — edges between local roots of nodes that
@@ -186,17 +186,12 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 50,
-    local_contract: bool = True,
     driver_cc_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """Compute connected components of an undirected graph.
 
     Args:
         edges: DataFrame with two integer vertex columns (self-loops ignored).
-        local_contract: collapse each partition's internal structure with a
-            zero-shuffle numpy union-find first, and run the star rounds on
-            the (much smaller) cross-partition boundary graph only. Exact —
-            the labeling is identical either way.
         driver_cc_max_edges: when the contracted boundary graph has at most
             this many edges (~16 MB of int64 pairs at the default — the
             same order as the broadcast tables this engine already ships),
@@ -218,9 +213,9 @@ def connected_components(
         F.col(src).cast("long").alias("src"),
         F.col(dst).cast("long").alias("dst"),
     )
-    # eager=False: the first consumer (partition-CC's groupBy, or round 1 of
-    # the star loop) materializes the canonical edge set inside its own job
-    # — no separate checkpoint job (r6 job-floor trim).
+    # eager=False: the first consumer (partition-CC's groupBy) materializes
+    # the canonical edge set inside its own job — no separate checkpoint
+    # job (r6 job-floor trim).
     e = (
         e0.where(F.col("src") != F.col("dst"))
         .select(
@@ -231,68 +226,64 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
 
-    if not local_contract:
-        labels = _star_components(e, max_iterations)
+    # (node, local root) — one row per partition the node appears in
+    part_labels = e.mapInPandas(_partition_cc, schema="node long, root long")
+    # A node seen in k partitions carries k local roots, all provably in
+    # one component: connect them through the node's minimum root. The
+    # collect_set is bounded by the partition count, not the data.
+    per_node = (
+        part_labels.groupBy("node")
+        .agg(F.min("root").alias("r0"), F.collect_set("root").alias("rs"))
+        # reused by boundary AND final join; eager=False — boundary's
+        # first job populates the cache
+        .localCheckpoint(eager=False)
+    )
+    boundary = (
+        per_node.select(F.col("r0").alias("src"), F.explode("rs").alias("dst"))
+        .where(F.col("src") != F.col("dst"))
+        .select(
+            F.greatest("src", "dst").alias("src"),
+            F.least("src", "dst").alias("dst"),
+        )
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+    n_boundary = boundary.count()  # materializes the checkpoint
+    if n_boundary == 0:
+        # no component crosses a partition: every local root is final
+        comp = None
+    elif n_boundary <= driver_cc_max_edges:
+        # bounded driver solve with the SAME kernel the partitions ran
+        pdf = boundary.toPandas()
+        res = next(_partition_cc(iter([pdf]))).rename(
+            columns={"node": "vertex", "root": "component"}
+        )
+        comp = boundary.sparkSession.createDataFrame(
+            res, schema="vertex long, component long"
+        )
     else:
-        # (node, local root) — one row per partition the node appears in
-        part_labels = e.mapInPandas(_partition_cc, schema="node long, root long")
-        # A node seen in k partitions carries k local roots, all provably in
-        # one component: connect them through the node's minimum root. The
-        # collect_set is bounded by the partition count, not the data.
-        per_node = (
-            part_labels.groupBy("node")
-            .agg(F.min("root").alias("r0"), F.collect_set("root").alias("rs"))
-            # reused by boundary AND final join; eager=False — boundary's
-            # first job populates the cache
-            .localCheckpoint(eager=False)
+        comp = _star_components(boundary, max_iterations)
+    # r0's component is the node's component; a local root whose tree
+    # never crosses a partition is absent from the boundary graph and
+    # is its own component.
+    if comp is None:
+        labels = per_node.select(
+            F.col("node").alias("vertex"), F.col("r0").alias("component")
         )
-        boundary = (
-            per_node.select(F.col("r0").alias("src"), F.explode("rs").alias("dst"))
-            .where(F.col("src") != F.col("dst"))
+    else:
+        labels = (
+            per_node.select("node", "r0")
+            .join(comp, per_node["r0"] == comp["vertex"], "left")
             .select(
-                F.greatest("src", "dst").alias("src"),
-                F.least("src", "dst").alias("dst"),
+                F.col("node").alias("vertex"),
+                F.coalesce("component", "r0").alias("component"),
             )
-            .distinct()
-            .localCheckpoint(eager=False)
         )
-        n_boundary = boundary.count()  # materializes the checkpoint
-        if n_boundary == 0:
-            # no component crosses a partition: every local root is final
-            comp = None
-        elif n_boundary <= driver_cc_max_edges:
-            # bounded driver solve with the SAME kernel the partitions ran
-            pdf = boundary.toPandas()
-            res = next(_partition_cc(iter([pdf]))).rename(
-                columns={"node": "vertex", "root": "component"}
-            )
-            comp = boundary.sparkSession.createDataFrame(
-                res, schema="vertex long, component long"
-            )
-        else:
-            comp = _star_components(boundary, max_iterations)
-        # r0's component is the node's component; a local root whose tree
-        # never crosses a partition is absent from the boundary graph and
-        # is its own component.
-        if comp is None:
-            labels = per_node.select(
-                F.col("node").alias("vertex"), F.col("r0").alias("component")
-            )
-        else:
-            labels = (
-                per_node.select("node", "r0")
-                .join(comp, per_node["r0"] == comp["vertex"], "left")
-                .select(
-                    F.col("node").alias("vertex"),
-                    F.coalesce("component", "r0").alias("component"),
-                )
-            )
 
     # Every node of the canonical edge set is covered by `labels` (the
-    # partition contraction emits one row per node it sees; the star path
-    # joins its own vertex set internally). The only vertices possibly
-    # missing are those appearing EXCLUSIVELY in self-loops — they are
-    # their own component. The former formulation built a distinct over
+    # partition contraction emits one row per node it sees). The only
+    # vertices possibly missing are those appearing EXCLUSIVELY in
+    # self-loops — they are their own component. The former formulation built a distinct over
     # ALL 2E endpoints and left-joined the full label table just to cover
     # them (guide §2.4: a distinct over data the labels already cover);
     # filtering the self-loop subset costs O(self-loops) instead.

@@ -1,12 +1,11 @@
 """Corpus-scale deduplication operators for a training-data pipeline.
 
 These extend the reference's entity-resolution scope (per the build brief):
-exact dedup, MinHash-LSH near-dup, SimHash, n-gram Jaccard, and
-embedding-cosine near-dup — all first-class DataFrame jobs reusing the
-engine's blocking/shingling/CC primitives.
+MinHash-LSH near-dup, SimHash, n-gram Jaccard, and embedding-cosine
+near-dup — all first-class DataFrame jobs reusing the engine's
+blocking/shingling/CC primitives.
 
 Design notes for 100 TB:
-- exact dedup is one hash-groupBy (map-side partial agg free via Catalyst);
 - near-dup pipelines never enumerate cross pairs outside blocking keys;
 - SimHash is computed in ONE aggregate-fold expression per doc (same
   pattern as the MinHash signature) and banded into equi-joinable keys;
@@ -20,7 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import BlockingConfig
-from ..functions.textstats import doc_fingerprint
 from .blocking import candidate_pairs, lsh_block_keys, sort_token_table
 from .connected_components import connected_components
 from .shingles import doc_vector_table, pair_cosine_vecs
@@ -46,25 +44,6 @@ def _lsh_pairs(
         tokens=sort_token_table(norm, "doc_id", "nt"),
     )
     return norm, pairs
-
-
-def exact_dedup_groups(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Groups of byte-identical (whitespace/case-normalized) documents:
-    (fingerprint, n_docs, keeper) with keeper = min id. One shuffle."""
-    return (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            doc_fingerprint(F.col(text_col)).alias("fingerprint"),
-        )
-        .groupBy("fingerprint")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("doc_id").alias("keeper"),
-        )
-        .where(F.col("n_docs") > 1)
-    )
 
 
 def minhash_dedup(

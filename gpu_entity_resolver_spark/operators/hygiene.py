@@ -122,9 +122,9 @@ def merge_similar_clusters(
     2. per candidate pair, up to ``merge_sample_size`` members are sampled
        from each side DETERMINISTICALLY (xxhash64 rank — reproducible across
        runs and parallelism, unlike the reference's cupy.random.choice);
-    3. all sampled cross pairs are scored with the standard scorer; the pair
-       merges only when the member-pair MEDIAN >= merge_median_threshold AND
-       MAX >= merge_max_threshold;
+    3. all sampled cross pairs are scored with the standard scorer (a pair
+       it drops counts as 0.0); the pair merges only when the member-pair
+       MEDIAN >= merge_median_threshold AND MAX >= merge_max_threshold;
     4. optionally (J3, reference resolver.py:609-632) a per-cluster address
        string table gates merges: clusters merge only when their canonical
        ADDRESSES are also similar — the name-edge ∩ addr-edge intersection;
@@ -147,12 +147,7 @@ def merge_similar_clusters(
     )
     rep_keys, rep_tokens = blocking_plan(reps, "doc_id", text_col, cfg=cfg.blocking)
     pairs = candidate_pairs(rep_keys, cfg.blocking, tokens=rep_tokens)
-    # exact_only: the centroid prefilter below is >= the decision-band
-    # floor, so only exact-jw rows can pass — the approx branches (and
-    # their two barriers) are dead weight on this #clusters-sized input.
-    rep_scored = score_pairs(
-        pairs, reps, "doc_id", text_col, cfg.scoring, exact_only=True
-    )
+    rep_scored = score_pairs(pairs, reps, "doc_id", text_col, cfg.scoring)
     cand = rep_scored.where(
         F.col("score") >= ccfg.centroid_similarity_threshold
     ).select(F.col("src").alias("_ca"), F.col("dst").alias("_cb"))
@@ -206,11 +201,17 @@ def merge_similar_clusters(
         text_col,
         cfg.scoring,
     )
+    # A sampled pair that score_pairs dropped counts as 0.0. Its partial
+    # (band drop) or tfidf-only (prefilter drop) score is below
+    # B = max(floor - jw_share, tfidf_share * prefilter), and counting
+    # values < B as 0 moves no median >= t or max >= t decision while
+    # merge_median_threshold > (B + 1) / 2 and merge_max_threshold > B.
+    # Defaults: B = 0.45, so (B + 1) / 2 = 0.725 < 0.84 and 0.45 < 0.90.
     stats = (
-        mem_pairs.join(mem_scored, ["src", "dst"])
+        mem_pairs.join(mem_scored, ["src", "dst"], "left")
         .groupBy("_ca", "_cb")
         .agg(
-            F.expr("percentile(score, 0.5)").alias("_med"),
+            F.expr("percentile(coalesce(score, 0.0D), 0.5)").alias("_med"),
             F.max("score").alias("_max"),
         )
     )
@@ -263,12 +264,9 @@ def attach_singletons(
       >= ``min_matching`` of them individually >= tau.
 
     ``pairs``: (src, dst, score) — the pipeline's already-scored candidate
-    pairs (no extra scoring pass). Scores must be EXACT: the mean and
-    ratio tests consume score values, so callers scoring with a
-    decision band / cosine prefilter must drop the approximated
-    (jw-null) rows first, as plans/resolve.py does. ``labels``:
-    (doc_id, cluster). Returns labels with singleton clusters re-pointed
-    where attached."""
+    pairs (no extra scoring pass); score_pairs output qualifies, as its
+    rows are all exact. ``labels``: (doc_id, cluster). Returns labels with
+    singleton clusters re-pointed where attached."""
     sizes = labels.groupBy("cluster").agg(F.count("*").alias("_sz"))
     # One narrow (doc_id, is-singleton, cluster-if-clustered) role row per
     # doc. The former shape unioned BOTH orientations of the pair table
@@ -809,17 +807,12 @@ def assign_new_documents(
         .select("new_id", "rep_id")
         .distinct()
     )
-    # exact_only: the winner filter below keeps rank-1 rows at score >=
-    # edge_threshold (>= the band floor), and an approx row can only carry
-    # score < the floor — if one ever won the rank its doc was unmatched
-    # either way, so dropping the approx branches changes no assignment.
     scored = score_pairs(
         nr.select(F.col("new_id").alias("src"), F.col("rep_id").alias("dst")),
         combined,
         "doc_id",
         "norm_text",
         cfg.scoring,
-        exact_only=True,
     )
     best = (
         scored.withColumn(

@@ -73,26 +73,17 @@ def score_pairs(
     id_col: str = "doc_id",
     text_col: str = "norm_text",
     cfg: ScoringConfig | None = None,
-    exact_only: bool = False,
 ) -> DataFrame:
     """Score candidate pairs; returns (src, dst, tfidf_cos, lev_ratio, jw,
     ph_sim, score). ``pairs`` has (src, dst); ``docs`` has (id_col, text_col).
 
-    ``exact_only=True`` returns ONLY the exact-score rows (jw non-null) —
-    row-for-row the same frame as ``score_pairs(...).where(jw IS NOT
-    NULL)``, but as one LINEAR plan: the cosine-prefilter prunes and the
-    decision-band skips are never unioned in, so the two materialization
-    barriers the branching form needs (the cos table feeding
-    survivors+pruned, the partial-score table feeding banded+rest) drop
-    out, and with them two full intermediate materializations (~5.4M cos
-    rows on the bench corpus) and their jobs. Correct for every caller
-    whose downstream reads only exact rows: any score >= the band floor
-    implies an exact jw (score <= _partial + jw_share), so threshold
-    consumers at or above the floor — resolve's edges, assign_new's
-    >= edge_threshold winner, merge's >= centroid prefilter — and
-    explicit jw-non-null consumers (G8 attachment) see identical rows.
-    Callers aggregating over sub-band scores (merge's sampled-member
-    median) must keep the default.
+    Every row returned is exact: its score includes a computed JW. Two
+    kinds of candidate are dropped instead: pairs whose shingle cosine is under
+    ``cfg.cosine_prefilter`` (the prefilter cut, see ScoringConfig), and
+    pairs whose partial (tfidf + lev + phonetic) score cannot reach the
+    ``cfg.jw_decision_band`` floor even with a perfect JW — their true
+    score is provably below the floor, so a consumer thresholding at or
+    above it loses nothing. Floor 0.0 drops prefilter rows only.
 
     TF-IDF cosine sees the FULL normalized text (linear cost, pruned
     vectors); JW/Levenshtein see the content sketch (bounded quadratic).
@@ -131,20 +122,14 @@ def score_pairs(
         n_lo=cfg.tfidf_ngram_lo, n_hi=cfg.tfidf_ngram_hi,
         min_df=cfg.tfidf_min_df, top_k=cfg.tfidf_top_k,
     )
-    # Barrier: cos feeds both the survivors branch and the pruned branch —
-    # except in exact_only mode, where the pruned branch does not exist and
-    # cos flows straight into the survivors filter (single consumer).
     cos = pair_cosine_vecs(pairs, vecs)
-    if not exact_only:
-        cos = cos.localCheckpoint(eager=False)
 
     # Phase 2 — JW + Levenshtein only for pairs passing the cosine
     # prefilter. This is the reference's centroid-prefilter pattern
     # (utils.py:602-621) applied to edit distances: on web corpora the
     # overwhelming majority of candidate pairs have near-zero shingle
     # cosine and cannot be duplicates; skipping their quadratic edit
-    # kernels is the dominant scoring cost lever. Pairs below the
-    # prefilter keep score = tfidf share only (by construction < tau).
+    # kernels is the dominant scoring cost lever.
     survivors = cos.where(F.col("tfidf_cos") >= cfg.cosine_prefilter)
     side_cols = ["doc_id", "t"] + (["ph"] if use_ph else [])
     sketches = texts.select(*side_cols)
@@ -187,47 +172,17 @@ def score_pairs(
         + cfg.phonetic_weight
     )
     ph_term = cfg.phonetic_weight * F.coalesce(F.col("ph_sim"), F.lit(0.0))
-    if cfg.jw_decision_band is None:
-        scored = with_texts.select(
-            "src",
-            "dst",
-            "tfidf_cos",
-            (1.0 - lev / max_len).alias("lev_ratio"),
-            jw_udf("t_a", "t_b").alias("jw"),
-            ph_sim.alias("ph_sim"),
-        )
-        full = scored.withColumn(
-            "score",
-            (
-                cfg.tfidf_weight * F.col("tfidf_cos")
-                + cfg.jaro_winkler_weight * F.col("jw")
-                + cfg.levenshtein_weight * F.col("lev_ratio")
-                + ph_term
-            )
-            / F.lit(total_w),
-        )
-        if exact_only:
-            return full
-    else:
-        # Phase 2b — decision-band JW. The partial (tfidf + lev) score is
-        # pure JVM; the memory-bandwidth-bound numpy JW kernel is SKIPPED
-        # only on the LOW side: pairs whose partial score cannot reach `lo`
-        # even with a perfect JW (true score provably < lo). That side is
-        # where the candidate volume lives (sub-threshold garbage pairs);
-        # the high side (partial >= hi) IS computed, because confident
-        # pairs flow into mean/median/rank consumers — attach_singletons'
-        # neighbor means, merge_similar_clusters' interpolated median,
-        # mutual-rank orderings, avg_pair_score -> confidence — and those
-        # need exact values, not a jw-as-0 underreport. Every threshold
-        # comparison at or above `lo` is exactly invariant; skipped pairs
-        # report score = partial with jw null (same convention as the
-        # cosine prefilter branch below) and can only be underreported,
-        # never overreported. `hi` is kept in the config for consumers
-        # that want to reason about the band, but no longer gates the
-        # kernel.
-        lo, _hi = cfg.jw_decision_band
-        jw_share = cfg.jaro_winkler_weight / total_w
-        base = with_texts.select(
+    # Phase 2b — decision-band JW. The partial (tfidf + lev + phonetic)
+    # score is pure JVM; the memory-bandwidth-bound numpy JW kernel runs
+    # only where the partial plus a perfect JW reaches the floor. The
+    # skipped low side is where the candidate volume lives (sub-threshold
+    # garbage pairs); every kept pair, confident ones included, gets an
+    # exact JW, because mean/median/rank consumers (attach_singletons'
+    # neighbor means, merge_similar_clusters' median, mutual-rank
+    # orderings, avg_pair_score -> confidence) read score values.
+    jw_share = cfg.jaro_winkler_weight / total_w
+    return (
+        with_texts.select(
             "src",
             "dst",
             "tfidf_cos",
@@ -235,7 +190,8 @@ def score_pairs(
             ph_sim.alias("ph_sim"),
             "t_a",
             "t_b",
-        ).withColumn(
+        )
+        .withColumn(
             "_partial",
             (
                 cfg.tfidf_weight * F.col("tfidf_cos")
@@ -244,43 +200,11 @@ def score_pairs(
             )
             / F.lit(total_w),
         )
-        if not exact_only:
-            # barrier: both branches read the joined+lev'd table once
-            base = base.localCheckpoint(eager=False)
-        need_jw = F.col("_partial") + F.lit(jw_share) >= F.lit(lo)
-        out_cols = ["src", "dst", "tfidf_cos", "lev_ratio", "jw", "ph_sim", "score"]
-        banded = (
-            base.where(need_jw)
-            .withColumn("jw", jw_udf("t_a", "t_b"))
-            .withColumn(
-                "score",
-                F.col("_partial")
-                + F.lit(jw_share) * F.col("jw"),
-            )
-            .select(*out_cols)
-        )
-        if exact_only:
-            return banded
-        rest = (
-            base.where(~need_jw)
-            .withColumn("jw", F.lit(None).cast("double"))
-            .withColumn("score", F.col("_partial"))
-            .select(*out_cols)
-        )
-        full = banded.unionByName(rest)
-    pruned = (
-        cos.where(F.col("tfidf_cos") < cfg.cosine_prefilter)
-        .select(
-            "src",
-            "dst",
-            "tfidf_cos",
-            F.lit(None).cast("double").alias("lev_ratio"),
-            F.lit(None).cast("double").alias("jw"),
-            F.lit(None).cast("double").alias("ph_sim"),
-            (cfg.tfidf_weight * F.col("tfidf_cos") / F.lit(total_w)).alias("score"),
-        )
+        .where(F.col("_partial") + F.lit(jw_share) >= F.lit(cfg.jw_decision_band))
+        .withColumn("jw", jw_udf("t_a", "t_b"))
+        .withColumn("score", F.col("_partial") + F.lit(jw_share) * F.col("jw"))
+        .select("src", "dst", "tfidf_cos", "lev_ratio", "jw", "ph_sim", "score")
     )
-    return full.unionByName(pruned)
 
 
 def edges_above_threshold(scores: DataFrame, threshold: float) -> DataFrame:

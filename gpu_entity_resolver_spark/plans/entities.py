@@ -54,8 +54,9 @@ def _entity_scoring_config(cfg: ResolverConfig) -> ScoringConfig:
         # ("jonsen"/"johnson") still score
         phonetic_weight=0.15,
         cosine_prefilter=0.15,
-        # JW carries 35% of the entity score — always compute it exactly
-        jw_decision_band=None,
+        # JW carries 35% of the entity score: floor 0.0 scores every
+        # cosine survivor with it
+        jw_decision_band=0.0,
     )
 
 

@@ -81,22 +81,18 @@ def resolve_documents(
      review_reason).
     """
     cfg = cfg or ResolverConfig()
-    if (
-        cfg.clustering.ensemble_mutual_rank
-        and cfg.scoring.jw_decision_band is not None
-        and cfg.scoring.jw_decision_band[0] > cfg.clustering.ensemble_recall_threshold
-    ):
+    if cfg.clustering.ensemble_mutual_rank:
         # the recall path thresholds scores BELOW the default band floor;
-        # widen the band so that comparison stays exactly invariant
+        # lower the floor so that comparison stays exactly invariant
         import dataclasses
 
         cfg = dataclasses.replace(
             cfg,
             scoring=dataclasses.replace(
                 cfg.scoring,
-                jw_decision_band=(
+                jw_decision_band=min(
+                    cfg.scoring.jw_decision_band,
                     cfg.clustering.ensemble_recall_threshold,
-                    cfg.scoring.jw_decision_band[1],
                 ),
             ),
         )
@@ -159,25 +155,13 @@ def resolve_documents(
 
     pairs = ckpt.stage("02_pairs", build_pairs)
 
-    # The checkpointed stage keeps ONLY the exact-score rows (jw non-null,
-    # score_pairs exact_only mode — one linear plan, no approx-branch
-    # unions or barriers). Proof that nothing downstream reads the rest:
-    # edges need score >= edge_threshold, and score <= _partial + jw_share,
-    # so any row at or above the threshold cleared the decision band and
-    # has an exact jw; G8 attachment explicitly consumes jw-non-null rows
-    # only (approximate scores must not enter its mean/ratio tests); the
-    # ensemble recall path thresholds at >= the band floor (the config
-    # widening above guarantees it). The jw-null rows — ~95% of the
-    # candidate volume, cosine-prefilter prunes and band skips — were
-    # being materialized into the stage table for no consumer (guide §1.2:
-    # don't compute/store what you throw away; the cosine PASS over them
-    # is still paid, it is the prefilter itself).
+    # score_pairs returns exact rows only. Every consumer below thresholds
+    # at or above the band floor (edges, attach tau, the ensemble recall
+    # threshold — the floor is lowered to it above), so the dropped
+    # candidates — ~95% of the volume — never reach the stage table.
     scored = ckpt.stage(
         "03_scored",
-        lambda: score_pairs(
-            pairs, prepared, "doc_id", "norm_text", cfg.scoring,
-            exact_only=True,
-        ),
+        lambda: score_pairs(pairs, prepared, "doc_id", "norm_text", cfg.scoring),
     )
     edges = edges_above_threshold(scored, cfg.scoring.edge_threshold)
 
@@ -231,18 +215,11 @@ def resolve_documents(
         if cfg.clustering.attach_noise:
             # G8: rescue singletons with a strong unambiguous sub-threshold
             # signal (reference utils.py:473-545) — reuses the stage-03
-            # scores, no extra scoring pass. jw-null rows (decision-band
-            # skips + cosine-prefilter prunes) carry APPROXIMATE scores,
-            # provably < band lo (0.55), far under tau: feed only exact
-            # scores into the mean/ratio tests so an underreported
-            # runner-up mean can never inflate the best/second ratio. The
-            # reference's neighborhood is top-k by similarity
-            # (utils.py:490-492); pairs this weak are precisely the ones
-            # its kNN crowds out.
+            # scores, no extra scoring pass. The reference's neighborhood
+            # is top-k by similarity (utils.py:490-492); the pairs
+            # score_pairs drops are precisely the ones its kNN crowds out.
             out = attach_singletons(
-                scored.where(F.col("jw").isNotNull()).select(
-                    "src", "dst", "score"
-                ),
+                scored.select("src", "dst", "score"),
                 out,
                 tau=cfg.clustering.attachment_similarity_threshold,
                 min_matching=cfg.clustering.attachment_min_matching,

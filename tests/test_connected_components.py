@@ -83,14 +83,21 @@ def test_duplicate_and_reversed_edges(spark):
     run_case(spark, [(1, 2), (2, 1), (1, 2), (3, 2)])
 
 
-# --- round 5: partition-local contraction (local_contract=True default) ---
+# --- round 5: partition-local contraction ---
 
 
 @pytest.mark.parametrize("seed", [3, 4])
 def test_contract_equals_star_only_on_adversarial_partitioning(spark, seed):
-    """The contraction pre-phase must be EXACTLY equivalent to star-only,
-    for any physical partitioning — nodes spread across many partitions
-    exercise the boundary-graph merge."""
+    """The contraction pre-phase must be EXACTLY equivalent to star-only
+    rounds over the canonical edge set, for any physical partitioning —
+    nodes spread across many partitions exercise the boundary-graph
+    merge."""
+    from pyspark.sql import functions as F
+
+    from gpu_entity_resolver_spark.operators.connected_components import (
+        _star_components,
+    )
+
     rng = random.Random(seed)
     n = 200
     edges = [
@@ -103,13 +110,25 @@ def test_contract_equals_star_only_on_adversarial_partitioning(spark, seed):
     )
     got_contract = {
         r["vertex"]: r["component"]
-        for r in connected_components(df, local_contract=True).collect()
+        for r in connected_components(df).collect()
     }
+    canonical = (
+        df.where(F.col("src") != F.col("dst"))
+        .select(
+            F.greatest("src", "dst").alias("src"),
+            F.least("src", "dst").alias("dst"),
+        )
+        .distinct()
+    )
     got_star = {
         r["vertex"]: r["component"]
-        for r in connected_components(df, local_contract=False).collect()
+        for r in _star_components(canonical, 50).collect()
     }
-    assert got_contract == got_star == union_find_oracle(edges)
+    want = union_find_oracle(edges)
+    assert got_contract == want
+    # star rounds label the vertices of non-self-loop edges only
+    linked = {v for a, b in edges if a != b for v in (a, b)}
+    assert got_star == {v: c for v, c in want.items() if v in linked}
 
 
 def test_contract_long_chain_across_partitions(spark):

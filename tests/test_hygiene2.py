@@ -110,6 +110,22 @@ def test_merge_similar_clusters_sampled(spark):
     out2 = merge_similar_clusters(members, canon, cfg, canon_addr=far_addr)
     got2 = {r.doc_id: r.cluster for r in out2.collect()}
     assert got2[1] != got2[3]
+    # Sampled member pairs that score below the band floor count against
+    # the median: unrelated members in cluster 200 pull it under
+    # merge_median_threshold once they make up half the sampled pairs.
+    unrelated = ["quartz pivot lumen", "gravel orchid tundra"]
+    for n_unrelated, merged in ((1, True), (2, False)):
+        noisy = members.unionByName(
+            spark.createDataFrame(
+                [(10 + i, 200, t) for i, t in enumerate(unrelated[:n_unrelated])],
+                "doc_id long, cluster long, norm_text string",
+            )
+        )
+        got3 = {
+            r.doc_id: r.cluster
+            for r in merge_similar_clusters(noisy, canon, cfg).collect()
+        }
+        assert (got3[1] == got3[3]) is merged
 
 
 def test_number_chain_entities_standalone(spark):

@@ -35,7 +35,7 @@ def _entity_score(spark, a: str, b: str, phonetic_weight: float) -> float:
         tfidf_ngram_lo=3,
         tfidf_ngram_hi=5,
         cosine_prefilter=0.0,
-        jw_decision_band=None,
+        jw_decision_band=0.0,
     )
     row = score_pairs(pairs, docs, cfg=cfg).collect()[0]
     return row
@@ -70,10 +70,9 @@ def test_phonetic_term_neutral_for_identical_and_absent_for_corpus(spark):
 
 
 def test_decision_band_skips_only_low_side(spark):
-    # ADVICE r3: confident pairs (partial >= hi) must get an EXACT jw —
-    # mean/median/rank consumers read score values, not just threshold
-    # outcomes. Only pairs that cannot reach `lo` even with jw = 1 skip
-    # the kernel, and their reported score stays below lo.
+    # ADVICE r3: confident pairs must get an EXACT jw — mean/median/rank
+    # consumers read score values, not just threshold outcomes. Only pairs
+    # that cannot reach the floor even with jw = 1 are dropped.
     from gpu_entity_resolver_spark.operators.scoring import score_pairs
 
     docs = spark.createDataFrame(
@@ -85,14 +84,13 @@ def test_decision_band_skips_only_low_side(spark):
         "doc_id long, norm_text string",
     )
     pairs = spark.createDataFrame([(1, 2), (1, 3)], "src long, dst long")
-    cfg = ScoringConfig(cosine_prefilter=0.0, jw_decision_band=(0.55, 0.90))
+    cfg = ScoringConfig(cosine_prefilter=0.0, jw_decision_band=0.55)
     rows = {(r["src"], r["dst"]): r for r in score_pairs(pairs, docs, cfg=cfg).collect()}
-    hi_pair, lo_pair = rows[(1, 2)], rows[(1, 3)]
+    hi_pair = rows[(1, 2)]
     assert hi_pair["jw"] is not None and hi_pair["jw"] > 0.99
     # exact score (not partial-only); float32 vector weights bound the slack
     assert abs(hi_pair["score"] - 1.0) < 1e-6
-    assert lo_pair["jw"] is None
-    assert lo_pair["score"] < 0.55
+    assert (1, 3) not in rows
 
 
 # --- S3/S4 full config round-trip -------------------------------------------
@@ -100,12 +98,19 @@ def test_decision_band_skips_only_low_side(spark):
 def test_config_round_trip_exact():
     cfg = ResolverConfig()
     cfg.scoring.edge_threshold = 0.71
-    cfg.scoring.jw_decision_band = (0.6, 0.8)
+    cfg.scoring.jw_decision_band = 0.6
     cfg.clustering.name_match_threshold = 0.93
     cfg.clustering.allow_neighboring_states = (("il", "wi"), ("mn", "ia"))
     cfg.blocking.max_block_size = 99
     back = config_from_dict(config_to_dict(cfg))
     assert back == cfg
+    # legacy band forms: a saved [lo, hi] band keeps its floor lo, and the
+    # former "always compute JW" None becomes floor 0.0
+    legacy = config_to_dict(cfg)
+    legacy["scoring"]["jw_decision_band"] = [0.6, 0.8]
+    assert config_from_dict(legacy) == cfg
+    legacy["scoring"]["jw_decision_band"] = None
+    assert config_from_dict(legacy).scoring.jw_decision_band == 0.0
 
 
 def test_config_round_trip_ignores_unknown_keys():
@@ -115,6 +120,7 @@ def test_config_round_trip_ignores_unknown_keys():
     # fields that older saved models still carry after their removal
     older = config_to_dict(ResolverConfig())
     older["blocking"]["salt_buckets"] = 8
+    older["random_seed"] = 7
     older["clustering"]["min_cluster_size"] = 1
     older["runtime"].update(
         shuffle_partitions=32,
@@ -308,11 +314,15 @@ def test_resolve_with_mutual_rank_ensemble(spark):
     assert {r["label_source"] for r in out0.select("label_source").distinct().collect()} == {0}
 
 
-def test_exact_only_equals_filtered_full(spark, sf_dir):
-    """r6b: score_pairs(exact_only=True) must equal the branching form
-    filtered to jw-non-null, row for row and bit for bit, on a real corpus
-    slice — and likewise with the decision band off (prefilter prunes
-    only)."""
+def test_score_pairs_returns_exact_rows_only(spark, sf_dir):
+    """The scorer's contract on a real corpus slice: with the prefilter and
+    the band floor in force it returns exactly the rows of an unfiltered
+    run (prefilter 0, floor 0) that pass ``tfidf_cos >= prefilter`` and
+    ``partial + jw_share >= floor`` — same pairs, bit-equal signals — for
+    the default floor and for floor 0.0, and for the default floor with
+    the prefilter off (where the floor alone does the dropping)."""
+    import dataclasses
+
     from gpu_entity_resolver_spark.config import BlockingConfig
     from gpu_entity_resolver_spark.operators.blocking import (
         blocking_plan,
@@ -333,18 +343,55 @@ def test_exact_only_equals_filtered_full(spark, sf_dir):
     pairs = candidate_pairs(keys, bcfg, tokens=tokens).localCheckpoint(
         eager=True
     )
-    for scfg in (
-        ScoringConfig(),
-        ScoringConfig(jw_decision_band=None),
+    cols = ["src", "dst", "tfidf_cos", "lev_ratio", "jw", "ph_sim", "score"]
+
+    def rows(scfg):
+        out = score_pairs(pairs, docs, cfg=scfg).select(*cols).collect()
+        return {(r["src"], r["dst"]): r for r in out}
+
+    base = ScoringConfig()
+    unfiltered = rows(
+        dataclasses.replace(base, cosine_prefilter=0.0, jw_decision_band=0.0)
+    )
+    total_w = (
+        base.tfidf_weight
+        + base.jaro_winkler_weight
+        + base.levenshtein_weight
+        + base.phonetic_weight
+    )
+    jw_share = base.jaro_winkler_weight / total_w
+    for prefilter, floor in (
+        (base.cosine_prefilter, base.jw_decision_band),
+        (base.cosine_prefilter, 0.0),
+        (0.0, base.jw_decision_band),
     ):
-        full = score_pairs(pairs, docs, cfg=scfg).where(
-            F.col("jw").isNotNull()
+        want = {
+            k: r
+            for k, r in unfiltered.items()
+            if r["tfidf_cos"] >= prefilter
+            and (
+                base.tfidf_weight * r["tfidf_cos"]
+                + base.levenshtein_weight * r["lev_ratio"]
+                + base.phonetic_weight * (r["ph_sim"] or 0.0)
+            )
+            / total_w
+            + jw_share
+            >= floor
+        }
+        got = rows(
+            dataclasses.replace(
+                base, cosine_prefilter=prefilter, jw_decision_band=floor
+            )
         )
-        fast = score_pairs(pairs, docs, cfg=scfg, exact_only=True)
-        cols = ["src", "dst", "tfidf_cos", "lev_ratio", "jw", "ph_sim", "score"]
-        a = sorted(map(tuple, full.select(*cols).collect()))
-        b = sorted(map(tuple, fast.select(*cols).collect()))
-        assert len(a) > 0 and a == b
+        assert len(got) > 0 and got.keys() == want.keys()
+        for k, r in got.items():
+            w = want[k]
+            assert (r["tfidf_cos"], r["lev_ratio"], r["jw"]) == (
+                w["tfidf_cos"], w["lev_ratio"], w["jw"]
+            )
+            assert abs(r["score"] - w["score"]) <= 1e-12
+    # the last config is not vacuous: the floor alone drops rows
+    assert len(got) < len(unfiltered)
 
 
 def test_unrolled_dot_equals_fold(spark):

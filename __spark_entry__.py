@@ -1172,7 +1172,7 @@ _QUALITY_FILTER_SQL = _qfs("text")
 
 # Shared exact ground truth for the MinHash-LSH near-dup pipeline
 # (operators/dedup.py:minhash_dedup): the full TF-IDF formula replayed in
-# SQL — char-4-gram codes byte-packed exactly like shingles._doc_term_counts
+# SQL — char-4-gram codes byte-packed exactly like shingles._gram_codes
 # (ASCII corpus; width tag at bit 48), sublinear tf * smoothed idf, top-64
 # per doc by (weight desc, code asc), float32-rounded L2 normalization —
 # then exact ALL-pairs cosine at the 0.85 threshold and connected

@@ -60,25 +60,6 @@ def _replacement_rules(
     return rules
 
 
-def normalize_entity_text_expr(
-    col: Column,
-    replacements: dict[str, str] | None = None,
-    suffixes: tuple[str, ...] | None = None,
-) -> Column:
-    """P1 — entity-name normalization as a chained Column expression (the
-    all-JVM reference formulation; kept as the equivalence baseline for the
-    fused Arrow-UDF default below)."""
-    s = F.lower(F.coalesce(col, F.lit("")))
-    s = F.regexp_replace(s, r"&", " and ")
-    s = F.regexp_replace(s, r"\+", " and ")
-    s = F.regexp_replace(s, r"\([^)]*\)", "")
-    extracted = F.regexp_extract(s, _DBA_PATTERN, 1)
-    s = F.when(extracted != "", extracted).otherwise(s)
-    for pat, rep in _replacement_rules(replacements, suffixes):
-        s = F.regexp_replace(s, pat, rep)
-    return F.trim(s)
-
-
 # Characters kept verbatim by the `[^a-z0-9_\s]` cleanup rule. Java's
 # default \s is exactly these six ASCII chars; everything else maps to a
 # space via the C-speed str.translate table below.
@@ -126,8 +107,9 @@ def normalize_entity_text(
 ) -> Column:
     """P1 — entity-name normalization, Arrow-batched.
 
-    Same rule chain (and the same ``_replacement_rules`` table) as
-    :func:`normalize_entity_text_expr`, executed in one Python pass per
+    Same rule chain (and the same ``_replacement_rules`` table) as the
+    chained-JVM ``normalize_entity_text_expr``
+    (tests/baselines/normalize_jvm.py), executed in one Python pass per
     row instead of ~22 chained JVM ``regexp_replace`` scans — measured as
     ~93% of the pipeline's prepare stage (guide §1.2: fix the per-task
     work). Equality with the JVM chain is pinned corpus-wide by

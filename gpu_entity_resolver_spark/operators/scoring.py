@@ -3,8 +3,10 @@
 Three signals per candidate pair, combined by configurable weights (the
 reference's stream energy proportions become score weights — SURVEY.md V6):
 
-- TF-IDF char-shingle cosine — pure JVM equi-join + agg (shingles.pair_cosine),
-  re-expressing reference utils.py:211-232;
+- TF-IDF char-shingle cosine — numpy doc vectors against a broadcast IDF
+  table, then a JVM dot product over two equi-joins
+  (shingles.doc_vector_table + pair_cosine_vecs), re-expressing reference
+  utils.py:211-232;
 - Jaro-Winkler — Arrow-batched pandas UDF over the numpy kernel
   (functions/simfns.py), no per-row Python;
 - Levenshtein ratio — Arrow-batched pandas UDF over the numpy Myers

@@ -1,14 +1,19 @@
-"""Character-shingle machinery shared by TF-IDF scoring and MinHash blocking.
+"""Char-shingle TF-IDF vectors and the pair cosine shared by scoring and
+dedup.
 
 The reference vectorizes with cuML ``TfidfVectorizer(analyzer='char',
 ngram_range=(3,5), sublinear_tf=True)`` (reference resolver.py:329-350,
-config.py:57-64). Here the same weighting is computed as a two-pass
-DataFrame job producing an exploded ``(doc_id, shingle, w)`` table with
-L2-normalized sublinear-TF-IDF weights — pure JVM column math, no Python.
+config.py:57-64). :func:`doc_vector_table` builds the same sublinear
+TF-IDF weights, pruned to ``top_k`` terms and L2-normalized, MAP-SIDE in
+numpy: one pass sums per-partition document frequencies, the IDF table is
+broadcast, and a second pass weights each document's term counts. Every
+pass turns text into terms with one kernel, :func:`_gram_codes`.
+:func:`pair_cosine_vecs` scores candidate pairs with two equi-joins and a
+JVM dot product.
 
-At 100 TB the exploded table is large but shuffle-friendly: every downstream
-use (doc-frequency agg, pair-cosine join) is an equi-join/agg on ``shingle``
-or ``doc_id``; Catalyst + AQE handle partial aggregation and skew.
+Vocabularies larger than ``broadcast_max_terms`` fall back to the exploded
+JVM form, :func:`tfidf_weights` -> :func:`doc_vectors`: a (doc_id, h, w_raw)
+table aggregated and joined on int64 keys. Same vectors, plus a tf shuffle.
 """
 
 from __future__ import annotations
@@ -19,57 +24,61 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from numpy.lib.stride_tricks import sliding_window_view
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# A width-n gram code packs the gram's n UTF-8 bytes base-256 (first byte
+# lowest) below a width tag n << 48, so codes of different widths never
+# collide and every code is strictly positive. Six bytes fill the 48 bits
+# under the tag. Hash semantics are internal to the scorer: nothing
+# downstream needs xxhash parity.
+_MAX_WIDTH = 6
+_PLACE = {n: 256 ** np.arange(n, dtype=np.int64) for n in range(1, _MAX_WIDTH + 1)}
+_TAG = {n: np.int64(n) << np.int64(48) for n in range(1, _MAX_WIDTH + 1)}
 
-def char_shingles(col_name: str, n_lo: int, n_hi: int) -> Column:
-    """Array of all char n-grams for n in [n_lo, n_hi] of a string column.
 
-    Pure SQL higher-order functions: ``transform(sequence(...))`` per width,
-    concatenated. Strings shorter than n contribute the whole string once
-    (mirrors vectorizer behavior of producing no n-gram; we keep the whole
-    string so very short docs still block/score).
-    """
-    parts = []
-    for n in range(n_lo, n_hi + 1):
-        parts.append(
-            f"CASE WHEN length({col_name}) >= {n} THEN "
-            f"transform(sequence(1, length({col_name}) - {n} + 1),"
-            f" i -> substring({col_name}, i, {n})) "
-            f"ELSE array({col_name}) END"
+def _widths(n_lo: int, n_hi: int) -> list[int]:
+    """Gram widths n_lo..n_hi; width 7+ would overflow into the width tag
+    and silently collide terms across widths."""
+    if n_hi > _MAX_WIDTH:
+        raise ValueError(
+            f"shingle width n_hi={n_hi} exceeds {_MAX_WIDTH}; gram codes only "
+            "hold 6 bytes below the width tag at bit 48"
         )
-    return F.expr("concat(" + ", ".join(parts) + ")")
+    return list(range(n_lo, n_hi + 1))
+
+
+def _gram_codes(text: str | None, widths: list[int]) -> np.ndarray:
+    """int64 code of every byte n-gram of ``text`` for n in ``widths``, one
+    entry per occurrence (vectorized sliding-window dot product, no string
+    churn). A text shorter than n bytes yields one whole-string code for
+    that width instead, the first 6 bytes of md5(text + n) under the width
+    tag, so very short docs still score. Callers run ``np.unique``."""
+    raw = ("" if text is None else str(text)).encode("utf-8")
+    b = np.frombuffer(raw, dtype=np.uint8)
+    parts = []
+    for n in widths:
+        if len(b) >= n:
+            win = sliding_window_view(b, n)
+            parts.append(win.astype(np.int64) @ _PLACE[n] + _TAG[n])
+        else:
+            digest = hashlib.md5(raw + bytes([n])).digest()
+            code = int.from_bytes(digest[:6], "little") + _TAG[n]
+            parts.append(np.array([code], dtype=np.int64))
+    return parts[0] if len(parts) == 1 else np.concatenate(parts)
+
+
+def _cat(parts: list[np.ndarray]) -> np.ndarray:
+    return np.concatenate(parts) if parts else np.array([], dtype=np.int64)
 
 
 def _doc_term_counts(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_lo: int,
-    n_hi: int,
+    docs: DataFrame, id_col: str, text_col: str, widths: list[int]
 ) -> DataFrame:
-    """Per-document shingle term counts (doc_id, h, tf) computed MAP-SIDE in
-    numpy over Arrow batches.
-
-    The former JVM formulation exploded ~290 substring shingles per doc
-    (UTF8String allocation each) and shuffled the exploded table into a
-    groupBy — at 32 local cores the allocation/DRAM traffic made the stage
-    run barely faster than at 8. Here each byte n-gram becomes an int64 code
-    via a vectorized sliding-window dot product and ``np.unique`` yields the
-    counts, all inside the map task: no string churn, no tf shuffle at all.
-    Gram codes pack the n bytes plus a width tag (hash semantics are
-    internal to the scorer — nothing downstream needs xxhash parity)."""
-    # Codes pack n bytes base-256 below a width tag at bit 48; width 7+ would
-    # overflow into the tag and silently collide terms across widths.
-    if n_hi > 6:
-        raise ValueError(
-            f"shingle width n_hi={n_hi} exceeds 6; gram codes only hold 6 "
-            "bytes below the width tag at bit 48"
-        )
-    widths = list(range(n_lo, n_hi + 1))
-    mults = {n: (256 ** np.arange(n, dtype=np.int64)) for n in widths}
-    tags = {n: np.int64(n) << np.int64(48) for n in widths}
+    """Per-document term counts (doc_id, h, tf), computed MAP-SIDE in numpy
+    over Arrow batches: ``np.unique`` over each doc's gram codes, no tf
+    shuffle."""
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -77,37 +86,14 @@ def _doc_term_counts(
             out_h: list[np.ndarray] = []
             out_tf: list[np.ndarray] = []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                b = np.frombuffer(
-                    ("" if text is None else str(text)).encode("utf-8"),
-                    dtype=np.uint8,
+                uniq, counts = np.unique(
+                    _gram_codes(text, widths), return_counts=True
                 )
-                codes_parts = []
-                for n in widths:
-                    if len(b) >= n:
-                        win = np.lib.stride_tricks.sliding_window_view(b, n)
-                        codes_parts.append(
-                            win.astype(np.int64) @ mults[n] + tags[n]
-                        )
-                    else:
-                        # whole-(short-)string fallback, mirroring
-                        # char_shingles: one deterministic code per width
-                        digest = hashlib.md5(bytes(b) + bytes([n])).digest()
-                        codes_parts.append(
-                            np.array(
-                                [int.from_bytes(digest[:6], "little") + tags[n]],
-                                dtype=np.int64,
-                            )
-                        )
-                uniq, counts = np.unique(np.concatenate(codes_parts), return_counts=True)
                 out_id.append(np.full(len(uniq), int(doc_id), dtype=np.int64))
                 out_h.append(uniq)
                 out_tf.append(counts.astype(np.int64))
             yield pd.DataFrame(
-                {
-                    "doc_id": np.concatenate(out_id) if out_id else np.array([], dtype=np.int64),
-                    "h": np.concatenate(out_h) if out_h else np.array([], dtype=np.int64),
-                    "tf": np.concatenate(out_tf) if out_tf else np.array([], dtype=np.int64),
-                }
+                {"doc_id": _cat(out_id), "h": _cat(out_h), "tf": _cat(out_tf)}
             )
 
     return docs.select(
@@ -116,35 +102,17 @@ def _doc_term_counts(
 
 
 def _partition_term_dfs(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_lo: int,
-    n_hi: int,
+    docs: DataFrame, text_col: str, widths: list[int]
 ) -> DataFrame:
     """Partial document frequencies (h, df) aggregated INSIDE each map
-    partition in numpy.
+    partition in numpy; summed by ``h`` they equal
+    ``_doc_term_counts(...).groupBy("h").count()`` exactly.
 
-    ``_doc_term_counts(...).groupBy("h").count()`` ships one Arrow row per
-    (doc, distinct term) out of Python — ~260 rows per 300-char doc — only
-    for the aggregation to collapse them again. A document contributes
-    exactly 1 to each of its distinct terms' df, and df partials sum
-    associatively, so each partition can emit its own (h, count-of-docs)
-    table instead: output rows drop from O(docs x terms-per-doc) to
-    O(distinct terms per partition) (guide §2.3 "aggregate before you
-    shuffle", here applied to the Python->JVM boundary as well as the
-    exchange). Values are EXACTLY the per-doc formulation's — only the
-    partial-aggregation site moves. Memory is bounded by flushing a partial
-    block every ~4M accumulated entries; the downstream groupBy sums
-    partials either way."""
-    if n_hi > 6:
-        raise ValueError(
-            f"shingle width n_hi={n_hi} exceeds 6; gram codes only hold 6 "
-            "bytes below the width tag at bit 48"
-        )
-    widths = list(range(n_lo, n_hi + 1))
-    mults = {n: (256 ** np.arange(n, dtype=np.int64)) for n in widths}
-    tags = {n: np.int64(n) << np.int64(48) for n in widths}
+    A doc adds 1 to each of its distinct terms' df and partials sum
+    associatively, so a partition emits O(distinct terms) rows instead of
+    one Arrow row per (doc, term) — ~260 per 300-char doc (guide §2.3
+    "aggregate before you shuffle", applied at the Python->JVM boundary).
+    Memory is bounded by flushing a partial block every ~4M entries."""
     flush_entries = 4_000_000
 
     def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -159,32 +127,7 @@ def _partition_term_dfs(
 
         for pdf in batches:
             for text in pdf[text_col]:
-                b = np.frombuffer(
-                    ("" if text is None else str(text)).encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                codes_parts = []
-                for n in widths:
-                    if len(b) >= n:
-                        win = np.lib.stride_tricks.sliding_window_view(b, n)
-                        codes_parts.append(
-                            np.unique(win.astype(np.int64) @ mults[n]) + tags[n]
-                        )
-                    else:
-                        digest = hashlib.md5(bytes(b) + bytes([n])).digest()
-                        codes_parts.append(
-                            np.array(
-                                [int.from_bytes(digest[:6], "little") + tags[n]],
-                                dtype=np.int64,
-                            )
-                        )
-                # per-width uniques are already globally distinct: the width
-                # tag occupies bits >= 48 and codes stay below 2^48
-                u = (
-                    codes_parts[0]
-                    if len(codes_parts) == 1
-                    else np.concatenate(codes_parts)
-                )
+                u = np.unique(_gram_codes(text, widths))
                 acc.append(u)
                 acc_n += len(u)
                 if acc_n >= flush_entries:
@@ -206,21 +149,17 @@ def tfidf_weights(
     min_df: int = 1,
 ) -> DataFrame:
     """Sublinear TF-IDF weights, exploded one row per (doc, shingle-hash):
-    (doc_id, h, w_raw). Matches the sklearn/cuML formula the reference uses:
-    ``w = (1 + ln tf) * (ln((1+N)/(1+df)) + 1)``. L2 normalization happens
-    in :func:`doc_vectors` over the kept (post-top-k) entries — identical
-    result to normalize-then-prune-then-renormalize, one shuffle cheaper.
-
-    Per-doc term counts come from :func:`_doc_term_counts` (numpy, map-side,
-    no tf shuffle); only the doc-frequency aggregation, the IDF join and the
-    per-doc vector build shuffle — all on int64 keys.
+    (doc_id, h, w_raw) — the form :func:`doc_vector_table` falls back to
+    when the vocabulary is too large to broadcast. Matches the sklearn/cuML
+    formula the reference uses: ``w = (1 + ln tf) * (ln((1+N)/(1+df)) + 1)``.
+    L2 normalization happens in :func:`doc_vectors` over the kept (top-k)
+    entries. The doc-frequency aggregation, the IDF join and the vector
+    build shuffle, all on int64 keys.
     """
-    # N (corpus size) stays a lazy 1-row aggregate broadcast into the weight
-    # expression — an eager docs.count() here fired a full scan at plan
-    # CONSTRUCTION time on every score_pairs call (including merge/assign
-    # paths); as part of the plan it runs once, inside the same job.
+    # N stays a lazy 1-row aggregate inside the plan: no scan at plan
+    # construction time.
     n_docs = docs.agg(F.count("*").alias("_n_docs"))
-    tf = _doc_term_counts(docs, id_col, text_col, n_lo, n_hi)
+    tf = _doc_term_counts(docs, id_col, text_col, _widths(n_lo, n_hi))
     dfreq = tf.groupBy("h").agg(F.count("*").alias("df"))
     if min_df > 1:
         dfreq = dfreq.where(F.col("df") >= min_df)
@@ -253,9 +192,8 @@ def doc_vectors(
     entries, then a single JVM expression sorts, keeps the ``top_k``
     highest-weight shingles (tie: hash asc) and L2-normalizes the kept set.
 
-    The former formulation spent three extra shuffles here (norms groupBy +
-    join + per-doc window); per-doc arrays are bounded by document length so
-    the collect_list is safe at any corpus size. ``top_k`` is the scale
+    Per-doc arrays are bounded by document length, so the collect_list is
+    safe at any corpus size. ``top_k`` is the scale
     lever bounding per-pair dot cost and vector-attach shuffle bytes; the
     reference's ``max_features=10000`` (config.py:60) plays the same role.
     """
@@ -301,43 +239,30 @@ def doc_vector_table(
     ``doc_vectors(tfidf_weights(...))`` but built MAP-SIDE when the distinct
     term count fits a broadcast.
 
-    The join formulation shuffles the full exploded (doc, h, tf) table into
-    a groupBy and sorts each doc's entries with an interpreted lambda
-    comparator — measured 157s of a 390s scoring breakdown at 32 cores
-    (amplified sf0.1), and the worst-scaling stage from 8 to 32 cores. Char
-    4-gram vocabularies are heavy-tailed and small relative to the corpus
-    (43.8k distinct terms for 128k web docs here), so the doc-frequency
-    table broadcasts: one pass computes df, then a second map-side pass
-    recomputes each doc's term counts in numpy, looks the IDF up via
-    ``searchsorted``, prunes to ``top_k`` (weight desc, hash asc — the same
-    deterministic tie-break as the JVM path) and L2-normalizes, emitting the
-    finished vector with NO tf shuffle, NO idf join and NO per-doc lambda
-    sort. Term counting runs twice; it is embarrassingly parallel and ~5x
-    cheaper than the shuffle it replaces.
+    Char-gram vocabularies are heavy-tailed and small relative to the
+    corpus (43.8k distinct 4-grams for 128k web docs), so the df table
+    broadcasts: pass 1 sums df partials, then pass 2 recounts each doc's
+    terms in numpy, looks the IDF up via ``searchsorted``, prunes to
+    ``top_k`` (weight desc, hash asc — the JVM comparator's tie-break) and
+    L2-normalizes. No tf shuffle, no idf join, no per-doc lambda sort: the
+    join form's shuffle and sort measured 157 s of a 390 s scoring
+    breakdown at 32 cores (amplified sf0.1).
 
-    Corpora whose vocabulary exceeds ``broadcast_max_terms`` (possible at
-    true web scale with unbounded unicode grams) fall back to the join
-    formulation — same result, documented cost.
+    Vocabularies larger than ``broadcast_max_terms`` (possible at web scale
+    with unbounded unicode grams) fall back to the join form.
     """
-    # Pass 1: document frequencies from per-partition numpy partials (exact
-    # same counts as the former per-doc (doc_id, h, tf) emission + groupBy,
-    # at ~1/200th the Python->JVM rows — see _partition_term_dfs).
+    widths = _widths(n_lo, n_hi)
     dfreq = (
-        _partition_term_dfs(texts, id_col, text_col, n_lo, n_hi)
+        _partition_term_dfs(texts, text_col, widths)
         .groupBy("h")
         .agg(F.sum("df").alias("df"))
     )
     if min_df > 1:
         dfreq = dfreq.where(F.col("df") >= min_df)
-    # ONE Arrow-batched action fetches the df table AND the corpus size:
-    # limit(max+1) bounds the transfer (if we got <= max rows we have the
-    # WHOLE table and can broadcast; otherwise fall back without pulling the
-    # rest), the unioned sentinel row (h = -1, impossible as a gram code —
-    # real codes are strictly positive: bytes-base-256 below a positive
-    # width tag) rides along AFTER the limit so it always survives, and
-    # toPandas keeps the transfer columnar — the former .collect() boxed up
-    # to 4M Row objects on the driver, GBs at the ceiling, plus a separate
-    # texts.count() scan.
+    # ONE columnar fetch brings the df table AND the corpus size:
+    # limit(max+1) bounds the transfer (<= max rows means the WHOLE table),
+    # and the sentinel row (h = -1, never a gram code) carries the count
+    # after the limit so it always survives.
     sentinel = texts.agg(F.count("*").alias("df")).select(
         F.lit(-1).cast("long").alias("h"), F.col("df")
     )
@@ -357,11 +282,6 @@ def doc_vector_table(
     sc = texts.sparkSession.sparkContext
     bc = sc.broadcast((h_sorted, idf_sorted))
 
-    if n_hi > 6:
-        raise ValueError("shingle width n_hi must be <= 6 (see _doc_term_counts)")
-    widths = list(range(n_lo, n_hi + 1))
-    mults = {n: (256 ** np.arange(n, dtype=np.int64)) for n in widths}
-    tags = {n: np.int64(n) << np.int64(48) for n in widths}
     k = (1 << 30) if top_k is None else top_k
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -370,25 +290,8 @@ def doc_vector_table(
             ids: list[int] = []
             vecs: list[dict] = []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                b = np.frombuffer(
-                    ("" if text is None else str(text)).encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                codes_parts = []
-                for n in widths:
-                    if len(b) >= n:
-                        win = np.lib.stride_tricks.sliding_window_view(b, n)
-                        codes_parts.append(win.astype(np.int64) @ mults[n] + tags[n])
-                    else:
-                        digest = hashlib.md5(bytes(b) + bytes([n])).digest()
-                        codes_parts.append(
-                            np.array(
-                                [int.from_bytes(digest[:6], "little") + tags[n]],
-                                dtype=np.int64,
-                            )
-                        )
                 uniq, counts = np.unique(
-                    np.concatenate(codes_parts), return_counts=True
+                    _gram_codes(text, widths), return_counts=True
                 )
                 if len(hs):
                     pos_c = np.minimum(np.searchsorted(hs, uniq), len(hs) - 1)
@@ -426,32 +329,18 @@ def doc_vector_table(
     return out
 
 
-# Pair dot product over two pruned term->weight maps. Three formulations
-# measured at 1.07M pairs / top_k=128, local[32], warm codegen:
-#   map_zip_with union map        — boxed per-pair allocation, 58.8 s
-#   aggregate over vec_a entries,
-#     element_at probe into vec_b — primitive but O(k²) linear probes, 4.6 s
-#   array_intersect + probe (this)— hash-set key intersection O(k), then
-#     element_at probes only for SHARED keys, 1.3 s (3.5x)
-# Result is BITWISE identical to the full-iteration form (verified
-# `a IS DISTINCT FROM b` count == 0 over all 1.07M pairs, and pinned by
-# tests/test_pair_dot.py): missed keys contributed exact +0.0 terms, which
-# never change a finite IEEE accumulator, and array_intersect preserves
-# vec_a's key order, so the surviving products accumulate in the same
-# order with the same values. Most candidate pairs share few terms
-# (only ~5% clear the 0.35 cosine prefilter), so the average probe count
-# collapses from k² to |intersection|·k.
+# Pair dot product over two pruned term->weight maps: a hash-set key
+# intersection, then element_at probes only for SHARED keys — 1.3 s at
+# 1.07M pairs / top_k=128 / local[32], against 4.6 s for probing every
+# vec_a key and 58.8 s for map_zip_with. BITWISE equal to the full-iteration
+# form (pinned by tests/test_pair_dot.py): skipped keys added exact +0.0,
+# and array_intersect keeps vec_a's key order, so the shared products
+# accumulate in the same order.
 _DOT_SQL = (
     "aggregate(array_intersect(map_keys(vec_a), map_keys(vec_b)), 0D,"
     " (acc, k) -> acc + cast(element_at(vec_a, k) as double)"
     " * cast(element_at(vec_b, k) as double))"
 )
-
-
-def _dot_expr():
-    # Built lazily: F.expr needs an active SparkContext, and this module
-    # imports fine without one (spark-submit ships it before the session).
-    return F.expr(_DOT_SQL)
 
 
 def pair_cosine_vecs(
@@ -462,29 +351,24 @@ def pair_cosine_vecs(
     broadcast_max_docs: int = 400_000,
 ) -> DataFrame:
     """Cosine per candidate pair from a prebuilt (doc_id, vec) table:
-    two equi-joins + a JVM fold dot product (see pair_cosine).
+    two equi-joins + a JVM fold dot product (``_DOT_SQL`` above).
 
-    Join strategy (guide §3.1): a sort-merge pick here would shuffle the
-    PAIRS twice, the second time with the ~600-byte ``vec_a`` map already
-    attached. On this engine's plans the optimizer usually broadcasts the
-    vector side on its own (Spark 4 propagates size stats through the
-    lazy localCheckpoint), but that decision rests on ESTIMATES of an
-    opaque mapInPandas output and flips to sort-merge whenever the
-    estimate drifts past the 64 MB auto threshold. The builder KNOWS the
-    real row count (``_dvt_n_docs``): at or below ``broadcast_max_docs``
-    (~250 MB built at top_k=48 — far under the 8 GB broadcast cap) the
-    broadcast is hinted explicitly, pinning the strategy to the known
-    size instead of the estimate; ReuseExchange ships one build for both
-    joins. Corpora above the bound keep the planner's choice — that bound
-    is what makes this safe at the 100 TB target, where the vector table
-    is shuffle-sized. Strategy choice never changes values."""
+    Join strategy (guide §3.1): a sort-merge pick would shuffle the PAIRS
+    twice, the second time with the ~600-byte ``vec_a`` map attached, and
+    the planner's estimate of an opaque mapInPandas output can flip to it.
+    :func:`doc_vector_table` records the real row count (``_dvt_n_docs``):
+    at or below ``broadcast_max_docs`` (~250 MB built at top_k=48, far
+    under the 8 GB broadcast cap) the broadcast is hinted explicitly, and
+    ReuseExchange ships one build for both joins. Larger tables, and the
+    fallback form, keep the planner's choice. Strategy never changes
+    values."""
     # Barrier: the vector table feeds BOTH side joins; without it the
     # whole vector build (term counts included) runs twice.
     n_docs = getattr(vecs, "_dvt_n_docs", None)
     vecs = vecs.localCheckpoint(eager=False)
     if n_docs is not None and n_docs <= broadcast_max_docs:
         vecs = F.broadcast(vecs)
-    dot = _dot_expr()
+    dot = F.expr(_DOT_SQL)
     return (
         pairs.select(src_col, dst_col)
         .join(
@@ -498,38 +382,3 @@ def pair_cosine_vecs(
         .select(src_col, dst_col, dot.alias("tfidf_cos"))
     )
 
-
-def pair_cosine(
-    pairs: DataFrame,
-    weights: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    top_k: int | None = 128,
-) -> DataFrame:
-    """Cosine similarity per candidate pair: ``cos = sum(w_src * w_dst)``
-    over shared shingles (vectors L2-normalized). Re-expresses reference
-    utils.py:211-232 (row-wise TF-IDF cosine).
-
-    Physical strategy: attach each side's pruned weight map (two linear
-    equi-joins), then the JVM ``array_intersect`` + ``aggregate`` dot
-    product (``_DOT_SQL`` above) — whole-stage-codegen, no Python, no
-    per-shingle shuffle. An earlier exploded-join formulation shuffled
-    pairs × shingles rows (quadratic in practice) and was replaced after
-    profiling at sf0.001.
-    """
-    # Barrier: the vector table feeds both the src- and dst-side joins; the
-    # weights/top-k window pipeline must not run twice.
-    vecs = doc_vectors(weights, top_k=top_k).localCheckpoint(eager=False)
-    dot = _dot_expr()
-    return (
-        pairs.select(src_col, dst_col)
-        .join(
-            vecs.select(F.col("doc_id").alias(src_col), F.col("vec").alias("vec_a")),
-            src_col,
-        )
-        .join(
-            vecs.select(F.col("doc_id").alias(dst_col), F.col("vec").alias("vec_b")),
-            dst_col,
-        )
-        .select(src_col, dst_col, dot.alias("tfidf_cos"))
-    )

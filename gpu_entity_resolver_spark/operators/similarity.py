@@ -207,7 +207,10 @@ def ivf_topk(
         "(acc, e) -> CASE WHEN e.d > acc.d OR (e.d = acc.d AND e.cid < acc.cid) "
         "THEN struct(e.cid AS cid, e.d AS d) ELSE acc END)"
     )
-    dim = _probe_dim(cents, "centv")
+    # width from the small query set, as in brute_force_topk: `cents` is an
+    # un-materialized sort over the corpus. Rows of another width take the
+    # fold through the CASE guard in _norm/_dot.
+    dim = _probe_dim(queries, vec_col)
     assigned = (
         c.crossJoin(F.broadcast(cents_arr))
         .select("nid", "cv", argmax.getField("cid").alias("centroid_id"))

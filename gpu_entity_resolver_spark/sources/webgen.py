@@ -62,7 +62,7 @@ def _separate_entities(base, cos_threshold: float = 0.5):
         lsh_block_keys,
         sort_token_table,
     )
-    from ..operators.shingles import pair_cosine, tfidf_weights
+    from ..operators.shingles import doc_vector_table, pair_cosine_vecs
 
     norm = base.select(
         F.col("entity_id").alias("doc_id"),
@@ -72,7 +72,7 @@ def _separate_entities(base, cos_threshold: float = 0.5):
         lsh_block_keys(norm, "doc_id", "nt"),
         tokens=sort_token_table(norm, "doc_id", "nt"),
     )
-    cos = pair_cosine(pairs, tfidf_weights(norm, "doc_id", "nt"))
+    cos = pair_cosine_vecs(pairs, doc_vector_table(norm, "doc_id", "nt"))
     drop = (
         cos.where(F.col("tfidf_cos") >= cos_threshold)
         .select(F.greatest("src", "dst").alias("entity_id"))

@@ -75,9 +75,7 @@ def test_myers_equals_row_dp():
 
     import pandas as pd
 
-    from gpu_entity_resolver_spark.functions.simfns import (
-        levenshtein_batch_dp,
-    )
+    from baselines.simfns_ref import levenshtein_batch_dp
 
     rng = random.Random(31)
     alpha = "ab cd\x00é日"
@@ -102,9 +100,7 @@ def test_myers_dtype_boundaries_and_prefix_shrink():
     prefix shrink must be invariant to row order."""
     import pandas as pd
 
-    from gpu_entity_resolver_spark.functions.simfns import (
-        levenshtein_batch_dp,
-    )
+    from baselines.simfns_ref import levenshtein_batch_dp
 
     pairs = [
         (chr(126) * 10, chr(126) * 9 + "a"),      # int8 path

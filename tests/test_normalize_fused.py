@@ -6,10 +6,11 @@ import random
 
 from pyspark.sql import functions as F
 
+from baselines.normalize_jvm import normalize_entity_text_expr
+
 from gpu_entity_resolver_spark.functions.normalize import (
     _fusable_word_rules,
     normalize_entity_text,
-    normalize_entity_text_expr,
 )
 
 ADVERSARIAL = [

@@ -2,7 +2,8 @@
 full-iteration probe form it replaced: skipped keys contributed exact +0.0
 terms (which never change a finite IEEE accumulator) and array_intersect
 preserves vec_a's key order, so surviving products accumulate in the same
-order with the same values."""
+order with the same values. The vector table's large-vocabulary fallback
+must build the same vectors as the broadcast-IDF path."""
 
 import random
 
@@ -71,3 +72,48 @@ def test_pair_cosine_vecs_end_to_end_parity(spark):
     assert abs(got[(1, 4)] - 1.0) < 1e-6  # identical docs -> cosine ~1.0
     assert got[(1, 2)] > got[(1, 3)]  # near-dup beats unrelated
     assert all(v >= 0.0 for v in got.values())
+
+
+def test_vocabulary_fallback_matches_broadcast_path(spark, sf_dir):
+    """``broadcast_max_terms=0`` forces the exploded JVM form
+    (tfidf_weights -> doc_vectors): same keys per doc, float32 weights
+    within 1e-6, and bit-equal cosines on the LSH candidate pairs."""
+    from gpu_entity_resolver_spark.functions.normalize import (
+        normalize_entity_text,
+    )
+    from gpu_entity_resolver_spark.operators.blocking import (
+        candidate_pairs,
+        lsh_block_keys,
+        sort_token_table,
+    )
+
+    norm = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", normalize_entity_text(F.col("text")).alias("nt")
+    ).localCheckpoint(eager=True)
+    pairs = candidate_pairs(
+        lsh_block_keys(norm, "doc_id", "nt"),
+        tokens=sort_token_table(norm, "doc_id", "nt"),
+    ).localCheckpoint(eager=True)
+    assert pairs.count() > 0
+    shipped = doc_vector_table(norm, "doc_id", "nt")
+    fallback = doc_vector_table(norm, "doc_id", "nt", broadcast_max_terms=0)
+    assert not hasattr(fallback, "_dvt_n_docs")  # the fallback really ran
+
+    got = {r["doc_id"]: r["vec"] for r in fallback.collect()}
+    want = {r["doc_id"]: r["vec"] for r in shipped.collect()}
+    assert got.keys() == want.keys()
+    for doc_id, vec in want.items():
+        assert got[doc_id].keys() == vec.keys(), doc_id
+        for h, w in vec.items():
+            assert abs(got[doc_id][h] - w) <= 1e-6, (doc_id, h)
+
+    diff = (
+        pair_cosine_vecs(pairs, shipped)
+        .join(
+            pair_cosine_vecs(pairs, fallback).withColumnRenamed("tfidf_cos", "fb"),
+            ["src", "dst"],
+            "full_outer",
+        )
+        .where("tfidf_cos IS DISTINCT FROM fb")
+    )
+    assert diff.count() == 0

@@ -75,7 +75,7 @@ def test_bitparallel_kernel_equals_tensor_ref():
     engine feeds it: long near-dup sketches (L=144), short names (L=64),
     mixed lengths (active-prefix shrink), unicode (int32 fallback), NUL
     chars, empties/None, and exact word-boundary lengths."""
-    from gpu_entity_resolver_spark.functions.simfns import jaro_winkler_ref
+    from baselines.simfns_ref import jaro_winkler_ref
 
     rng = np.random.default_rng(1234)
     alpha = np.array(list("abcdefgh 0123"))

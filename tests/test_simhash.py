@@ -4,10 +4,10 @@ fixed values so any future rewrite is checked against round-1 output)."""
 
 from pyspark.sql import functions as F
 
+from baselines.simhash_jvm import simhash64, simhash64_table_agg
+
 from gpu_entity_resolver_spark.operators.dedup import (
-    simhash64,
     simhash64_table,
-    simhash64_table_agg,
     simhash_bands,
 )
 

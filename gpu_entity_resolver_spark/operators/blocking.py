@@ -349,6 +349,45 @@ def candidate_pairs(
     )
 
 
+def cross_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    left_id: str,
+    right_id: str,
+    left_text: str,
+    right_text: str,
+    cfg: BlockingConfig,
+) -> DataFrame:
+    """Distinct (src, dst) pairs, src from ``left`` and dst from ``right``:
+    each side is blocked on its own and the key tables equi-joined, so no
+    same-table pair is built and none is lost to a salt-group split.
+    Hot-key cap (the cross-table analog of :func:`salt_blocks`): a key held
+    by more than ``cfg.max_block_size`` right rows would fan out
+    left_n x right_n rows and is dropped; every row carries many
+    independent keys, so the recall loss is bounded."""
+    left_keys = blocking_plan(left, left_id, left_text, cfg=cfg)[0].select(
+        F.col("doc_id").alias("src"), "block_key"
+    )
+    # barrier: the right keys feed both the hot-key count and the join
+    right_keys = (
+        blocking_plan(right, right_id, right_text, cfg=cfg)[0]
+        .select(F.col("doc_id").alias("dst"), "block_key")
+        .localCheckpoint(eager=False)
+    )
+    hot = (
+        right_keys.groupBy("block_key")
+        .agg(F.count("*").alias("_n"))
+        .where(F.col("_n") > cfg.max_block_size)
+        .select("block_key")
+    )
+    return (
+        left_keys.join(hot, "block_key", "left_anti")
+        .join(right_keys, "block_key")
+        .select("src", "dst")
+        .distinct()
+    )
+
+
 def blocking_plan(
     docs: DataFrame,
     id_col: str = "doc_id",

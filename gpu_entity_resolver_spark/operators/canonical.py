@@ -18,71 +18,66 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+from numpy.lib.stride_tricks import sliding_window_view
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _gram_codes(s: str, n_lo: int, n_hi: int) -> np.ndarray:
-    """All char n-gram occurrences of an ASCII string as uint64 codes.
+def _gram_codes(names: list[str], n_lo: int, n_hi: int) -> list[np.ndarray]:
+    """Codes of every char n-gram occurrence of each name, n_lo <= n <= n_hi,
+    one array per name. A name shorter than n counts WHOLE, once, for that
+    n (the sklearn-style short-string rule the election relies on).
 
-    A gram is packed big-endian into the high bytes of a uint64 (low bytes
-    zero), so code identity == gram identity (no gram contains NUL — the
-    caller guarantees it) and uint64 sort order == lexicographic sort order
-    of the gram strings. Replicates the slow path's short-string fallback:
-    for each n with len(s) < n the WHOLE string counts as one gram.
+    One ``np.unique`` ranks the code points of all the names; a gram packs
+    rank+1 per char in base A+1 (A distinct chars), first char in the
+    highest of ``n_hi`` places, zero-padded. So code identity is gram
+    identity and code order is Python ``str`` order: a shorter prefix pads
+    with zeros and sorts first, and NUL is a rank like any other char. The
+    codes are uint64 while (A+1)**n_hi fits in 64 bits (up to ~7,100
+    distinct chars at n_hi=5) and Python ints (object dtype) past that.
     """
-    b = np.frombuffer(s.encode("ascii"), dtype=np.uint8).astype(np.uint64)
-    shifts = (np.arange(n_hi - 1, -1, -1, dtype=np.int64) * 8).astype(np.uint64)
-    weights = np.left_shift(np.uint64(1), shifts)
-    parts = []
-    for n in range(n_lo, n_hi + 1):
-        if len(b) >= n:
-            w = np.lib.stride_tricks.sliding_window_view(b, n)
-            parts.append(w @ weights[:n])
-        else:
-            whole = b @ weights[: len(b)] if len(b) else np.uint64(0)
-            parts.append(np.array([whole], dtype=np.uint64))
-    return np.concatenate(parts)
+    cps = np.frombuffer(
+        "".join(names).encode("utf-32-le", "surrogatepass"), dtype=np.uint32
+    )
+    alphabet = np.unique(cps)
+    base = len(alphabet) + 1
+    dtype = np.uint64 if base**n_hi <= 1 << 64 else object
+    # rank+1 by table lookup: cheaper than unique's return_inverse sort
+    rank1 = np.zeros(int(alphabet[-1]) + 1 if len(alphabet) else 1, np.int64)
+    rank1[alphabet] = np.arange(1, base)
+    digits = rank1[cps].astype(dtype)
+    place = np.array([base ** (n_hi - 1 - i) for i in range(n_hi)], dtype=dtype)
+    out, start = [], 0
+    for s in names:
+        d = digits[start : start + len(s)]
+        start += len(s)
+        out.append(
+            np.concatenate(
+                [
+                    sliding_window_view(d, n) @ place[:n]
+                    if len(d) >= n
+                    else np.array([d @ place[: len(d)]], dtype=dtype)
+                    for n in range(n_lo, n_hi + 1)
+                ]
+            )
+        )
+    return out
 
 
 def _tfidf_matrix(names: list[str], n_lo: int = 3, n_hi: int = 5) -> np.ndarray:
     """Dense sklearn-default char TF-IDF matrix for a SMALL list of strings.
 
-    Two gram extractors produce the SAME matrix bit-for-bit: a vectorized
-    numpy path (windows packed to uint64 codes — used when every name is
-    NUL-free ASCII and grams fit 8 bytes, i.e. virtually always after
-    normalization) and the per-gram Python fallback. Identical tf values in
-    an identically SORTED vocabulary make every downstream float op —
-    idf scaling, L2 norm, X @ X.T — bitwise equal, so the election result
-    cannot depend on which path ran (pinned by test_canonical_fastpath.py).
+    Columns are the grams in sorted ``str`` order (:func:`_gram_codes`
+    sorts like the strings), so tf values, idf scaling, L2 norm and
+    X @ X.T are the same float ops as a per-gram ``Counter`` over a sorted
+    vocabulary (pinned by test_canonical_fastpath.py).
     """
     n = len(names)
-    fast = n_hi <= 8 and all(s.isascii() and "\x00" not in s for s in names)
-    if fast:
-        per = [
-            np.unique(_gram_codes(s, n_lo, n_hi), return_counts=True)
-            for s in names
-        ]
-        vocab = np.unique(np.concatenate([u for u, _ in per]))
-        X = np.zeros((n, len(vocab)))
-        for r, (u, tf) in enumerate(per):
-            X[r, np.searchsorted(vocab, u)] = tf
-    else:
-        grams: list[Counter] = []
-        for s in names:
-            c: Counter = Counter()
-            for gn in range(n_lo, n_hi + 1):
-                if len(s) >= gn:
-                    for i in range(len(s) - gn + 1):
-                        c[s[i : i + gn]] += 1
-                else:
-                    c[s] += 1
-            grams.append(c)
-        vmap = {g: i for i, g in enumerate(sorted(set().union(*grams)))}
-        X = np.zeros((n, len(vmap)))
-        for r, c in enumerate(grams):
-            for g, tf in c.items():
-                X[r, vmap[g]] = tf
+    per = [np.unique(c, return_counts=True) for c in _gram_codes(names, n_lo, n_hi)]
+    vocab = np.unique(np.concatenate([u for u, _ in per]))
+    X = np.zeros((n, len(vocab)))
+    for r, (u, tf) in enumerate(per):
+        X[r, np.searchsorted(vocab, u)] = tf
     df = (X > 0).sum(axis=0)
     idf = np.log((1.0 + n) / (1.0 + df)) + 1.0
     X = X * idf

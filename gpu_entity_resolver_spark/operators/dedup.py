@@ -22,6 +22,7 @@ from ..config import BlockingConfig
 from .blocking import candidate_pairs, lsh_block_keys, sort_token_table
 from .connected_components import connected_components
 from .shingles import doc_vector_table, pair_cosine_vecs
+from .similarity import _cosine
 
 
 def _lsh_pairs(
@@ -275,22 +276,12 @@ def embedding_neardup_pairs(
         .distinct()
     )
     vecs = docs.select("doc_id", "vec")
-    dot = F.expr(
-        "aggregate(zip_with(vec_a, vec_b, (x, y) -> cast(x as double) * y), "
-        "0D, (acc, v) -> acc + v)"
-    )
-    norm_a = F.expr(
-        "sqrt(aggregate(vec_a, 0D, (acc, x) -> acc + cast(x as double) * x))"
-    )
-    norm_b = F.expr(
-        "sqrt(aggregate(vec_b, 0D, (acc, x) -> acc + cast(x as double) * x))"
-    )
     return (
         cand.join(
             vecs.withColumnsRenamed({"doc_id": "src", "vec": "vec_a"}), "src"
         )
         .join(vecs.withColumnsRenamed({"doc_id": "dst", "vec": "vec_b"}), "dst")
-        .select("src", "dst", (dot / (norm_a * norm_b)).alias("cosine"))
+        .select("src", "dst", _cosine("vec_a", "vec_b").alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
 

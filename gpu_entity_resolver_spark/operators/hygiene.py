@@ -771,7 +771,7 @@ def assign_new_documents(
     ``new_docs``: (doc_id, norm_text); ``canon``: (cluster, canonical_text).
     Returns (doc_id, cluster, match_score, is_new_entity).
     """
-    from .blocking import blocking_plan
+    from .blocking import cross_pairs
     from .scoring import score_pairs
 
     cfg = cfg or ResolverConfig()
@@ -779,44 +779,12 @@ def assign_new_documents(
         F.col("cluster").alias("doc_id"), F.col("canonical_text").alias("norm_text")
     )
     combined = new_docs.select("doc_id", "norm_text").unionByName(reps)
-    # Block each side separately and equi-join the key tables directly:
-    # candidate generation over union(new, reps) would materialize new x new
-    # and rep x rep pairs only to discard them with semi-joins — this form
-    # produces exactly the (new x rep) pairs at roughly half (often far less)
-    # of the pair volume, and can never lose a pair to salt-group splits.
-    # Narrow keys (r6): this path never salts, so the sort tokens the wide
-    # key tables carried were dead weight in both key builds and the join.
-    new_keys = blocking_plan(
-        new_docs, "doc_id", "norm_text", cfg=cfg.blocking
-    )[0].select(F.col("doc_id").alias("new_id"), "block_key")
-    rep_keys = (
-        blocking_plan(reps, "doc_id", "norm_text", cfg=cfg.blocking)[0]
-        .select(F.col("doc_id").alias("rep_id"), "block_key")
-        .localCheckpoint(eager=False)
+    # only the (new x rep) pairs: blocking union(new, reps) would build
+    # new x new and rep x rep pairs only to discard them
+    nr = cross_pairs(
+        new_docs, reps, "doc_id", "doc_id", "norm_text", "norm_text", cfg.blocking
     )
-    # Hot-key cap (the cross-table analog of salt_blocks): a block key shared
-    # by more than max_block_size reps is a near-useless discriminator and
-    # would fan out new_n x rep_n rows — drop it; every doc carries many
-    # independent keys so recall loss is bounded.
-    hot = (
-        rep_keys.groupBy("block_key")
-        .agg(F.count("*").alias("_n"))
-        .where(F.col("_n") > cfg.blocking.max_block_size)
-        .select("block_key")
-    )
-    nr = (
-        new_keys.join(hot, "block_key", "left_anti")
-        .join(rep_keys, "block_key")
-        .select("new_id", "rep_id")
-        .distinct()
-    )
-    scored = score_pairs(
-        nr.select(F.col("new_id").alias("src"), F.col("rep_id").alias("dst")),
-        combined,
-        "doc_id",
-        "norm_text",
-        cfg.scoring,
-    )
+    scored = score_pairs(nr, combined, "doc_id", "norm_text", cfg.scoring)
     best = (
         scored.withColumn(
             "_rn",

@@ -142,6 +142,7 @@ def _partition_term_dfs(
 
 def tfidf_weights(
     docs: DataFrame,
+    n_docs: int,
     id_col: str = "doc_id",
     text_col: str = "norm_text",
     n_lo: int = 3,
@@ -150,36 +151,27 @@ def tfidf_weights(
 ) -> DataFrame:
     """Sublinear TF-IDF weights, exploded one row per (doc, shingle-hash):
     (doc_id, h, w_raw) — the form :func:`doc_vector_table` falls back to
-    when the vocabulary is too large to broadcast. Matches the sklearn/cuML
-    formula the reference uses: ``w = (1 + ln tf) * (ln((1+N)/(1+df)) + 1)``.
+    when the vocabulary is too large to broadcast. ``n_docs`` is the corpus
+    size the caller has already counted. Matches the sklearn/cuML formula
+    the reference uses: ``w = (1 + ln tf) * (ln((1+N)/(1+df)) + 1)``.
     L2 normalization happens in :func:`doc_vectors` over the kept (top-k)
     entries. The doc-frequency aggregation, the IDF join and the vector
     build shuffle, all on int64 keys.
     """
-    # N stays a lazy 1-row aggregate inside the plan: no scan at plan
-    # construction time.
-    n_docs = docs.agg(F.count("*").alias("_n_docs"))
-    tf = _doc_term_counts(docs, id_col, text_col, _widths(n_lo, n_hi))
+    # barrier: the term counts feed both the df aggregation and the join,
+    # so each document's terms are counted once
+    widths = _widths(n_lo, n_hi)
+    tf = _doc_term_counts(docs, id_col, text_col, widths).localCheckpoint(eager=False)
     dfreq = tf.groupBy("h").agg(F.count("*").alias("df"))
     if min_df > 1:
         dfreq = dfreq.where(F.col("df") >= min_df)
-    return (
-        tf.join(dfreq, "h")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "doc_id",
-            "h",
-            (
-                (1.0 + F.log(F.col("tf").cast("double")))
-                * (
-                    F.log(
-                        (1.0 + F.col("_n_docs").cast("double"))
-                        / (1.0 + F.col("df"))
-                    )
-                    + 1.0
-                )
-            ).alias("w_raw"),
-        )
+    return tf.join(dfreq, "h").select(
+        "doc_id",
+        "h",
+        (
+            (1.0 + F.log(F.col("tf").cast("double")))
+            * (F.log((1.0 + float(n_docs)) / (1.0 + F.col("df"))) + 1.0)
+        ).alias("w_raw"),
     )
 
 
@@ -271,7 +263,7 @@ def doc_vector_table(
     pdf = pdf[pdf["h"] != -1]
     if len(pdf) > broadcast_max_terms:
         return doc_vectors(
-            tfidf_weights(texts, id_col, text_col, n_lo, n_hi, min_df),
+            tfidf_weights(texts, n_docs, id_col, text_col, n_lo, n_hi, min_df),
             top_k=top_k,
         )
     h_arr = pdf["h"].to_numpy(dtype=np.int64)

@@ -20,18 +20,14 @@ from pyspark.sql import functions as F
 
 
 def _cosine(vec_a: str, vec_b: str):
-    dot = F.expr(
-        f"aggregate(zip_with({vec_a}, {vec_b}, (x, y) -> cast(x as double) * y), "
-        "0D, (acc, v) -> acc + v)"
-    )
-    na = F.expr(f"sqrt(aggregate({vec_a}, 0D, (acc, x) -> acc + cast(x as double) * x))")
-    nb = F.expr(f"sqrt(aggregate({vec_b}, 0D, (acc, x) -> acc + cast(x as double) * x))")
-    return dot / (na * nb)
+    """Cosine of two array columns: the :func:`_dot` and :func:`_norm`
+    folds."""
+    return _dot(vec_a, vec_b) / (_norm(vec_a) * _norm(vec_b))
 
 
 def _norm(vec: str, dim: int | None = None):
-    """L2 norm of an array column — the same fold expression `_cosine` uses,
-    exposed so callers can hoist it out of per-pair evaluation: computing it
+    """L2 norm of an array column — the fold `_cosine` uses, exposed so
+    callers can hoist it out of per-pair evaluation: computing it
     once per ROW instead of once per PAIR is bit-identical (same op
     sequence over the same values) but removes 2/3 of the per-pair fold
     work from a k-NN scan. With ``dim`` the fold unrolls (see _dot)."""

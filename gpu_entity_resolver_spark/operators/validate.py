@@ -9,8 +9,9 @@ better home, scoring candidates with fixed weights
 (config.py:213-218: name .40 / address .40 / size .10 / probability .10).
 Here the cross-join is replaced with the engine's blocking machinery: the
 evicted set and the profile set each emit blocking keys and candidates come
-from the key equi-join — the same recall mechanism used everywhere else, no
-quadratic pass, no batching loops.
+from the key equi-join (``blocking.cross_pairs``, which drops keys held by
+more than ``max_block_size`` profiles) — the same recall mechanism used
+everywhere else, no quadratic pass, no batching loops.
 
 Similarities use the Jaro-Winkler kernel (Arrow-batched pandas UDF) so the
 eviction filter and the weighted argmax are independently checkable against
@@ -132,7 +133,7 @@ def validate_reassign(
     (the weighted match score for reassigned/rescued rows, 1.0 for kept).
     """
     from ..config import BlockingConfig
-    from .blocking import blocking_plan
+    from .blocking import cross_pairs
 
     blocking_cfg = blocking_cfg or BlockingConfig()
     if profiles is None:
@@ -167,16 +168,12 @@ def validate_reassign(
 
     # --- pass 2: blocked candidate search for evicted + singleton rows ----
     moving = cur.where(~F.col("_valid")).select(*member_cols, "_is_singleton")
-    m_keys = blocking_plan(
-        moving, id_col, name_col, cfg=blocking_cfg
-    )[0].withColumnRenamed("doc_id", "_mid")
-    p_keys = blocking_plan(
-        profiles, "cluster", "profile_name", cfg=blocking_cfg
-    )[0].withColumnRenamed("doc_id", "_pid")
     cand = (
-        m_keys.join(p_keys, "block_key")
-        .select(F.col("_mid"), F.col("_pid"))
-        .distinct()
+        cross_pairs(
+            moving, profiles, id_col, "cluster", name_col, "profile_name",
+            blocking_cfg,
+        )
+        .withColumnsRenamed({"src": "_mid", "dst": "_pid"})
         .join(moving.withColumnRenamed(id_col, "_mid"), "_mid")
         .join(profiles.withColumnRenamed("cluster", "_pid"), "_pid")
         # never re-offer the cluster the member was just evicted from
@@ -259,6 +256,43 @@ def validate_reassign(
     ).unionByName(moved)
 
 
+def best_address(members: DataFrame, cluster_col: str) -> DataFrame:
+    """V12 best address per cluster (reference utils.py:168-207), ranked
+    completeness desc, key frequency desc, key asc; the winner's parsed
+    components ride along (P7): (cluster_col, canonical_address,
+    canonical_{street_number,street_name,city,state,zip}). One key can carry
+    several component variants (C1 rewrites similar keys to one), so the
+    components break the last ties: the winner never depends on row order."""
+    parts = [
+        "addr_street_number", "addr_street_name", "addr_city", "addr_state",
+        "addr_zip",
+    ]
+    freq = members.groupBy(cluster_col, "addr_normalized_key").agg(
+        F.count("*").alias("_freq")
+    )
+    cand = members.select(
+        cluster_col, "addr_normalized_key", "addr_score", *parts
+    ).distinct()
+    return (
+        cand.join(freq, [cluster_col, "addr_normalized_key"])
+        .withColumn(
+            "_rn",
+            F.row_number().over(
+                Window.partitionBy(cluster_col).orderBy(
+                    F.desc("addr_score"), F.desc("_freq"),
+                    F.asc("addr_normalized_key"), *parts,
+                )
+            ),
+        )
+        .where(F.col("_rn") == 1)
+        .select(
+            cluster_col,
+            F.col("addr_normalized_key").alias("canonical_address"),
+            *[F.col(p).alias(p.replace("addr_", "canonical_")) for p in parts],
+        )
+    )
+
+
 def enrich_addresses(
     members: DataFrame,
     cluster_col: str = "cluster",
@@ -274,47 +308,23 @@ def enrich_addresses(
     addr_score)."""
     from ..functions.normalize import address_key, address_score
 
-    freq = members.groupBy(cluster_col, "addr_normalized_key").agg(
-        F.count("*").alias("_freq")
-    )
+    # the size filter is per cluster, so it never changes a winner
     sizes = members.groupBy(cluster_col).agg(F.count("*").alias("_csize"))
-    cand = members.select(
-        cluster_col, "addr_normalized_key", "addr_score",
-        "addr_street_number", "addr_street_name", "addr_city",
-        "addr_state", "addr_zip",
-    ).dropDuplicates([cluster_col, "addr_normalized_key"])
     best = (
-        cand.join(freq, [cluster_col, "addr_normalized_key"])
+        best_address(members, cluster_col)
         .join(sizes, cluster_col)
         .where(F.col("_csize") >= min_cluster_size)
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy(cluster_col).orderBy(
-                    F.desc("addr_score"), F.desc("_freq"),
-                    F.asc("addr_normalized_key"),
-                )
-            ),
-        )
-        .where(F.col("_rn") == 1)
-        .select(
-            cluster_col,
-            F.col("addr_street_number").alias("_c_num"),
-            F.col("addr_street_name").alias("_c_street"),
-            F.col("addr_city").alias("_c_city"),
-            F.col("addr_state").alias("_c_state"),
-            F.col("addr_zip").alias("_c_zip"),
-        )
+        .drop("_csize", "canonical_address")
     )
     out = members.join(best, cluster_col, "left")
     empty = lambda c: F.col(c).isNull() | (F.col(c) == "")  # noqa: E731
     enrich = F.coalesce(
         empty("addr_street_name")
-        & F.col("_c_street").isNotNull()
-        & (F.col("_c_street") != "")
-        & (F.col("addr_city") == F.col("_c_city"))
-        & (F.col("addr_state") == F.col("_c_state"))
-        & (F.col("addr_zip") == F.col("_c_zip")),
+        & F.col("canonical_street_name").isNotNull()
+        & (F.col("canonical_street_name") != "")
+        & (F.col("addr_city") == F.col("canonical_city"))
+        & (F.col("addr_state") == F.col("canonical_state"))
+        & (F.col("addr_zip") == F.col("canonical_zip")),
         F.lit(False),  # clusters below min size have no canonical row
     )
     # Materialize the flag FIRST and reference the flag column afterwards:
@@ -326,11 +336,15 @@ def enrich_addresses(
         out.withColumn("address_was_enriched", enrich)
         .withColumn(
             "addr_street_number",
-            F.when(flag, F.col("_c_num")).otherwise(F.col("addr_street_number")),
+            F.when(flag, F.col("canonical_street_number")).otherwise(
+                F.col("addr_street_number")
+            ),
         )
         .withColumn(
             "addr_street_name",
-            F.when(flag, F.col("_c_street")).otherwise(F.col("addr_street_name")),
+            F.when(flag, F.col("canonical_street_name")).otherwise(
+                F.col("addr_street_name")
+            ),
         )
         .withColumn(
             "addr_normalized_key",
@@ -354,6 +368,6 @@ def enrich_addresses(
                 ),
             ).otherwise(F.col("addr_score")),
         )
-        .drop("_c_num", "_c_street", "_c_city", "_c_state", "_c_zip")
+        .drop(*best.columns[1:])  # the canonical components
     )
     return out

@@ -12,6 +12,20 @@ Differences by design (Spark-first, per SURVEY.md):
   resolver.py:2653-2678) gates every edge;
 - "fitted state" is a canonical-map table + config, not pickled models
   (SURVEY.md §3.3): save/load round-trips through parquet + JSON.
+
+A fit runs five stages on the same stage driver as ``resolve_documents``
+(``CheckpointManager.stage``) and shares its CC labeling, incident-edge
+mean and cohesion steps (``plans/resolve.py``):
+
+  e01_prepared  normalize names, parse addresses; C1 + C2 consolidation
+  e02_edges     block, score, C4 state gate, ``entity_threshold``
+  e03_clusters  connected-components labels
+  e04_hygiene   C3 validate/reassign, C5 merge, C6 consolidate
+  e05_resolved  rows, C7 enrichment, state and street-number splits,
+                canonical table, confidence and review flags
+
+The ``e`` prefix keeps these tables apart from the resolve plan's when both
+use one checkpoint directory.
 """
 
 from __future__ import annotations
@@ -22,7 +36,7 @@ import math
 import os
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ResolverConfig, ScoringConfig
@@ -35,8 +49,9 @@ from ..functions.normalize import (
 )
 from ..operators.blocking import blocking_plan, candidate_pairs
 from ..operators.canonical import canonical_map
-from ..operators.connected_components import connected_components
 from ..operators.scoring import make_jw_udf, score_pairs
+from ..sources.checkpoint import CheckpointManager
+from .resolve import cohesion_scores, label_clusters, mean_incident_score
 
 
 def _entity_scoring_config(cfg: ResolverConfig) -> ScoringConfig:
@@ -89,7 +104,14 @@ class _hybridmethod:
 
 
 class EntityResolver:
-    """Drop-in analog of the reference ``EntityResolver`` (resolver.py:38)."""
+    """Drop-in analog of the reference ``EntityResolver`` (resolver.py:38).
+
+    With ``config.runtime.checkpoint_dir`` set, each fit stage (see the
+    module docstring) commits a parquet table there, and a fit resumes after
+    the last committed stage. As with ``resolve_documents``, the stage
+    tables belong to ONE run: a committed stage is read back whatever the
+    input, so fit a different table against a fresh directory. Without a
+    directory each stage is a lazy ``localCheckpoint``."""
 
     def __init__(
         self,
@@ -185,7 +207,6 @@ class EntityResolver:
         # C13 assignment validation (reference _validate_assignments,
         # resolver.py:2280-2332): evict matches whose address similarity or
         # state conflicts with the assigned cluster's canonical profile.
-        from ..operators.scoring import make_jw_udf
         from ..operators.validate import state_compatible
 
         ccfg = self.config.clustering
@@ -357,27 +378,48 @@ class EntityResolver:
         )
 
     def _resolve(self, sdf: DataFrame, entity_col: str, address_col: str) -> DataFrame:
-        spark = self._session()
-        cfg = self.config
-        prep = self._prepare(sdf, entity_col, address_col).localCheckpoint(
-            eager=False
+        from ..operators.hygiene import (
+            consolidate_identical_entities,
+            consolidate_names_by_address,
+            consolidate_similar_addresses,
+            merge_similar_clusters,
+            number_chain_entities,
+            split_by_street_number_range,
+            split_clusters_by,
         )
-        # C1 consolidate similar address strings + C2 consolidate names per
-        # address — both run on every training pass in the reference
-        # (resolver.py:1573-1576, 1644-1709, 256-299)
-        if cfg.clustering.consolidate_addresses:
-            from ..operators.hygiene import consolidate_similar_addresses
+        from ..operators.validate import (
+            best_address,
+            enrich_addresses,
+            state_compatible,
+            validate_reassign,
+        )
 
-            prep = consolidate_similar_addresses(
-                prep,
-                threshold=cfg.clustering.addr_match_threshold,
-                blocking_cfg=cfg.blocking,
+        cfg = self.config
+        ccfg = cfg.clustering
+        scfg = _entity_scoring_config(cfg)
+        # short entity names: the phonetic key family earns its keep here
+        # (V2; useless on long web documents)
+        bcfg = dataclasses.replace(cfg.blocking, use_phonetic_keys=True)
+        ckpt = CheckpointManager(self._session(), cfg.runtime.checkpoint_dir)
+
+        def build_prepared() -> DataFrame:
+            prep = self._prepare(sdf, entity_col, address_col).localCheckpoint(
+                eager=False
             )
-        if cfg.clustering.consolidate_names:
-            from ..operators.hygiene import consolidate_names_by_address
+            # C1 consolidate similar address strings + C2 consolidate names
+            # per address — both run on every training pass in the reference
+            # (resolver.py:1573-1576, 1644-1709, 256-299)
+            if ccfg.consolidate_addresses:
+                prep = consolidate_similar_addresses(
+                    prep,
+                    threshold=ccfg.addr_match_threshold,
+                    blocking_cfg=cfg.blocking,
+                )
+            if ccfg.consolidate_names:
+                prep = consolidate_names_by_address(prep)
+            return prep
 
-            prep = consolidate_names_by_address(prep)
-        prep = prep.localCheckpoint(eager=False)
+        prep = ckpt.stage("e01_prepared", build_prepared)
         # one row per distinct (name, addr) for scoring; rows map back after
         ent = (
             prep.select(
@@ -392,271 +434,214 @@ class EntityResolver:
             .dropDuplicates(["doc_id"])
             .localCheckpoint(eager=False)
         )
-        from ..operators.hygiene import (
-            consolidate_identical_entities,
-            merge_similar_clusters,
-            number_chain_entities,
-            split_by_street_number_range,
-            split_clusters_by,
-        )
-        from ..operators.validate import (
-            enrich_addresses,
-            state_compatible,
-            validate_reassign,
+
+        def build_edges() -> DataFrame:
+            keys, tokens = blocking_plan(ent, "doc_id", "norm_text", cfg=bcfg)
+            pairs = candidate_pairs(keys, bcfg, tokens=tokens)
+            scored = score_pairs(pairs, ent, "doc_id", "norm_text", scfg)
+            # C4 state-compatibility gate (reference resolver.py:2653-2678):
+            # different non-null states never merge (unless configured
+            # neighbors).
+            st = ent.select("doc_id", "addr_state")
+            st_a = st.withColumnsRenamed({"doc_id": "src", "addr_state": "st_a"})
+            st_b = st.withColumnsRenamed({"doc_id": "dst", "addr_state": "st_b"})
+            gate = state_compatible(
+                F.col("st_a"), F.col("st_b"), ccfg.allow_neighboring_states
+            )
+            return (
+                scored.join(st_a, "src")
+                .join(st_b, "dst")
+                .where(gate & (F.col("score") >= self.entity_threshold))
+                .select("src", "dst", "score")
+            )
+
+        edges = ckpt.stage("e02_edges", build_edges)
+        members = ckpt.stage(
+            "e03_clusters",
+            lambda: label_clusters(ent, edges, ccfg.cc_max_iterations),
         )
 
-        ccfg = cfg.clustering
-        scfg = _entity_scoring_config(cfg)
-        # short entity names: the phonetic key family earns its keep here
-        # (V2; useless on long web documents)
-        bcfg = dataclasses.replace(cfg.blocking, use_phonetic_keys=True)
-        keys, tokens = blocking_plan(ent, "doc_id", "norm_text", cfg=bcfg)
-        pairs = candidate_pairs(keys, bcfg, tokens=tokens)
-        scored = score_pairs(pairs, ent, "doc_id", "norm_text", scfg)
-        # C4 state-compatibility gate (reference resolver.py:2653-2678):
-        # different non-null states never merge (unless configured neighbors).
-        st = ent.select("doc_id", "addr_state")
-        scored = (
-            scored.join(st.withColumnsRenamed({"doc_id": "src", "addr_state": "st_a"}), "src")
-            .join(st.withColumnsRenamed({"doc_id": "dst", "addr_state": "st_b"}), "dst")
-            .where(
-                state_compatible(
-                    F.col("st_a"), F.col("st_b"), ccfg.allow_neighboring_states
+        def build_hygiene() -> DataFrame:
+            out = members
+            # C3 validate membership + reassign (reference resolver.py:2334-2651)
+            if ccfg.validate_membership:
+                out = validate_reassign(
+                    out,
+                    id_col="doc_id",
+                    cluster_col="cluster",
+                    name_col="normalized_text",
+                    addr_col="addr_normalized_key",
+                    state_col="addr_state",
+                    name_threshold=ccfg.name_match_threshold,
+                    addr_threshold=ccfg.addr_match_threshold,
+                    allow_neighboring_states=ccfg.allow_neighboring_states,
+                    blocking_cfg=bcfg,
+                )
+            else:
+                out = out.withColumn(
+                    "membership_status", F.lit("kept")
+                ).withColumn("reassign_score", F.lit(1.0))
+            # C5/G9 sampled-member merge with the J3 name∩addr gate
+            # (reference resolver.py:542-700)
+            if ccfg.merge_similar:
+                addr0 = out.groupBy("cluster").agg(
+                    F.max_by("addr_normalized_key", "doc_id").alias("canonical_address")
+                )
+                out = merge_similar_clusters(
+                    out, canonical_map(out, "cluster", "norm_text"), cfg,
+                    "cluster", "norm_text", canon_addr=addr0,
+                )
+            # C6: the same entity key never stays in two clusters
+            if ccfg.consolidate_identical:
+                out = consolidate_identical_entities(out, "norm_text", "cluster")
+            return out
+
+        members = ckpt.stage("e04_hygiene", build_hygiene)
+
+        def build_resolved() -> DataFrame:
+            rows = prep.withColumn(
+                "doc_id",
+                F.xxhash64(
+                    F.concat_ws(" ", "normalized_text", "addr_normalized_key")
+                ),
+            ).join(
+                members.select(
+                    "doc_id", F.col("cluster").alias("final_cluster"),
+                    "membership_status", "reassign_score",
+                ),
+                "doc_id",
+            ).join(
+                # per-doc cluster_probability analog over the kept edges
+                mean_incident_score(edges, "_edge_prob"), "doc_id", "left"
+            ).withColumn(
+                # edge-less docs default to 1.0: they are either exact-duplicate
+                # collapses (merged by byte equality — full certainty) or true
+                # singletons (whose confidence uses the noise formula instead)
+                "_row_prob",
+                F.when(
+                    F.col("membership_status").isin("reassigned", "rescued"),
+                    F.col("reassign_score"),
+                ).otherwise(F.coalesce("_edge_prob", F.lit(1.0))),
+            ).drop("_edge_prob")
+            # C7 refine (reference resolver.py:784-899): address enrichment,
+            # then state split, then street-number-range split
+            if ccfg.enrich_addresses:
+                rows = enrich_addresses(rows, "final_cluster")
+            else:
+                rows = rows.withColumn("address_was_enriched", F.lit(False))
+            # state split ignores empty states (cuDF groupby drops nulls —
+            # reference resolver.py:850-860 semantics)
+            rows = split_clusters_by(
+                rows.withColumn("_st", F.expr("nullif(addr_state, '')")),
+                "_st",
+                "final_cluster",
+            ).drop("_st")
+            rows = split_by_street_number_range(rows).localCheckpoint(eager=False)
+            # canonical name per cluster: V11 election over normalized names.
+            # Must run AFTER the street-number-range split — the split mints
+            # new final_cluster ids which would otherwise have no canonical
+            # row and be silently dropped by the inner join below.
+            canon_names = canonical_map(
+                rows, "final_cluster", "normalized_text"
+            ).withColumnsRenamed(
+                {"cluster": "final_cluster", "canonical_text": "_canon_norm"}
+            )
+            # C8: one canonical row per cluster; chain entities (same canonical
+            # name at several addresses) get ' - N' numbering (W2).
+            canon_table = number_chain_entities(
+                canon_names.join(
+                    best_address(rows, "final_cluster"), "final_cluster", "left"
+                ).select(
+                    "final_cluster",
+                    F.initcap(F.col("_canon_norm")).alias("canonical_name"),
+                    "canonical_address",
+                    "canonical_street_number",
+                    "canonical_street_name",
+                    "canonical_city",
+                    "canonical_state",
+                    "canonical_zip",
+                    "_canon_norm",
+                    "cluster_size",
+                )
+            ).localCheckpoint(eager=False)
+            jw = make_jw_udf(64)
+            out = (
+                rows.join(canon_table, "final_cluster")
+                .withColumn(
+                    "name_similarity", jw("normalized_text", F.col("_canon_norm"))
+                )
+                # address_confidence term (reference resolver.py:1104-1108):
+                # similarity of the row's address key to the cluster's canonical
+                .withColumn(
+                    "address_confidence",
+                    jw(
+                        "addr_normalized_key",
+                        F.coalesce("canonical_address", F.lit("")),
+                    ),
+                )
+                .drop("_canon_norm")
+                .localCheckpoint(eager=False)
+            )
+            out = out.join(cohesion_scores(out, "final_cluster"), "final_cluster")
+            # C10 full confidence formula (reference resolver.py:1086-1173,
+            # weights config.py:223-229)
+            c = cfg.confidence
+            size_factor = F.least(
+                F.log1p(F.col("cluster_size").cast("double")) / F.lit(math.log1p(10.0)),
+                F.lit(1.0),
+            )
+            base = (
+                c.avg_cluster_prob_weight * F.col("_row_prob")
+                + c.name_similarity_weight * F.col("name_similarity")
+                + c.address_confidence_weight * F.col("address_confidence")
+                + c.cohesion_weight * F.col("cohesion_score")
+                + c.cluster_size_weight * size_factor
+            )
+            # change magnitude vs the ORIGINAL entity string (resolver.py:1146-1160)
+            change = 1.0 - jw(
+                F.lower(F.col(entity_col)), F.lower(F.col("canonical_name"))
+            )
+            out = out.withColumn("_change", change)
+            # penalties: x0.9 drastic rename, x0.95 enriched address, x0.85 tiny
+            # cluster with a large rename
+            base = F.when(F.col("_change") > 0.5, base * 0.9).otherwise(base)
+            base = F.when(F.col("address_was_enriched"), base * 0.95).otherwise(base)
+            base = F.when(
+                (F.col("cluster_size") <= 2) & (F.col("_change") > 0.7), base * 0.85
+            ).otherwise(base)
+            conf = F.when(
+                F.col("cluster_size") == 1, 0.5 * F.col("name_similarity")
+            ).otherwise(base)
+            out = out.withColumn(
+                "confidence_score",
+                F.least(F.greatest(conf, F.lit(0.0)), F.lit(1.0)),
+            ).withColumn(
+                "confidence_category", confidence_bin(F.col("confidence_score"))
+            )
+            # C11 review reasons (reference resolver.py:1199-1227)
+            reasons = F.array_compact(
+                F.array(
+                    F.when(
+                        F.col("confidence_score") < c.review_confidence_threshold,
+                        F.lit("low_confidence"),
+                    ),
+                    F.when(F.col("_change") > 0.7, F.lit("drastic_change")),
+                    F.when(
+                        (F.col("cluster_size") == 1) & (F.col("_change") > 0.01),
+                        F.lit("single_member_change"),
+                    ),
+                    F.when(
+                        F.col("address_was_enriched")
+                        & (F.col("confidence_score") < 0.8),
+                        F.lit("enriched_low_conf"),
+                    ),
                 )
             )
-        )
-        edges = scored.where(F.col("score") >= self.entity_threshold).select(
-            "src", "dst", "score"
-        ).localCheckpoint(eager=False)
-        labels = connected_components(edges)
-        members = (
-            ent.join(
-                labels.withColumnsRenamed({"vertex": "doc_id", "component": "final_cluster"}),
-                "doc_id",
-                "left",
+            out = (
+                out.withColumn("needs_review", F.size(reasons) > 0)
+                .withColumn("review_reason", F.array_join(reasons, ","))
+                .drop("doc_id", "_change", "_row_prob", "reassign_score")
             )
-            .withColumn("final_cluster", F.coalesce("final_cluster", "doc_id"))
-            .localCheckpoint(eager=False)
-        )
-        # C3 validate membership + reassign (reference resolver.py:2334-2651)
-        if ccfg.validate_membership:
-            members = validate_reassign(
-                members,
-                id_col="doc_id",
-                cluster_col="final_cluster",
-                name_col="normalized_text",
-                addr_col="addr_normalized_key",
-                state_col="addr_state",
-                name_threshold=ccfg.name_match_threshold,
-                addr_threshold=ccfg.addr_match_threshold,
-                allow_neighboring_states=ccfg.allow_neighboring_states,
-                blocking_cfg=bcfg,
-            )
-        else:
-            members = members.withColumn(
-                "membership_status", F.lit("kept")
-            ).withColumn("reassign_score", F.lit(1.0))
-        # C5/G9 sampled-member merge with the J3 name∩addr gate (off by
-        # default; reference resolver.py:542-700)
-        if ccfg.merge_similar:
-            canon0 = canonical_map(
-                members.select("final_cluster", F.col("norm_text").alias("nt")),
-                "final_cluster",
-                "nt",
-            ).withColumnRenamed("cluster", "final_cluster")
-            addr0 = members.groupBy("final_cluster").agg(
-                F.max_by("addr_normalized_key", "doc_id").alias("canonical_address")
-            )
-            members = merge_similar_clusters(
-                members.withColumnRenamed("final_cluster", "cluster"),
-                canon0.withColumnRenamed("final_cluster", "cluster"),
-                cfg,
-                "cluster",
-                "norm_text",
-                canon_addr=addr0.withColumnRenamed("final_cluster", "cluster"),
-            ).withColumnRenamed("cluster", "final_cluster")
-        # C6: the same entity key never stays in two clusters
-        if ccfg.consolidate_identical:
-            members = consolidate_identical_entities(
-                members, "norm_text", "final_cluster"
-            )
-        members = members.localCheckpoint(eager=False)
-        # per-doc cluster_probability analog: mean incident kept-edge score
-        incident = (
-            edges.select(F.col("src").alias("doc_id"), "score")
-            .unionByName(edges.select(F.col("dst").alias("doc_id"), "score"))
-            .groupBy("doc_id")
-            .agg(F.avg("score").alias("_edge_prob"))
-        )
-        rows = prep.withColumn(
-            "doc_id",
-            F.xxhash64(
-                F.concat_ws(" ", "normalized_text", "addr_normalized_key")
-            ),
-        ).join(
-            members.select(
-                "doc_id", "final_cluster", "membership_status", "reassign_score"
-            ),
-            "doc_id",
-        ).join(incident, "doc_id", "left").withColumn(
-            # edge-less docs default to 1.0: they are either exact-duplicate
-            # collapses (merged by byte equality — full certainty) or true
-            # singletons (whose confidence uses the noise formula instead)
-            "_row_prob",
-            F.when(
-                F.col("membership_status").isin("reassigned", "rescued"),
-                F.col("reassign_score"),
-            ).otherwise(F.coalesce("_edge_prob", F.lit(1.0))),
-        ).drop("_edge_prob")
-        # C7 refine (reference resolver.py:784-899): address enrichment,
-        # then state split, then street-number-range split
-        if ccfg.enrich_addresses:
-            rows = enrich_addresses(rows, "final_cluster")
-        else:
-            rows = rows.withColumn("address_was_enriched", F.lit(False))
-        # state split ignores empty states (cuDF groupby drops nulls —
-        # reference resolver.py:850-860 semantics)
-        rows = split_clusters_by(
-            rows.withColumn("_st", F.expr("nullif(addr_state, '')")),
-            "_st",
-            "final_cluster",
-        ).drop("_st")
-        rows = split_by_street_number_range(rows).localCheckpoint(eager=False)
-        # canonical name per cluster: V11 election over normalized names.
-        # Must run AFTER the street-number-range split — the split mints new
-        # final_cluster ids which would otherwise have no canonical row and
-        # be silently dropped by the inner join below.
-        canon_names = canonical_map(
-            rows.select("final_cluster", F.col("normalized_text").alias("nt")),
-            "final_cluster",
-            "nt",
-        ).withColumnsRenamed({"cluster": "final_cluster", "canonical_text": "_canon_norm"})
-        # V12 best address per cluster (reference utils.py:168-207): unique
-        # candidates per key, completeness desc, freq desc, key asc; the
-        # winner's parsed components ride along (P7 split output).
-        freq = rows.groupBy("final_cluster", "addr_normalized_key").agg(
-            F.count("*").alias("_freq")
-        )
-        cand = rows.select(
-            "final_cluster", "addr_normalized_key", "addr_score",
-            "addr_street_number", "addr_street_name", "addr_city",
-            "addr_state", "addr_zip",
-        ).dropDuplicates(["final_cluster", "addr_normalized_key"])
-        best_addr = (
-            cand.join(freq, ["final_cluster", "addr_normalized_key"])
-            .withColumn(
-                "_rn",
-                F.row_number().over(
-                    Window.partitionBy("final_cluster").orderBy(
-                        F.desc("addr_score"), F.desc("_freq"),
-                        F.asc("addr_normalized_key"),
-                    )
-                ),
-            )
-            .where(F.col("_rn") == 1)
-            .select(
-                "final_cluster",
-                F.col("addr_normalized_key").alias("canonical_address"),
-                F.col("addr_street_number").alias("canonical_street_number"),
-                F.col("addr_street_name").alias("canonical_street_name"),
-                F.col("addr_city").alias("canonical_city"),
-                F.col("addr_state").alias("canonical_state"),
-                F.col("addr_zip").alias("canonical_zip"),
-            )
-        )
-        # C8: one canonical row per cluster; chain entities (same canonical
-        # name at several addresses) get ' - N' numbering (W2).
-        canon_table = number_chain_entities(
-            canon_names.join(best_addr, "final_cluster", "left").select(
-                "final_cluster",
-                F.initcap(F.col("_canon_norm")).alias("canonical_name"),
-                "canonical_address",
-                "canonical_street_number",
-                "canonical_street_name",
-                "canonical_city",
-                "canonical_state",
-                "canonical_zip",
-                "_canon_norm",
-                "cluster_size",
-            )
-        ).localCheckpoint(eager=False)
-        jw = make_jw_udf(64)
-        out = (
-            rows.join(canon_table, "final_cluster")
-            .withColumn(
-                "name_similarity", jw("normalized_text", F.col("_canon_norm"))
-            )
-            # address_confidence term (reference resolver.py:1104-1108):
-            # similarity of the row's address key to the cluster's canonical
-            .withColumn(
-                "address_confidence",
-                jw("addr_normalized_key", F.coalesce("canonical_address", F.lit(""))),
-            )
-            .drop("_canon_norm")
-            .localCheckpoint(eager=False)
-        )
-        # cohesion = 1 - std(name_similarity) per cluster (reference
-        # resolver.py:1113-1120); single-member clusters have no variation
-        cohesion = out.groupBy("final_cluster").agg(
-            F.coalesce(F.stddev_samp("name_similarity"), F.lit(0.0)).alias("_nv")
-        ).withColumn(
-            "cohesion_score",
-            F.least(F.greatest(1.0 - F.col("_nv"), F.lit(0.0)), F.lit(1.0)),
-        ).drop("_nv")
-        out = out.join(cohesion, "final_cluster")
-        # C10 full confidence formula (reference resolver.py:1086-1173,
-        # weights config.py:223-229)
-        c = cfg.confidence
-        size_factor = F.least(
-            F.log1p(F.col("cluster_size").cast("double")) / F.lit(math.log1p(10.0)),
-            F.lit(1.0),
-        )
-        base = (
-            c.avg_cluster_prob_weight * F.col("_row_prob")
-            + c.name_similarity_weight * F.col("name_similarity")
-            + c.address_confidence_weight * F.col("address_confidence")
-            + c.cohesion_weight * F.col("cohesion_score")
-            + c.cluster_size_weight * size_factor
-        )
-        # change magnitude vs the ORIGINAL entity string (resolver.py:1146-1160)
-        change = 1.0 - jw(F.lower(F.col(entity_col)), F.lower(F.col("canonical_name")))
-        out = out.withColumn("_change", change)
-        # penalties: x0.9 drastic rename, x0.95 enriched address, x0.85 tiny
-        # cluster with a large rename
-        base = F.when(F.col("_change") > 0.5, base * 0.9).otherwise(base)
-        base = F.when(F.col("address_was_enriched"), base * 0.95).otherwise(base)
-        base = F.when(
-            (F.col("cluster_size") <= 2) & (F.col("_change") > 0.7), base * 0.85
-        ).otherwise(base)
-        conf = F.when(
-            F.col("cluster_size") == 1, 0.5 * F.col("name_similarity")
-        ).otherwise(base)
-        out = out.withColumn(
-            "confidence_score",
-            F.least(F.greatest(conf, F.lit(0.0)), F.lit(1.0)),
-        ).withColumn("confidence_category", confidence_bin(F.col("confidence_score")))
-        # C11 review reasons (reference resolver.py:1199-1227)
-        reasons = F.array_compact(
-            F.array(
-                F.when(
-                    F.col("confidence_score") < c.review_confidence_threshold,
-                    F.lit("low_confidence"),
-                ),
-                F.when(F.col("_change") > 0.7, F.lit("drastic_change")),
-                F.when(
-                    (F.col("cluster_size") == 1) & (F.col("_change") > 0.01),
-                    F.lit("single_member_change"),
-                ),
-                F.when(
-                    F.col("address_was_enriched")
-                    & (F.col("confidence_score") < 0.8),
-                    F.lit("enriched_low_conf"),
-                ),
-            )
-        )
-        out = (
-            out.withColumn("needs_review", F.size(reasons) > 0)
-            .withColumn("review_reason", F.array_join(reasons, ","))
-            .drop("doc_id", "_change", "_row_prob", "reassign_score")
-        )
-        return out
+            return out
+
+        return ckpt.stage("e05_resolved", build_resolved)

@@ -16,6 +16,9 @@ Each stage optionally checkpoints to a parquet stage table with lineage
 rows (CheckpointManager) so a killed run resumes after the last committed
 stage. Stage order mirrors the reference's ``_process_pipeline``
 (resolver.py:1552-1642).
+
+``plans/entities.py`` imports the steps both plans run from here:
+:func:`label_clusters`, :func:`mean_incident_score`, :func:`cohesion_scores`.
 """
 
 from __future__ import annotations
@@ -45,6 +48,41 @@ def _cluster_sig(members: DataFrame) -> DataFrame:
         F.count("*").alias("_sig_n"),
         F.bit_xor(F.xxhash64("doc_id")).alias("_sig_x"),
     )
+
+
+def label_clusters(docs: DataFrame, edges: DataFrame, max_iterations: int) -> DataFrame:
+    """``docs`` plus ``cluster``: each doc's connected-component label over
+    ``edges``, or its own doc_id when no edge touches it."""
+    labels = connected_components(edges, max_iterations=max_iterations)
+    return docs.join(
+        labels.withColumnsRenamed({"vertex": "doc_id", "component": "cluster"}),
+        "doc_id",
+        "left",
+    ).withColumn("cluster", F.coalesce("cluster", "doc_id"))
+
+
+def mean_incident_score(edges: DataFrame, out_col: str) -> DataFrame:
+    """(doc_id, out_col): mean score of each doc's incident edges — the
+    cluster_probability analog (reference HDBSCAN probabilities,
+    resolver.py:450 → SURVEY G7)."""
+    return (
+        edges.select(F.col("src").alias("doc_id"), "score")
+        .unionByName(edges.select(F.col("dst").alias("doc_id"), "score"))
+        .groupBy("doc_id")
+        .agg(F.avg("score").alias(out_col))
+    )
+
+
+def cohesion_scores(rows: DataFrame, cluster_col: str) -> DataFrame:
+    """(cluster_col, cohesion_score): 1 - std of the members'
+    ``name_similarity`` clamped to [0, 1], 1 for a single member (reference
+    resolver.py:1113-1120)."""
+    return rows.groupBy(cluster_col).agg(
+        F.coalesce(F.stddev_samp("name_similarity"), F.lit(0.0)).alias("_nv")
+    ).withColumn(
+        "cohesion_score",
+        F.least(F.greatest(1.0 - F.col("_nv"), F.lit(0.0)), F.lit(1.0)),
+    ).drop("_nv")
 
 
 def prepare_documents(docs: DataFrame, cfg: ResolverConfig) -> DataFrame:
@@ -168,17 +206,10 @@ def resolve_documents(
     )
     edges = edges_above_threshold(scored, cfg.scoring.edge_threshold)
 
-    def build_clusters() -> DataFrame:
-        labels = connected_components(
-            edges, max_iterations=cfg.clustering.cc_max_iterations
-        )
-        return prepared.join(
-            labels.withColumnsRenamed({"vertex": "doc_id", "component": "cluster"}),
-            "doc_id",
-            "left",
-        ).withColumn("cluster", F.coalesce("cluster", "doc_id"))
-
-    clustered = ckpt.stage("04_clusters", build_clusters)
+    clustered = ckpt.stage(
+        "04_clusters",
+        lambda: label_clusters(prepared, edges, cfg.clustering.cc_max_iterations),
+    )
 
     def build_hygiene() -> DataFrame:
         from ..operators.hygiene import (
@@ -203,16 +234,9 @@ def resolve_documents(
                 ).select("src", "dst", "score"),
                 k=cfg.clustering.mutual_rank_k,
             )
-            labels_b = connected_components(
-                recall_edges, max_iterations=cfg.clustering.cc_max_iterations
+            b_full = label_clusters(
+                out.select("doc_id"), recall_edges, cfg.clustering.cc_max_iterations
             )
-            b_full = out.select("doc_id").join(
-                labels_b.withColumnsRenamed(
-                    {"vertex": "doc_id", "component": "cluster"}
-                ),
-                "doc_id",
-                "left",
-            ).withColumn("cluster", F.coalesce("cluster", "doc_id"))
             ens = ensemble_labels(out.select("doc_id", "cluster"), b_full)
             out = out.drop("cluster").join(ens, "doc_id")
         if cfg.clustering.attach_noise:
@@ -277,32 +301,15 @@ def resolve_documents(
             )
         else:
             canon = canonical_map(clustered, "cluster", "norm_text")
-        # cluster_probability analog: mean incident edge score per doc
-        # (reference HDBSCAN probabilities, resolver.py:450 → SURVEY G7).
-        incident = (
-            edges.select(F.col("src").alias("doc_id"), "score")
-            .unionByName(edges.select(F.col("dst").alias("doc_id"), "score"))
-            .groupBy("doc_id")
-            .agg(F.avg("score").alias("avg_pair_score"))
-        )
         jw = make_jw_udf(64)
         out = (
             clustered.join(canon, "cluster")
-            .join(incident, "doc_id", "left")
+            .join(mean_incident_score(edges, "avg_pair_score"), "doc_id", "left")
             .withColumn("avg_pair_score", F.coalesce("avg_pair_score", F.lit(1.0)))
             .withColumn("name_similarity", jw("norm_text", "canonical_text"))
             .localCheckpoint(eager=False)
         )
-        # cohesion = 1 - std of member name similarities (reference
-        # resolver.py:1113-1120) — a real dispersion measure, not an alias
-        # of name_similarity
-        cohesion = out.groupBy("cluster").agg(
-            F.coalesce(F.stddev_samp("name_similarity"), F.lit(0.0)).alias("_nv")
-        ).withColumn(
-            "cohesion_score",
-            F.least(F.greatest(1.0 - F.col("_nv"), F.lit(0.0)), F.lit(1.0)),
-        ).drop("_nv")
-        out = out.join(cohesion, "cluster")
+        out = out.join(cohesion_scores(out, "cluster"), "cluster")
         # C10-shaped confidence: weighted sum of name similarity, cluster
         # probability, log-size factor and cohesion
         # (reference resolver.py:1086-1173; address terms are absent for the

@@ -1,7 +1,8 @@
-"""The vectorized gram-code TF-IDF path must be BITWISE equal to the
-per-gram Python fallback: same tf counts in the same sorted vocabulary make
-idf/L2/X@X.T float-op sequences identical, so the V11 election (reference
-utils.py:28-62) cannot depend on which extractor ran."""
+"""The vectorized gram-code TF-IDF matrix must be BITWISE equal to the
+per-gram Python spec below: same tf counts in the same sorted vocabulary
+make idf/L2/X@X.T float-op sequences identical, so the V11 election
+(reference utils.py:28-62) is the spec's, for ASCII, any Unicode, NUL, and
+alphabets too large for uint64 codes."""
 
 import random
 import string
@@ -48,7 +49,7 @@ def _slow_matrix(names, n_lo=3, n_hi=5):
 def test_gram_codes_identity_and_order():
     # code identity == gram identity, uint64 order == lexicographic order
     s = "abcabx"
-    codes = _gram_codes(s, 3, 5)
+    codes = _gram_codes([s], 3, 5)[0]
     grams = []
     for n in range(3, 6):
         grams += [s[i : i + n] for i in range(len(s) - n + 1)]
@@ -87,12 +88,26 @@ def test_matrix_parity_edge_cases():
         assert np.array_equal(_tfidf_matrix(names), _slow_matrix(names))
 
 
-def test_unicode_falls_back_and_matches():
-    names = ["héllo wörld pãge", "hello world page", "日本語テキスト"]
+def test_unicode_and_nul_match():
+    for names in (
+        ["héllo wörld pãge", "hello world page", "日本語テキスト"],
+        ["a\x00b", "a", "ab\x00\x00", "\x00"],  # NUL sorts below every char
+    ):
+        assert np.array_equal(_tfidf_matrix(names), _slow_matrix(names))
+
+
+def test_large_alphabet_takes_python_int_codes():
+    # 7,500 distinct chars: (7500 + 1) ** 5 > 2 ** 64, so the codes are
+    # Python ints; order and identity must still match the spec
+    chars = [chr(0x4E00 + i) for i in range(7500)]
+    random.Random(5).shuffle(chars)
+    names = ["".join(chars[i : i + 1500]) for i in range(0, 7500, 1500)]
+    names += [names[0][:700] + names[1][:700], "ab"]
+    assert _gram_codes(names, 3, 5)[0].dtype == object
     assert np.array_equal(_tfidf_matrix(names), _slow_matrix(names))
 
 
-def test_election_unchanged_on_both_paths():
+def test_election_matches_spec():
     rng = random.Random(42)
     alphabet = string.ascii_lowercase + " "
     for _ in range(50):
@@ -113,21 +128,21 @@ def test_election_unchanged_on_both_paths():
 
 
 _ascii_name = st.text(
-    alphabet=st.characters(min_codepoint=1, max_codepoint=127), max_size=60
+    alphabet=st.characters(min_codepoint=0, max_codepoint=127), max_size=60
 )
 
 
 @settings(max_examples=150, deadline=None)
 @given(st.lists(_ascii_name, min_size=1, max_size=6))
 def test_matrix_bitwise_parity_hypothesis(names):
-    # any NUL-free ASCII input: fast path must equal the spec bit-for-bit
+    # any ASCII input, NUL included: equal to the spec bit-for-bit
     assert np.array_equal(_tfidf_matrix(names), _slow_matrix(names))
 
 
 @settings(max_examples=60, deadline=None)
 @given(
     st.lists(
-        st.text(max_size=40),  # full unicode, may force the fallback path
+        st.text(max_size=40),  # full unicode
         min_size=1,
         max_size=5,
     )

@@ -24,10 +24,24 @@ README_DATA = {
 
 
 @pytest.fixture(scope="module")
-def resolver(spark):
+def ckpt_dir(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("entity_ckpt"))
+
+
+@pytest.fixture(scope="module")
+def resolver(spark, ckpt_dir):
+    """The README fit commits its stage tables to ``ckpt_dir`` (see
+    test_checkpoint_resume_after_clusters)."""
+    import dataclasses
+
+    from gpu_entity_resolver_spark.config import ResolverConfig
     from gpu_entity_resolver_spark.plans.entities import EntityResolver
 
-    return EntityResolver(spark=spark)
+    base = ResolverConfig()
+    cfg = dataclasses.replace(
+        base, runtime=dataclasses.replace(base.runtime, checkpoint_dir=ckpt_dir)
+    )
+    return EntityResolver(config=cfg, spark=spark)
 
 
 @pytest.fixture(scope="module")
@@ -173,3 +187,33 @@ def test_report_and_review(resolver, resolved):
     assert rep["n_docs"] == 5 and rep["n_clusters"] == 2
     rev = resolver.get_review_dataframe()
     assert rev.count() >= 0
+
+
+def test_checkpoint_resume_after_clusters(resolver, resolved, ckpt_dir):
+    """The module fit ran with ``runtime.checkpoint_dir`` set, so each stage
+    committed a table. A fit resumed after ``e03_clusters`` (hygiene and
+    finalize rerun from the committed tables) returns the fresh fit's rows
+    in every column; floats within 1e-6, as in the resolve plan's
+    determinism test."""
+    import os
+    import shutil
+
+    from gpu_entity_resolver_spark.plans.entities import EntityResolver
+
+    assert sorted(os.listdir(ckpt_dir)) == [
+        "_lineage", "e01_prepared", "e02_edges", "e03_clusters",
+        "e04_hygiene", "e05_resolved",
+    ]
+    for stage in ("e04_hygiene", "e05_resolved"):
+        shutil.rmtree(os.path.join(ckpt_dir, stage))
+    resumed = EntityResolver(
+        config=resolver.config, spark=resolver._session()
+    ).fit_transform(pd.DataFrame(README_DATA))
+    assert os.path.isdir(os.path.join(ckpt_dir, "e05_resolved"))
+    pd.testing.assert_frame_equal(
+        resumed.sort_values("company_name").reset_index(drop=True),
+        resolved.sort_values("company_name").reset_index(drop=True),
+        check_exact=False,
+        rtol=0,
+        atol=1e-6,
+    )

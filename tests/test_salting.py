@@ -172,3 +172,22 @@ def test_host_keys_pair_and_salt(spark):
     assert (10, n_big) in got
     # salted, not all-pairs: 2 orders x (own + neighbor range)
     assert len(got) <= (n_big + 1) * cfg.max_block_size * 4 < n_big * (n_big + 1) // 2
+
+
+def test_cross_pairs_caps_hot_right_keys(spark):
+    """cross_pairs drops every block key held by more than max_block_size
+    right rows, so one shared text pairs a left doc with all 128 right docs
+    at cap 128 and with none of 129."""
+    from gpu_entity_resolver_spark.operators.blocking import cross_pairs
+
+    text = "acme trucking company 12 main street springfield"
+    left = spark.createDataFrame([(10_000, text)], "doc_id long, t string")
+    cfg = BlockingConfig(max_block_size=128)
+    for n_right, want in ((128, 128), (129, 0)):
+        right = spark.createDataFrame(
+            [(i, text) for i in range(n_right)], "cid long, name string"
+        )
+        pairs = cross_pairs(left, right, "doc_id", "cid", "t", "name", cfg)
+        got = {(r["src"], r["dst"]) for r in pairs.collect()}
+        assert len(got) == want, n_right
+        assert all(src == 10_000 for src, _ in got)

@@ -770,15 +770,22 @@ def assign_new_documents(
 
     ``new_docs``: (doc_id, norm_text); ``canon``: (cluster, canonical_text).
     Returns (doc_id, cluster, match_score, is_new_entity).
+    ``new_docs`` may be lazy and is evaluated once per call; the rep side
+    (rep block keys, IDF, rep vectors) is rebuilt from ``canon`` on every
+    call.
     """
     from .blocking import cross_pairs
     from .scoring import score_pairs
 
     cfg = cfg or ResolverConfig()
+    # Barrier: blocking (two key families), both doc-vector passes, the
+    # sketches and the output join all read the batch; without it each
+    # read reruns the caller's prepare chain (extraction, normalize UDFs).
+    new_docs = new_docs.select("doc_id", "norm_text").localCheckpoint(eager=False)
     reps = canon.select(
         F.col("cluster").alias("doc_id"), F.col("canonical_text").alias("norm_text")
     )
-    combined = new_docs.select("doc_id", "norm_text").unionByName(reps)
+    combined = new_docs.unionByName(reps)
     # only the (new x rep) pairs: blocking union(new, reps) would build
     # new x new and rep x rep pairs only to discard them
     nr = cross_pairs(

@@ -152,14 +152,15 @@ def score_pairs(
         ph_sim = F.lit(None).cast("double")
     max_len = F.greatest(F.length("t_a"), F.length("t_b"), F.lit(1))
     # Batched numpy Levenshtein (bit-equal to the JVM builtin it replaced —
-    # make_lev_udf). Materialized as a column FIRST so the expression below
-    # references the UDF output exactly once (the optimizer may duplicate a
-    # UDF referenced from several sub-expressions, guide §4.4). The kernel
-    # never returns -1; the sentinel guard is kept because a caller passing
+    # make_lev_udf). Marked nondeterministic so the optimizer cannot inline
+    # `_lev_raw` into both the band filter and the projection above it,
+    # which would run the kernel a second time on every kept pair; it runs
+    # once per cosine survivor (tests/test_plan_shapes.py). The kernel never
+    # returns -1; the sentinel guard is kept because a caller passing
     # longer-than-sketch texts would truncate, and clamping at max_len is
     # the safe direction (same rationale as the old threshold sentinel).
     with_texts = with_texts.withColumn(
-        "_lev_raw", make_lev_udf(3 * seg)("t_a", "t_b")
+        "_lev_raw", make_lev_udf(3 * seg).asNondeterministic()("t_a", "t_b")
     )
     lev_raw = F.col("_lev_raw")
     lev = F.least(

@@ -172,7 +172,11 @@ class EntityResolver:
         was_pandas = isinstance(df, pd.DataFrame)
         spark = self._session()
         sdf = spark.createDataFrame(df) if was_pandas else df
-        prep = self._prepare(sdf, entity_col, address_col)
+        # `new` (into assign) and `out` both read prep: the barrier runs the
+        # normalize and address-parse UDFs once
+        prep = self._prepare(sdf, entity_col, address_col).localCheckpoint(
+            eager=False
+        )
         new = prep.select(
             F.xxhash64("normalized_text", "addr_normalized_key").alias("doc_id"),
             F.concat_ws(" ", "normalized_text", "addr_normalized_key").alias(

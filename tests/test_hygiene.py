@@ -122,3 +122,37 @@ def test_assign_new_documents(spark):
     out = {r["doc_id"]: r for r in assign_new_documents(spark, new, canon).collect()}
     assert out[7]["cluster"] == 100 and not out[7]["is_new_entity"]
     assert out[8]["cluster"] == 8 and out[8]["is_new_entity"]
+
+
+def test_assign_new_documents_reads_batch_once(spark):
+    # a lazy batch whose norm_text passes through a counting UDF: every
+    # consumer inside assign (both key families, both doc-vector passes,
+    # the sketches, the output join) must read one evaluation of it
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf("string")
+    def counted(s: pd.Series) -> pd.Series:
+        seen.add(len(s))
+        return s
+
+    canon = spark.createDataFrame(
+        [
+            (100, "the quick brown fox jumps over the lazy dog today"),
+            (200, "acme widget company main street springfield"),
+        ],
+        "cluster long, canonical_text string",
+    )
+    texts = [
+        "the quick brown fox jumps over the lazy dog today",
+        "the quick brown fox jumped over a lazy dog today",
+        "acme widget company main street springfield",
+        "acme widgets co main st springfield",
+        "completely unrelated zebra text with nothing shared qq",
+    ]
+    new = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, raw string"
+    ).select("doc_id", counted("raw").alias("norm_text"))
+    out = assign_new_documents(spark, new, canon).collect()
+    assert sorted(r["doc_id"] for r in out) == list(range(len(texts)))
+    assert {r["doc_id"]: r["cluster"] for r in out if not r["is_new_entity"]}[0] == 100
+    assert seen.value == len(texts)

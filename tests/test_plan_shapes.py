@@ -44,3 +44,45 @@ def test_no_cartesian_product(spark, sf_dir, name):
     assert "CartesianProduct" not in _explain(
         entry_mod.queries()[name](spark, sf_dir)
     )
+
+
+def _final_plan(df) -> str:
+    """The physical plan that ran: with AQE on, the adaptive root's final
+    plan, not the initial one it also prints."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+@pytest.mark.parametrize("entity", [False, True], ids=["corpus", "entity"])
+def test_score_pairs_runs_levenshtein_once(spark, entity):
+    """The Levenshtein UDF feeds both the JW band filter and the output
+    projection; the plan must evaluate it in one ArrowEvalPython node, not
+    once under the filter and again over the kept rows."""
+    from gpu_entity_resolver_spark.config import ResolverConfig
+    from gpu_entity_resolver_spark.operators.scoring import score_pairs
+    from gpu_entity_resolver_spark.plans.entities import _entity_scoring_config
+
+    # the entity plan scores with the phonetic signal on and band floor 0.0
+    cfg = (
+        _entity_scoring_config(ResolverConfig()) if entity
+        else ResolverConfig().scoring
+    )
+    docs = spark.createDataFrame(
+        list(enumerate([
+            "acme corporation main street", "acme corp main st",
+            "acme corporation main st", "zebra holdings", "zebra holding co",
+        ])),
+        "doc_id long, norm_text string",
+    )
+    pairs = spark.createDataFrame(
+        [(a, b) for a in range(5) for b in range(a + 1, 5)], "src long, dst long"
+    )
+    nodes = [
+        ln for ln in _final_plan(score_pairs(pairs, docs, cfg=cfg)).splitlines()
+        if "ArrowEvalPython" in ln
+    ]
+    assert sum("lev(" in ln for ln in nodes) == 1, nodes
+    assert sum("jw(" in ln for ln in nodes) == 1, nodes

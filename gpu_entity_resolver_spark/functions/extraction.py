@@ -45,17 +45,20 @@ def extract_text_series(html_bytes: pd.Series) -> pd.Series:
 # DataType instance (not DDL string): keeps the module importable without an
 # active SparkSession (DDL strings are parsed through the JVM at decoration).
 @pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return extract_text_series(html)
+def extract_text_udf(html: pd.Series, text: pd.Series) -> pd.Series:
+    """The extraction of ``html`` where it is non-null, else ``text``
+    (null as ""). :func:`extracted_text` nulls the html of rows whose
+    stored text it keeps, so this one test picks the branch."""
+    return extract_text_series(html).where(html.notna(), text.fillna(""))
 
 
 def extracted_text(html_col: Column, text_col: Column) -> Column:
-    """Prefer the stored ground-truth extraction when present; otherwise run
-    the UDF. Spark evaluates the UDF's input for every row regardless of the
-    CASE branch taken, so html is nulled out when text exists — the Python
-    worker still sees every row, but the Arrow transfer carries nulls instead
-    of full html bodies for rows that don't need extraction."""
+    """Prefer the stored ground-truth extraction when present (non-null,
+    non-empty); otherwise extract the html. The choice is made inside the
+    UDF rather than by a CASE around it: a CASE between this UDF and a UDF
+    that reads it (the normalizer) keeps Spark from chaining the two, and
+    each unchained UDF starts its own Python runner per partition
+    (TUNING.md, "Python worker floor"). html is nulled where the stored
+    text is kept, so the Arrow transfer carries no unneeded bodies."""
     need = text_col.isNull() | (text_col == "")
-    return F.when(~need, text_col).otherwise(
-        extract_text_udf(F.when(need, html_col))
-    )
+    return extract_text_udf(F.when(need, html_col), text_col)

@@ -770,9 +770,11 @@ def assign_new_documents(
 
     ``new_docs``: (doc_id, norm_text); ``canon``: (cluster, canonical_text).
     Returns (doc_id, cluster, match_score, is_new_entity).
-    ``new_docs`` may be lazy and is evaluated once per call; the rep side
-    (rep block keys, IDF, rep vectors) is rebuilt from ``canon`` on every
-    call.
+    ``new_docs`` may be lazy: it is rebalanced and evaluated once per call,
+    behind one barrier, so the batch's Python passes (block keys, DF
+    partials, vectors) run over partitions AQE sizes from the batch's
+    shuffled bytes instead of the caller's partitions. The rep side (rep
+    block keys, IDF, rep vectors) is rebuilt from ``canon`` on every call.
     """
     from .blocking import cross_pairs
     from .scoring import score_pairs
@@ -781,7 +783,16 @@ def assign_new_documents(
     # Barrier: blocking (two key families), both doc-vector passes, the
     # sketches and the output join all read the batch; without it each
     # read reruns the caller's prepare chain (extraction, normalize UDFs).
-    new_docs = new_docs.select("doc_id", "norm_text").localCheckpoint(eager=False)
+    # The rebalance costs one shuffle of (doc_id, norm_text) and lets AQE
+    # size the batch's partitions from its bytes: a small batch spread
+    # over many partitions becomes one, so each Python pass over it pays
+    # the worker floor once, not once per inherited partition (TUNING.md,
+    # "Python worker floor", which also gives the large-batch timings).
+    new_docs = (
+        new_docs.select("doc_id", "norm_text")
+        .hint("rebalance")
+        .localCheckpoint(eager=False)
+    )
     reps = canon.select(
         F.col("cluster").alias("doc_id"), F.col("canonical_text").alias("norm_text")
     )

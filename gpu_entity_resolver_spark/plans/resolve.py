@@ -1,7 +1,8 @@
 """The flagship end-to-end resolve pipeline (SURVEY.md §7.1):
 
 documents(url, warc_ts, html, text, lang)
-  1 EXTRACT+NORMALIZE  byte-identical html→text UDF; P1 normalization;
+  1 EXTRACT+NORMALIZE  byte-identical html→text UDF chained into the
+                       P1 normalization UDF (one Arrow runner);
                        doc_id = xxhash64(url)
   2 BLOCK              MinHash-LSH bands ∪ sorted-neighborhood keys
                        (blocking_plan), hot blocks salted
@@ -93,7 +94,9 @@ def prepare_documents(docs: DataFrame, cfg: ResolverConfig) -> DataFrame:
     ride every stage checkpoint, hygiene join and the finalize chain even
     though nothing after this stage reads them — at 128 k docs that was
     ~300 MB of dead weight per materialization (guide §2.3: project before
-    the exchange; §8: don't carry payload the decisions never touch)."""
+    the exchange; §8: don't carry payload the decisions never touch).
+    The normalize UDF reads the extraction UDF directly, so Spark chains
+    the two into one Arrow runner per partition, not two."""
     body = extracted_text(F.col("html"), F.col("text"))
     # doc_id is a 64-bit hash of the url: n distinct urls give about
     # n^2 / 2^65 expected colliding pairs, ~2.7 at 10^10 docs and ~27k at

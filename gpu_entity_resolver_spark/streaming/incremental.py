@@ -35,8 +35,15 @@ def normalize_stream(stream: DataFrame, cfg: ResolverConfig | None = None) -> Da
         body.alias("body_text"),
     ).withColumn(
         "norm_text",
+        # The body is also an output, so the normalizer reads the extracted
+        # column across an expression: chained straight onto the extraction
+        # UDF, the Python worker would extract every row a second time for
+        # the chain. The coalesce (a no-op: extraction never returns null)
+        # costs a second Python runner per partition instead.
         normalize_entity_text(
-            F.col("body_text"), cfg.replacements, cfg.suffixes_to_remove
+            F.coalesce(F.col("body_text"), F.lit("")),
+            cfg.replacements,
+            cfg.suffixes_to_remove,
         ),
     ).withColumn("fingerprint", doc_fingerprint(F.col("body_text")))
 
@@ -60,6 +67,32 @@ def streaming_exact_dedup(
     )
 
 
+def assign_micro_batch(
+    spark: SparkSession,
+    batch_df: DataFrame,
+    batch_id: int,
+    canon: DataFrame,
+    output_path: str,
+    cfg: ResolverConfig,
+) -> None:
+    """One ``foreachBatch`` step of :func:`incremental_assign_sink`: assign
+    the micro-batch's documents against ``canon`` and append the result,
+    tagged with ``batch_id``, to ``output_path``; an empty batch writes
+    nothing. The ``(doc_id, norm_text)`` projection sits behind one barrier
+    before the emptiness probe, so the probe and the assign share one
+    evaluation of the micro-batch: its source read and everything upstream
+    that decides its rows run once."""
+    from ..operators.hygiene import assign_new_documents
+
+    batch = batch_df.select("doc_id", "norm_text").localCheckpoint(eager=False)
+    if batch.isEmpty():
+        return
+    assigned = assign_new_documents(spark, batch, canon, cfg).withColumn(
+        "batch_id", F.lit(batch_id)
+    )
+    assigned.write.mode("append").parquet(output_path)
+
+
 def incremental_assign_sink(
     spark: SparkSession,
     stream: DataFrame,
@@ -70,25 +103,16 @@ def incremental_assign_sink(
 ):
     """Assign arriving documents to existing clusters per micro-batch
     (C13 via ``foreachBatch`` — the canonical pattern for joining a stream
-    against engine logic that needs blocking + scoring + windows).
+    against engine logic that needs blocking + scoring + windows); each
+    micro-batch runs :func:`assign_micro_batch`.
 
     Returns the started StreamingQuery.
     """
-    from ..operators.hygiene import assign_new_documents
-
     cfg = cfg or ResolverConfig()
     canon = canon.localCheckpoint(eager=False)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        assigned = assign_new_documents(
-            spark,
-            batch_df.select("doc_id", "norm_text"),
-            canon,
-            cfg,
-        ).withColumn("batch_id", F.lit(batch_id))
-        assigned.write.mode("append").parquet(output_path)
+        assign_micro_batch(spark, batch_df, batch_id, canon, output_path, cfg)
 
     return (
         normalize_stream(stream, cfg)

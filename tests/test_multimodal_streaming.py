@@ -130,3 +130,69 @@ def test_incremental_assign_sink(spark):
         assert by_new == {True, False}
         matched = [r for r in got.values() if not r["is_new_entity"]][0]
         assert matched["cluster"] == 100
+
+
+def test_assign_micro_batch_reads_batch_once(spark):
+    """The emptiness probe and the assign read one evaluation of the
+    micro-batch; an empty micro-batch writes nothing. Spark prunes unused
+    UDF columns from the probe and drops the accumulator updates of a task
+    that the probe's limit stops early, so the counting UDF feeds a filter
+    (the probe must evaluate it) and records each call in a file."""
+    import uuid
+
+    import pandas as pd
+
+    from gpu_entity_resolver_spark.config import ResolverConfig
+    from gpu_entity_resolver_spark.streaming.incremental import (
+        assign_micro_batch,
+    )
+
+    canon = spark.createDataFrame(
+        [(100, "the quick brown fox jumps over the lazy dog today")],
+        "cluster long, canonical_text string",
+    )
+    texts = [
+        "the quick brown fox jumps over the lazy dog today",
+        "the quick brown fox jumped over a lazy dog today",
+        "zebra unrelated content entirely qq",
+    ]
+    cfg = ResolverConfig()
+    with tempfile.TemporaryDirectory(prefix="assign_batch_") as d:
+        calls = os.path.join(d, "calls")
+        os.makedirs(calls)
+
+        @F.pandas_udf("string")
+        def counted(s: pd.Series) -> pd.Series:
+            with open(os.path.join(calls, uuid.uuid4().hex), "w") as f:
+                f.write(str(len(s)))
+            return s
+
+        # nondeterministic: the filter stays above the UDF instead of being
+        # pushed below it as a second evaluation
+        batch = (
+            spark.createDataFrame(
+                list(enumerate(texts)), "doc_id long, raw string"
+            )
+            .repartition(3)
+            .select(
+                "doc_id",
+                counted.asNondeterministic()("raw").alias("norm_text"),
+                F.lit("x").alias("url"),
+            )
+            .where(F.col("norm_text") != "")
+        )
+        out = os.path.join(d, "out")
+        assign_micro_batch(spark, batch, 3, canon, out, cfg)
+        evaluated = 0
+        for name in os.listdir(calls):
+            with open(os.path.join(calls, name)) as f:
+                evaluated += int(f.read())
+        assert evaluated == len(texts)
+        got = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
+        assert sorted(got) == list(range(len(texts)))
+        assert {r["batch_id"] for r in got.values()} == {3}
+        assert got[0]["cluster"] == 100 and not got[0]["is_new_entity"]
+
+        empty_out = os.path.join(d, "empty")
+        assign_micro_batch(spark, batch.limit(0), 4, canon, empty_out, cfg)
+        assert not os.path.exists(empty_out)

@@ -93,3 +93,69 @@ def test_fused_equals_jvm_chain_unfusable_dict(spark):
         normalize_entity_text_expr(F.col("t"), reps, ()).alias("jvm"),
     )
     assert out.where(F.col("fused") != F.col("jvm")).count() == 0
+
+
+def test_prepare_documents_equals_extract_then_normalize(spark):
+    """prepare_documents' norm_text equals, row for row, the stored text
+    where it is non-null and non-empty, else the extraction of the html,
+    then normalized; the streaming intake gives the same norm_text."""
+    import pandas as pd
+
+    from gpu_entity_resolver_spark.config import ResolverConfig
+    from gpu_entity_resolver_spark.functions.extraction import (
+        extract_text_series,
+    )
+    from gpu_entity_resolver_spark.plans.resolve import prepare_documents
+    from gpu_entity_resolver_spark.streaming.incremental import (
+        normalize_stream,
+    )
+
+    html = (
+        b"<html><head><script>var x = '<b>Acme</b>';</script>"
+        b"<style>p {color: red}</style></head><body><!-- Zebra Co -->"
+        b"<p>Smith &amp;lt; Sons &amp; Co (est 1901) Inc</p> 42</body></html>"
+    )
+    rows = [
+        ("http://t/present", html, "Stored Text & Sons LLC 7"),
+        ("http://t/empty", html, ""),
+        ("http://t/null", html, None),
+        ("http://t/both-null", None, None),
+        ("http://t/empty-no-html", None, ""),
+        ("http://t/plain", b"<p>Acme&nbsp;Corp dba Widget Svc Ctr</p>", None),
+    ]
+    docs = spark.createDataFrame(
+        [(u, None, h, t, "en") for u, h, t in rows],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    ).repartition(3)
+    cfg = ResolverConfig()
+    got = {
+        r["url"]: r["norm_text"]
+        for r in prepare_documents(docs, cfg).collect()
+    }
+    bodies = spark.createDataFrame(
+        [
+            (u, t if t else extract_text_series(pd.Series([h]))[0])
+            for u, h, t in rows
+        ],
+        "url string, body string",
+    )
+    want = {
+        r["url"]: r["n"]
+        for r in bodies.select(
+            "url",
+            normalize_entity_text(
+                F.col("body"), cfg.replacements, cfg.suffixes_to_remove
+            ).alias("n"),
+        ).collect()
+    }
+    assert got == want
+    assert got["http://t/present"] == "stored text and sons"
+    assert got["http://t/both-null"] == ""
+    # the script, style and comment bodies never reach the text
+    assert "acme" not in got["http://t/empty"]
+    assert "zebra" not in got["http://t/null"]
+    streamed = {
+        r["url"]: r["norm_text"]
+        for r in normalize_stream(docs, cfg).collect()
+    }
+    assert streamed == got

@@ -86,3 +86,117 @@ def test_score_pairs_runs_levenshtein_once(spark, entity):
     ]
     assert sum("lev(" in ln for ln in nodes) == 1, nodes
     assert sum("jw(" in ln for ln in nodes) == 1, nodes
+
+
+def _executions(spark) -> list:
+    """(id, execution record) of each SQL execution so far, once the
+    listener bus has delivered the AQE final-plan updates."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [(e.executionId(), e) for e in (ex.apply(i) for i in range(ex.size()))]
+
+
+def _assign_inputs(spark):
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    @F.pandas_udf("string")
+    def batch_marker(s: pd.Series) -> pd.Series:
+        return s
+
+    canon = spark.createDataFrame(
+        [
+            (100, "the quick brown fox jumps over the lazy dog today"),
+            (200, "acme widget company main street springfield"),
+        ],
+        "cluster long, canonical_text string",
+    )
+    texts = [
+        "the quick brown fox jumps over the lazy dog today",
+        "the quick brown fox jumped over a lazy dog today",
+        "acme widget company main street springfield",
+        "acme widgets co main st springfield",
+        "completely unrelated zebra text with nothing shared qq",
+        "acme widget company main street springfield annex",
+    ]
+    batch = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, raw string"
+    ).select("doc_id", batch_marker("raw").alias("norm_text"))
+    return batch, canon
+
+
+def test_assign_batch_rebalanced_under_its_barrier(spark):
+    """assign_new_documents rebalances the batch inside its barrier, so
+    AQE can coalesce a small batch to one partition and each Python pass
+    over it starts one worker, not one per inherited partition."""
+    from gpu_entity_resolver_spark.operators.hygiene import assign_new_documents
+
+    batch, canon = _assign_inputs(spark)
+    before = max((eid for eid, _ in _executions(spark)), default=-1)
+    assign_new_documents(spark, batch.repartition(8), canon).collect()
+    plans = [
+        e.physicalPlanDescription() for eid, e in _executions(spark)
+        if eid > before and e.description().startswith("localCheckpoint")
+    ]
+    barriers = [plan for plan in plans if "batch_marker(" in plan]
+    assert len(barriers) == 1, barriers
+    (plan,) = barriers
+    assert "REBALANCE_PARTITIONS" in plan, plan
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert "AQEShuffleRead" in final, plan
+
+
+def test_assign_rows_invariant_to_batch_partitioning(spark):
+    from gpu_entity_resolver_spark.operators.hygiene import assign_new_documents
+
+    batch, canon = _assign_inputs(spark)
+    cols = ["doc_id", "cluster", "match_score", "is_new_entity"]
+    spread, single = (
+        sorted(
+            tuple(r) for r in
+            assign_new_documents(spark, b, canon).select(*cols).collect()
+        )
+        for b in (batch.repartition(8), batch.coalesce(1))
+    )
+    assert spread == single
+    assert any(not r[3] for r in spread) and any(r[3] for r in spread)
+
+
+def test_prepare_documents_runs_one_python_node(spark):
+    """Extraction and normalization run in one ArrowEvalPython node: the
+    normalize UDF reads the extraction UDF directly, so Spark chains them
+    into one Python runner per partition (a CASE between them would split
+    them into two nodes)."""
+    from gpu_entity_resolver_spark.config import ResolverConfig
+    from gpu_entity_resolver_spark.plans.resolve import prepare_documents
+
+    docs = spark.createDataFrame(
+        [
+            ("http://t/1", None, b"<p>Acme Corp</p>", None, "en"),
+            ("http://t/2", None, None, "Zebra Holdings LLC", "en"),
+        ],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    nodes = [
+        ln for ln in
+        _final_plan(prepare_documents(docs, ResolverConfig())).splitlines()
+        if "ArrowEvalPython" in ln
+    ]
+    assert len(nodes) == 1, nodes
+
+
+def test_normalize_stream_extracts_once(spark):
+    """normalize_stream outputs the body and normalizes it: the plan must
+    run the extraction UDF once per row, not a second time chained under
+    the normalizer."""
+    from gpu_entity_resolver_spark.streaming.incremental import normalize_stream
+
+    docs = spark.createDataFrame(
+        [
+            ("http://t/1", None, b"<p>Acme Corp</p>", None, "en"),
+            ("http://t/2", None, None, "Zebra Holdings LLC", "en"),
+        ],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    plan = _final_plan(normalize_stream(docs))
+    assert plan.count("extract_text_udf(") == 1, plan

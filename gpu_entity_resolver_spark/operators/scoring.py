@@ -7,15 +7,17 @@ reference's stream energy proportions become score weights — SURVEY.md V6):
   table, then a JVM dot product over two equi-joins
   (shingles.doc_vector_table + pair_cosine_vecs), re-expressing reference
   utils.py:211-232;
-- Jaro-Winkler — Arrow-batched pandas UDF over the numpy kernel
-  (functions/simfns.py), no per-row Python;
-- Levenshtein ratio — Arrow-batched pandas UDF over the numpy Myers
-  bit-parallel kernel (functions/simfns.levenshtein_batch), distances
-  equal to Spark's builtin ``levenshtein``.
+- Levenshtein ratio and Jaro-Winkler — the numpy kernels of
+  functions/simfns.py (Myers distances equal Spark's builtin
+  ``levenshtein``), run in ONE ``mapInPandas`` pass over the cosine
+  survivors, JW only where the decision band needs it.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,21 +36,45 @@ def make_jw_udf(max_chars: int = 64):
     return jw
 
 
-def make_lev_udf(max_chars: int):
-    """Arrow-batched exact Levenshtein (functions/simfns.levenshtein_batch:
-    Myers' bit-parallel kernel vectorized across pairs; see its docstring
-    for the measured per-pair cost).
+def _score_kernel(cfg: ScoringConfig, max_chars: int):
+    """Phase 2 of :func:`score_pairs` as one mapInPandas batch function:
+    Levenshtein on every (t_a, t_b) row, then Jaro-Winkler only on rows
+    whose partial score plus a perfect JW reaches the band floor; yields
+    the exact rows. The float64 op order is fixed — partial = (w_tfidf *
+    cos + w_lev * lev_ratio + w_ph * ph) / total_w, score = partial +
+    jw_share * jw — and tests/test_round3.py recomputes it bit for bit."""
+    total_w = (
+        cfg.tfidf_weight
+        + cfg.jaro_winkler_weight
+        + cfg.levenshtein_weight
+        + cfg.phonetic_weight
+    )
+    jw_share = cfg.jaro_winkler_weight / total_w
 
-    Distances are bit-equal to Spark's builtin ``levenshtein()``
-    (tests/test_levenshtein.py). ``max_chars`` must bound the longest input
-    for that parity — the scorer's sketches are <= 3*sketch_chars by
-    construction."""
+    def score_sketch_pairs(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            a, b = pdf["t_a"].fillna(""), pdf["t_b"].fillna("")
+            lev = levenshtein_batch(a, b, max_chars=max_chars)
+            lev_ratio = 1.0 - lev / np.maximum(
+                np.maximum(a.str.len(), b.str.len()), 1
+            ).to_numpy()
+            partial = (
+                cfg.tfidf_weight * pdf["tfidf_cos"].to_numpy()
+                + cfg.levenshtein_weight * lev_ratio
+                + cfg.phonetic_weight * pdf["ph_sim"].fillna(0.0).to_numpy()
+            ) / total_w
+            keep = partial + jw_share >= cfg.jw_decision_band
+            jw = jaro_winkler(a[keep], b[keep], max_chars=max_chars)
+            yield pdf.loc[keep, ["src", "dst", "tfidf_cos"]].assign(
+                lev_ratio=lev_ratio[keep],
+                jw=jw,
+                ph_sim=pdf["ph_sim"][keep],
+                score=partial[keep] + jw_share * jw,
+            )
 
-    @pandas_udf("int")
-    def lev(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(levenshtein_batch(a, b, max_chars=max_chars))
-
-    return lev
+    return score_sketch_pairs
 
 
 def content_sketch(col, seg: int):
@@ -126,12 +152,15 @@ def score_pairs(
     )
     cos = pair_cosine_vecs(pairs, vecs)
 
-    # Phase 2 — JW + Levenshtein only for pairs passing the cosine
-    # prefilter. This is the reference's centroid-prefilter pattern
-    # (utils.py:602-621) applied to edit distances: on web corpora the
-    # overwhelming majority of candidate pairs have near-zero shingle
-    # cosine and cannot be duplicates; skipping their quadratic edit
-    # kernels is the dominant scoring cost lever.
+    # Phase 2 — one Python pass (_score_kernel) over the pairs passing the
+    # cosine prefilter: the reference's centroid-prefilter pattern
+    # (utils.py:602-621) applied to edit distances. On web corpora most
+    # candidate pairs have near-zero shingle cosine and cannot be
+    # duplicates; skipping their quadratic edit kernels is the dominant
+    # scoring cost lever. Every kept pair, confident ones included, gets an
+    # exact JW: mean/median/rank consumers (attach_singletons' neighbor
+    # means, merge_similar_clusters' median, mutual-rank orderings,
+    # avg_pair_score -> confidence) read score values.
     survivors = cos.where(F.col("tfidf_cos") >= cfg.cosine_prefilter)
     side_cols = ["doc_id", "t"] + (["ph"] if use_ph else [])
     sketches = texts.select(*side_cols)
@@ -150,63 +179,12 @@ def score_pairs(
         ).otherwise(F.lit(0.0))
     else:
         ph_sim = F.lit(None).cast("double")
-    max_len = F.greatest(F.length("t_a"), F.length("t_b"), F.lit(1))
-    # Batched numpy Levenshtein (bit-equal to the JVM builtin it replaced —
-    # make_lev_udf). Marked nondeterministic so the optimizer cannot inline
-    # `_lev_raw` into both the band filter and the projection above it,
-    # which would run the kernel a second time on every kept pair; it runs
-    # once per cosine survivor (tests/test_plan_shapes.py). The kernel never
-    # returns -1; the sentinel guard is kept because a caller passing
-    # longer-than-sketch texts would truncate, and clamping at max_len is
-    # the safe direction (same rationale as the old threshold sentinel).
-    with_texts = with_texts.withColumn(
-        "_lev_raw", make_lev_udf(3 * seg).asNondeterministic()("t_a", "t_b")
-    )
-    lev_raw = F.col("_lev_raw")
-    lev = F.least(
-        F.when(lev_raw < 0, max_len.cast("int")).otherwise(lev_raw),
-        max_len.cast("int"),
-    )
-    jw_udf = make_jw_udf(max_chars=3 * seg)
-    total_w = (
-        cfg.tfidf_weight
-        + cfg.jaro_winkler_weight
-        + cfg.levenshtein_weight
-        + cfg.phonetic_weight
-    )
-    ph_term = cfg.phonetic_weight * F.coalesce(F.col("ph_sim"), F.lit(0.0))
-    # Phase 2b — decision-band JW. The partial (tfidf + lev + phonetic)
-    # score is pure JVM; the memory-bandwidth-bound numpy JW kernel runs
-    # only where the partial plus a perfect JW reaches the floor. The
-    # skipped low side is where the candidate volume lives (sub-threshold
-    # garbage pairs); every kept pair, confident ones included, gets an
-    # exact JW, because mean/median/rank consumers (attach_singletons'
-    # neighbor means, merge_similar_clusters' median, mutual-rank
-    # orderings, avg_pair_score -> confidence) read score values.
-    jw_share = cfg.jaro_winkler_weight / total_w
-    return (
-        with_texts.select(
-            "src",
-            "dst",
-            "tfidf_cos",
-            (1.0 - lev / max_len).alias("lev_ratio"),
-            ph_sim.alias("ph_sim"),
-            "t_a",
-            "t_b",
-        )
-        .withColumn(
-            "_partial",
-            (
-                cfg.tfidf_weight * F.col("tfidf_cos")
-                + cfg.levenshtein_weight * F.col("lev_ratio")
-                + ph_term
-            )
-            / F.lit(total_w),
-        )
-        .where(F.col("_partial") + F.lit(jw_share) >= F.lit(cfg.jw_decision_band))
-        .withColumn("jw", jw_udf("t_a", "t_b"))
-        .withColumn("score", F.col("_partial") + F.lit(jw_share) * F.col("jw"))
-        .select("src", "dst", "tfidf_cos", "lev_ratio", "jw", "ph_sim", "score")
+    return with_texts.select(
+        "src", "dst", "tfidf_cos", ph_sim.alias("ph_sim"), "t_a", "t_b"
+    ).mapInPandas(
+        _score_kernel(cfg, max_chars=3 * seg),
+        "src long, dst long, tfidf_cos double, lev_ratio double, jw double, "
+        "ph_sim double, score double",
     )
 
 

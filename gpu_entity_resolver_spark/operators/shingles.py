@@ -226,6 +226,7 @@ def doc_vector_table(
     min_df: int = 1,
     top_k: int | None = 128,
     broadcast_max_terms: int = 4_000_000,
+    broadcast_max_docs: int = 400_000,
 ) -> DataFrame:
     """One (doc_id, vec: map<long,float>) row per doc — same result as
     ``doc_vectors(tfidf_weights(...))`` but built MAP-SIDE when the distinct
@@ -242,6 +243,18 @@ def doc_vector_table(
 
     Vocabularies larger than ``broadcast_max_terms`` (possible at web scale
     with unbounded unicode grams) fall back to the join form.
+
+    The table is returned behind a barrier (it feeds both side joins of
+    :func:`pair_cosine_vecs`; without it the whole vector build, term counts
+    included, runs twice). Join strategy (guide §3.1): a sort-merge pick
+    would shuffle the PAIRS twice, the second time with the ~600-byte
+    ``vec_a`` map attached, and the planner's estimate of an opaque
+    mapInPandas or collect_list output can flip to it. The corpus size is
+    known here on both paths, so at or below ``broadcast_max_docs`` (~250 MB
+    built at top_k=48, far under the 8 GB broadcast cap) the table carries
+    an explicit broadcast hint, and ReuseExchange ships one build for both
+    joins. Larger tables keep the planner's choice. Strategy never changes
+    values.
     """
     widths = _widths(n_lo, n_hi)
     dfreq = (
@@ -261,11 +274,16 @@ def doc_vector_table(
     pdf = dfreq.limit(broadcast_max_terms + 1).unionByName(sentinel).toPandas()
     n_docs = int(pdf.loc[pdf["h"] == -1, "df"].iloc[0])
     pdf = pdf[pdf["h"] != -1]
+
+    def barrier(vecs: DataFrame) -> DataFrame:
+        vecs = vecs.localCheckpoint(eager=False)
+        return F.broadcast(vecs) if n_docs <= broadcast_max_docs else vecs
+
     if len(pdf) > broadcast_max_terms:
-        return doc_vectors(
+        return barrier(doc_vectors(
             tfidf_weights(texts, n_docs, id_col, text_col, n_lo, n_hi, min_df),
             top_k=top_k,
-        )
+        ))
     h_arr = pdf["h"].to_numpy(dtype=np.int64)
     df_arr = pdf["df"].to_numpy(dtype=np.int64)
     order = np.argsort(h_arr)
@@ -309,16 +327,9 @@ def doc_vector_table(
                 vecs.append(dict(zip(h_kept.tolist(), vals.tolist())))
             yield pd.DataFrame({id_col: pd.Series(ids, dtype="int64"), "vec": vecs})
 
-    out = texts.select(
+    return barrier(texts.select(
         F.col(id_col).alias(id_col), F.col(text_col).alias(text_col)
-    ).mapInPandas(per_batch, f"{id_col} long, vec map<long,float>")
-    # The corpus size is already known here (the sentinel fetch above) —
-    # record it on the frame so pair_cosine_vecs can choose a broadcast
-    # join when the whole vector table is provably small (guide §3.1: the
-    # estimate-based planner sees only an opaque mapInPandas and defaults
-    # to sort-merge).
-    out._dvt_n_docs = n_docs  # type: ignore[attr-defined]
-    return out
+    ).mapInPandas(per_batch, f"{id_col} long, vec map<long,float>"))
 
 
 # Pair dot product over two pruned term->weight maps: a hash-set key
@@ -340,26 +351,10 @@ def pair_cosine_vecs(
     vecs: DataFrame,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_max_docs: int = 400_000,
 ) -> DataFrame:
-    """Cosine per candidate pair from a prebuilt (doc_id, vec) table:
-    two equi-joins + a JVM fold dot product (``_DOT_SQL`` above).
-
-    Join strategy (guide §3.1): a sort-merge pick would shuffle the PAIRS
-    twice, the second time with the ~600-byte ``vec_a`` map attached, and
-    the planner's estimate of an opaque mapInPandas output can flip to it.
-    :func:`doc_vector_table` records the real row count (``_dvt_n_docs``):
-    at or below ``broadcast_max_docs`` (~250 MB built at top_k=48, far
-    under the 8 GB broadcast cap) the broadcast is hinted explicitly, and
-    ReuseExchange ships one build for both joins. Larger tables, and the
-    fallback form, keep the planner's choice. Strategy never changes
-    values."""
-    # Barrier: the vector table feeds BOTH side joins; without it the
-    # whole vector build (term counts included) runs twice.
-    n_docs = getattr(vecs, "_dvt_n_docs", None)
-    vecs = vecs.localCheckpoint(eager=False)
-    if n_docs is not None and n_docs <= broadcast_max_docs:
-        vecs = F.broadcast(vecs)
+    """Cosine per candidate pair from a (doc_id, vec) table built by
+    :func:`doc_vector_table` (which also picks the join strategy): two
+    equi-joins + a JVM fold dot product (``_DOT_SQL`` above)."""
     dot = F.expr(_DOT_SQL)
     return (
         pairs.select(src_col, dst_col)

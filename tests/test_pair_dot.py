@@ -74,10 +74,28 @@ def test_pair_cosine_vecs_end_to_end_parity(spark):
     assert all(v >= 0.0 for v in got.values())
 
 
+def _checkpoint_plans(spark, build) -> tuple[object, list[str]]:
+    """``build()``'s result and the physical plans of the localCheckpoint
+    barriers it set up."""
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+        return [ex.apply(i) for i in range(ex.size())]
+
+    before = {e.executionId() for e in executions()}
+    out = build()
+    return out, [
+        e.physicalPlanDescription() for e in executions()
+        if e.executionId() not in before
+        and e.description().startswith("localCheckpoint")
+    ]
+
+
 def test_vocabulary_fallback_matches_broadcast_path(spark, sf_dir):
     """``broadcast_max_terms=0`` forces the exploded JVM form
-    (tfidf_weights -> doc_vectors): same keys per doc, float32 weights
-    within 1e-6, and bit-equal cosines on the LSH candidate pairs."""
+    (tfidf_weights -> doc_vectors), as the plan behind the returned
+    table's barrier shows: same keys per doc, float32 weights within 1e-6,
+    and bit-equal cosines on the LSH candidate pairs."""
     from gpu_entity_resolver_spark.functions.normalize import (
         normalize_entity_text,
     )
@@ -95,9 +113,16 @@ def test_vocabulary_fallback_matches_broadcast_path(spark, sf_dir):
         tokens=sort_token_table(norm, "doc_id", "nt"),
     ).localCheckpoint(eager=True)
     assert pairs.count() > 0
-    shipped = doc_vector_table(norm, "doc_id", "nt")
-    fallback = doc_vector_table(norm, "doc_id", "nt", broadcast_max_terms=0)
-    assert not hasattr(fallback, "_dvt_n_docs")  # the fallback really ran
+    shipped, shipped_plans = _checkpoint_plans(
+        spark, lambda: doc_vector_table(norm, "doc_id", "nt")
+    )
+    fallback, fallback_plans = _checkpoint_plans(
+        spark, lambda: doc_vector_table(norm, "doc_id", "nt", broadcast_max_terms=0)
+    )
+    # the fallback really ran: doc_vectors' collect_list aggregate builds
+    # its table, and the map-side path has none
+    assert any("collect_list" in p for p in fallback_plans), fallback_plans
+    assert shipped_plans and not any("collect_list" in p for p in shipped_plans)
 
     got = {r["doc_id"]: r["vec"] for r in fallback.collect()}
     want = {r["doc_id"]: r["vec"] for r in shipped.collect()}

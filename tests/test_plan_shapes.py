@@ -57,10 +57,12 @@ def _final_plan(df) -> str:
 
 
 @pytest.mark.parametrize("entity", [False, True], ids=["corpus", "entity"])
-def test_score_pairs_runs_levenshtein_once(spark, entity):
-    """The Levenshtein UDF feeds both the JW band filter and the output
-    projection; the plan must evaluate it in one ArrowEvalPython node, not
-    once under the filter and again over the kept rows."""
+def test_score_pairs_runs_one_python_pass(spark, entity):
+    """Phase 2 of score_pairs (Levenshtein, the JW band gate and
+    Jaro-Winkler) runs in one mapInPandas kernel over the cosine
+    survivors: the final plan holds exactly one MapInPandas node for it
+    and no lev/jw ArrowEvalPython node. The only ArrowEvalPython allowed
+    is the entity case's per-doc Metaphone encoding."""
     from gpu_entity_resolver_spark.config import ResolverConfig
     from gpu_entity_resolver_spark.operators.scoring import score_pairs
     from gpu_entity_resolver_spark.plans.entities import _entity_scoring_config
@@ -80,12 +82,12 @@ def test_score_pairs_runs_levenshtein_once(spark, entity):
     pairs = spark.createDataFrame(
         [(a, b) for a in range(5) for b in range(a + 1, 5)], "src long, dst long"
     )
-    nodes = [
-        ln for ln in _final_plan(score_pairs(pairs, docs, cfg=cfg)).splitlines()
-        if "ArrowEvalPython" in ln
-    ]
-    assert sum("lev(" in ln for ln in nodes) == 1, nodes
-    assert sum("jw(" in ln for ln in nodes) == 1, nodes
+    lines = _final_plan(score_pairs(pairs, docs, cfg=cfg)).splitlines()
+    evals = [ln for ln in lines if "ArrowEvalPython" in ln]
+    assert all("metaphone_udf(" in ln for ln in evals), evals
+    assert entity == bool(evals), evals
+    maps = [ln for ln in lines if "MapInPandas" in ln]
+    assert len(maps) == 1 and "score_sketch_pairs(" in maps[0], maps
 
 
 def _executions(spark) -> list:

@@ -6,6 +6,7 @@ import math
 import os
 import random
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -392,6 +393,146 @@ def test_score_pairs_returns_exact_rows_only(spark, sf_dir):
             assert abs(r["score"] - w["score"]) <= 1e-12
     # the last config is not vacuous: the floor alone drops rows
     assert len(got) < len(unfiltered)
+
+
+def _sketch(text: str, seg: int) -> str:
+    """scoring.content_sketch on the driver: the whole text up to 3*seg
+    chars, else the first, middle and last ``seg`` chars."""
+    n = len(text)
+    if n <= 3 * seg:
+        return text
+    mid = int(n / 2) - seg // 2 - 1
+    return text[:seg] + text[mid:mid + seg] + text[n - seg:]
+
+
+def _metaphone_set(text: str) -> set:
+    from gpu_entity_resolver_spark.functions.phonetic import metaphone_series
+
+    return {t for t in metaphone_series(pd.Series([text]))[0].split(" ") if t}
+
+
+def _reference_rows(inputs, cfg) -> dict:
+    """score_pairs' documented contract recomputed on the driver from
+    (src, dst, tfidf_cos, text_a, text_b): prefilter on cosine, Levenshtein
+    ratio and Metaphone Jaccard per pair, partial = (w_tfidf * cos + w_lev
+    * lev_ratio + w_ph * ph) / total_w, keep partial + jw_share >= floor,
+    score = partial + jw_share * jw."""
+    from gpu_entity_resolver_spark.functions.simfns import (
+        jaro_winkler,
+        levenshtein_batch,
+    )
+
+    seg = cfg.sketch_chars
+    rows = [r for r in inputs if r[2] >= cfg.cosine_prefilter]
+    a = pd.Series([_sketch(r[3], seg) for r in rows], dtype=object)
+    b = pd.Series([_sketch(r[4], seg) for r in rows], dtype=object)
+    lev = levenshtein_batch(a, b, max_chars=3 * seg)
+    jw = jaro_winkler(a, b, max_chars=3 * seg)
+    total_w = (
+        cfg.tfidf_weight
+        + cfg.jaro_winkler_weight
+        + cfg.levenshtein_weight
+        + cfg.phonetic_weight
+    )
+    jw_share = cfg.jaro_winkler_weight / total_w
+    want = {}
+    for i, (src, dst, cos, text_a, text_b) in enumerate(rows):
+        lev_ratio = 1.0 - int(lev[i]) / max(len(a[i]), len(b[i]), 1)
+        ph = None
+        if cfg.phonetic_weight > 0:
+            pa, pb = _metaphone_set(text_a), _metaphone_set(text_b)
+            ph = len(pa & pb) / len(pa | pb) if pa | pb else 0.0
+        partial = (
+            cfg.tfidf_weight * cos
+            + cfg.levenshtein_weight * lev_ratio
+            + cfg.phonetic_weight * (ph or 0.0)
+        ) / total_w
+        if partial + jw_share >= cfg.jw_decision_band:
+            score = partial + jw_share * float(jw[i])
+            want[(src, dst)] = (cos, lev_ratio, float(jw[i]), ph, score)
+    return want
+
+
+def test_score_pairs_matches_driver_reference(spark, sf_dir):
+    """score_pairs' kernel against an independent recomputation on the
+    driver (levenshtein_batch, jaro_winkler and the documented formula):
+    the same pairs and bit-equal values in every column, for the default
+    config, floor 0.0, prefilter 0 with the default floor, prefilter 0
+    with floor 0, and the entity config (phonetic on), on the corpus slice
+    plus an empty and a one-char doc."""
+    import dataclasses
+
+    from gpu_entity_resolver_spark.config import BlockingConfig
+    from gpu_entity_resolver_spark.operators.blocking import (
+        blocking_plan,
+        candidate_pairs,
+    )
+    from gpu_entity_resolver_spark.operators.scoring import score_pairs
+    from gpu_entity_resolver_spark.operators.shingles import (
+        doc_vector_table,
+        pair_cosine_vecs,
+    )
+    from gpu_entity_resolver_spark.plans.entities import _entity_scoring_config
+
+    corpus = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", F.lower(F.coalesce("text", F.lit(""))).alias("norm_text")
+    )
+    extra = spark.createDataFrame(
+        [(10**6, ""), (10**6 + 1, "a")], "doc_id long, norm_text string"
+    )
+    docs = corpus.unionByName(extra).localCheckpoint(eager=True)
+    texts = {r["doc_id"]: r["norm_text"] for r in docs.collect()}
+    bcfg = BlockingConfig()
+    keys, tokens = blocking_plan(docs, "doc_id", "norm_text", cfg=bcfg)
+    odd = [(10**6, 10**6 + 1)] + [
+        (d, e) for d in (0, 1, 2) for e in (10**6, 10**6 + 1)
+    ]
+    pairs = (
+        candidate_pairs(keys, bcfg, tokens=tokens)
+        .unionByName(spark.createDataFrame(odd, "src long, dst long"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    cols = ["src", "dst", "tfidf_cos", "lev_ratio", "jw", "ph_sim", "score"]
+    base = ScoringConfig()
+    configs = [
+        base,
+        dataclasses.replace(base, jw_decision_band=0.0),
+        # the default floor alone does the dropping
+        dataclasses.replace(base, cosine_prefilter=0.0),
+        dataclasses.replace(base, cosine_prefilter=0.0, jw_decision_band=0.0),
+        _entity_scoring_config(ResolverConfig()),
+    ]
+    cosines = {}
+    kept = []
+    for cfg in configs:
+        tfidf = (
+            cfg.tfidf_ngram_lo, cfg.tfidf_ngram_hi, cfg.tfidf_min_df,
+            cfg.tfidf_top_k,
+        )
+        if tfidf not in cosines:
+            vecs = doc_vector_table(
+                docs, n_lo=tfidf[0], n_hi=tfidf[1], min_df=tfidf[2],
+                top_k=tfidf[3],
+            )
+            cosines[tfidf] = [
+                (r["src"], r["dst"], r["tfidf_cos"],
+                 texts[r["src"]], texts[r["dst"]])
+                for r in pair_cosine_vecs(pairs, vecs).collect()
+            ]
+        want = _reference_rows(cosines[tfidf], cfg)
+        got = {
+            (r["src"], r["dst"]): tuple(r)[2:]
+            for r in score_pairs(pairs, docs, cfg=cfg).select(*cols).collect()
+        }
+        assert got.keys() == want.keys(), cfg
+        bad = [k for k in want if got[k] != want[k]]
+        assert not bad, [(k, got[k], want[k]) for k in bad[:5]]
+        kept.append(got.keys())
+    # not vacuous: the floor drops rows, and with nothing cut the empty and
+    # one-char docs are scored
+    assert len(kept[2]) < len(kept[3])
+    assert set(odd) <= kept[3]
 
 
 def test_unrolled_dot_equals_fold(spark):

@@ -4,9 +4,11 @@ Usage: python dump_plans.py <outdir> <suffix> [queries|stages|all]
 
 ``queries`` writes the bench queries' top-level plans. ``stages`` writes
 the resolve pipeline's INNER stage plans (prepare, blocking pairs, pair
-cosine, scoring): the top-level resolve plan is a checkpoint scan, so the
-interesting operators live in the per-stage query executions. Default
-``all``. Each plan goes to ``<outdir>/<name>_<suffix>.txt``; diff two
+cosine, scoring, and the 04b hygiene passes attach, consolidate and split
+over the stage-04 labels): the top-level resolve plan is a checkpoint scan,
+so the interesting operators live in the per-stage query executions.
+Default ``all``. Each plan goes to ``<outdir>/<name>_<suffix>.txt``, and
+its ``Exchange`` and ``BroadcastExchange`` counts are printed; diff two
 suffixes (e.g. before/after) to compare a change. Env:
 ``SPARK_GRAFT_SF_DIR`` (input scale factor), ``SPARK_GRAFT_AMPLIFY``
 (stage corpus amplification, default 1), ``SPARK_GRAFT_CPUS``.
@@ -14,6 +16,7 @@ Evidence generation only: not part of the `__spark_entry__` query contract.
 """
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -64,7 +67,16 @@ def dump_stages(spark, sf_dir, dump) -> None:
         doc_vector_table,
         pair_cosine_vecs,
     )
-    from gpu_entity_resolver_spark.plans.resolve import prepare_documents
+    from gpu_entity_resolver_spark.operators.hygiene import (
+        attach_singletons,
+        consolidate_identical_entities,
+        split_clusters_by,
+    )
+    from gpu_entity_resolver_spark.operators.scoring import edges_above_threshold
+    from gpu_entity_resolver_spark.plans.resolve import (
+        label_clusters,
+        prepare_documents,
+    )
     from gpu_entity_resolver_spark.sources.webgen import (
         INPUT_COLUMNS,
         generate_documents,
@@ -94,10 +106,33 @@ def dump_stages(spark, sf_dir, dump) -> None:
         min_df=scfg.tfidf_min_df, top_k=scfg.tfidf_top_k,
     )
     dump("resolve_cos_join", pair_cosine_vecs(pairs_c, vecs))
+    scored = score_pairs(pairs_c, prepared_c, "doc_id", "norm_text", scfg)
+    dump("resolve_score_stage", scored)
+    scored_c = scored.localCheckpoint(eager=False)  # mirror ckpt.stage
+    ccfg = cfg.clustering
+    # runs connected components: its rounds are eager
+    clustered = label_clusters(
+        prepared_c,
+        edges_above_threshold(scored_c, scfg.edge_threshold),
+        ccfg.cc_max_iterations,
+    ).localCheckpoint(eager=False)
+    # resolve skips attach at the default config (its proof is at the call
+    # site); the plan shows what the pass costs where it runs
     dump(
-        "resolve_score_stage",
-        score_pairs(pairs_c, prepared_c, "doc_id", "norm_text", scfg),
+        "resolve_hygiene_attach",
+        attach_singletons(
+            scored_c.select("src", "dst", "score"),
+            clustered,
+            tau=ccfg.attachment_similarity_threshold,
+            min_matching=ccfg.attachment_min_matching,
+            ratio_threshold=ccfg.attachment_ratio_threshold,
+        ),
     )
+    dump(
+        "resolve_hygiene_consolidate",
+        consolidate_identical_entities(clustered, "norm_text", "cluster"),
+    )
+    dump("resolve_hygiene_split", split_clusters_by(clustered, "lang", "cluster"))
 
 
 def main() -> None:
@@ -123,7 +158,11 @@ def main() -> None:
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(txt)
-        print(f"wrote {path} ({len(txt)} bytes)")
+        nodes = re.findall(r"^\(\d+\) (\w+)", txt, re.MULTILINE)
+        print(
+            f"wrote {path} ({len(txt)} bytes): {nodes.count('Exchange')} Exchange,"
+            f" {nodes.count('BroadcastExchange')} BroadcastExchange"
+        )
 
     if what in ("queries", "all"):
         dump_queries(spark, sf_dir, dump)

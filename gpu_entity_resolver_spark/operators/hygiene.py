@@ -27,46 +27,32 @@ def consolidate_identical_entities(
 ) -> DataFrame:
     """C6: if the same entity key appears in more than one cluster, move all
     its rows to the largest cluster (ties: smallest cluster id) — reference
-    resolver.py:702-782 semantics, one window pass instead of a Python loop.
+    resolver.py:702-782 semantics, two window passes instead of a Python
+    loop. A null key keeps its cluster.
 
     Returns the input with ``cluster`` re-mapped.
     """
-    sizes = members.groupBy(cluster_col).agg(F.count("*").alias("_csize"))
-    # Aggregate to distinct (key, cluster) FIRST, then attach the cluster
-    # size: the former members-x-sizes row-level join shuffled the whole
-    # membership table only to collapse it right after (guide §2.3 —
-    # aggregate before you shuffle); joining the distinct-pairs table with
-    # the cluster-size table attaches the identical _csize values.
-    # The key rides the distinct, the window and the remap join as
-    # xxhash64(key) — 8 bytes instead of a few hundred (guide §2.3,
-    # narrower types). Same convention the engine already rests on for
-    # doc_id = xxhash64(url), the split-mint ids and C2's address keys;
-    # a null key hashes to null so it never matches the remap join,
-    # exactly as a null never matched the former string equi-join.
-    # Bound: n distinct keys give about n^2 / 2^65 expected colliding
-    # pairs (~2.7 at 10^10 keys, ~27k at 10^12); a collision merges the
-    # two keys' clusters.
-    key_h = F.when(
-        F.col(key_col).isNotNull(), F.xxhash64(key_col)
-    ).alias("_kh")
-    key_winner = (
+    # Windows over a narrow (key hash, cluster) projection; the map holds
+    # only the keys whose rows move, so the apply join broadcasts while it
+    # is small and the wide rows are not shuffled. The key rides as
+    # xxhash64(key), as doc_id = xxhash64(url) and the split-mint ids do;
+    # a null key hashes to null and never matches. Bound: n distinct keys
+    # give about n^2 / 2^65 expected colliding pairs (~2.7 at 10^10 keys,
+    # ~27k at 10^12); a collision merges the two keys' clusters.
+    key_h = F.when(F.col(key_col).isNotNull(), F.xxhash64(key_col)).alias("_kh")
+    by_key = Window.partitionBy("_kh").orderBy(F.desc("_csize"), F.asc(cluster_col))
+    moves = (
         members.select(key_h, F.col(cluster_col))
+        .withColumn("_csize", F.count("*").over(Window.partitionBy(cluster_col)))
+        .where(F.col("_kh").isNotNull())
+        .withColumn("_winner", F.first(cluster_col).over(by_key))
+        .where(F.col("_winner") != F.col(cluster_col))
+        .select("_kh", "_winner")
         .distinct()
-        .join(sizes, cluster_col)
-        .withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("_kh").orderBy(
-                    F.desc("_csize"), F.asc(cluster_col)
-                )
-            ),
-        )
-        .where(F.col("_rn") == 1)
-        .select("_kh", F.col(cluster_col).alias("_winner"))
     )
     return (
         members.withColumn("_kh", key_h)
-        .join(key_winner, "_kh", "left")
+        .join(moves, "_kh", "left")
         .withColumn(cluster_col, F.coalesce("_winner", F.col(cluster_col)))
         .drop("_kh", "_winner")
     )
@@ -79,22 +65,21 @@ def split_clusters_by(
 ) -> DataFrame:
     """C7: split clusters spanning more than one value of ``split_col``
     (the reference splits on state, resolver.py:850-860; for web pages the
-    analog is language). New ids are minted deterministically above the
-    current max (reference W3 ngroup pattern, resolver.py:857-859)."""
-    multi = (
-        members.groupBy(cluster_col)
-        .agg(F.countDistinct(split_col).alias("_nv"))
-        .where(F.col("_nv") > 1)
-        .select(cluster_col)
-    )
+    analog is language). A null value neither counts nor moves. New ids are
+    minted deterministically (reference W3 ngroup pattern,
+    resolver.py:857-859)."""
     # Shuffle-free deterministic id minting: the reference's `max_id + ngroup`
     # (resolver.py:857-859) needs a total order — a single-partition sort at
     # scale. Ids here only need to be unique and deterministic, so mint them
     # as xxhash64 of the (cluster, split value) pair; collision odds with
-    # existing hash-derived ids are ~n^2/2^64. Only multi-value clusters are
-    # touched.
+    # existing hash-derived ids are ~n^2/2^64. One window over the narrow
+    # (cluster, value) projection finds the multi-value clusters; the
+    # distinct reuses its partitioning, and only their rows reach the map.
+    by_cluster = Window.partitionBy(cluster_col)
     new_ids = (
-        members.join(multi, cluster_col, "left_semi")
+        members.select(cluster_col, split_col)
+        .withColumn("_nv", F.size(F.collect_set(split_col).over(by_cluster)))
+        .where((F.col("_nv") > 1) & F.col(split_col).isNotNull())
         .select(cluster_col, split_col)
         .distinct()
         .withColumn(

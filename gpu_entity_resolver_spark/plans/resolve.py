@@ -224,7 +224,8 @@ def resolve_documents(
         )
 
         out = clustered
-        if cfg.clustering.ensemble_mutual_rank:
+        ccfg = cfg.clustering
+        if ccfg.ensemble_mutual_rank:
             # G5+G10: labeling B = CC over the mutual-rank kNN graph built
             # from sub-threshold scored pairs (reference SNN recall path,
             # utils.py:400-469); arbitration keeps the precise CC labels as
@@ -233,47 +234,58 @@ def resolve_documents(
 
             recall_edges = mutual_rank_edges(
                 scored.where(
-                    F.col("score") >= cfg.clustering.ensemble_recall_threshold
+                    F.col("score") >= ccfg.ensemble_recall_threshold
                 ).select("src", "dst", "score"),
-                k=cfg.clustering.mutual_rank_k,
+                k=ccfg.mutual_rank_k,
             )
             b_full = label_clusters(
-                out.select("doc_id"), recall_edges, cfg.clustering.cc_max_iterations
+                out.select("doc_id"), recall_edges, ccfg.cc_max_iterations
             )
             ens = ensemble_labels(out.select("doc_id", "cluster"), b_full)
             out = out.drop("cluster").join(ens, "doc_id")
-        if cfg.clustering.attach_noise:
-            # G8: rescue singletons with a strong unambiguous sub-threshold
-            # signal (reference utils.py:473-545) — reuses the stage-03
-            # scores, no extra scoring pass. The reference's neighborhood
-            # is top-k by similarity (utils.py:490-492); the pairs
-            # score_pairs drops are precisely the ones its kNN crowds out.
+        # G8 rescues singletons with a strong, unambiguous signal from the
+        # stage-03 scores (reference utils.py:473-545, whose top-k
+        # neighborhood crowds out the pairs score_pairs drops). On the CC
+        # labels it cannot move a doc when min_matching >= 1 and tau >=
+        # edge_threshold (defaults 2 and 0.82 >= 0.55): an attach needs
+        # _n_tau >= min_matching >= 1 scored (singleton, member) pairs
+        # >= tau >= edge_threshold. Each is an edge; connected_components
+        # raises unless it converged, so the endpoints share a label and the
+        # doc was never a singleton. With the ensemble on, the labels come
+        # from ensemble_labels and the pass runs.
+        attach_can_move = (
+            ccfg.ensemble_mutual_rank
+            or ccfg.attachment_min_matching < 1
+            or ccfg.attachment_similarity_threshold < cfg.scoring.edge_threshold
+        )
+        if ccfg.attach_noise and attach_can_move:
             out = attach_singletons(
                 scored.select("src", "dst", "score"),
                 out,
-                tau=cfg.clustering.attachment_similarity_threshold,
-                min_matching=cfg.clustering.attachment_min_matching,
-                ratio_threshold=cfg.clustering.attachment_ratio_threshold,
+                tau=ccfg.attachment_similarity_threshold,
+                min_matching=ccfg.attachment_min_matching,
+                ratio_threshold=ccfg.attachment_ratio_threshold,
             )
-        if cfg.clustering.merge_similar:
-            # The pre-merge election is reused by the finalize stage for
-            # every cluster hygiene leaves untouched (the vast majority —
-            # merge/consolidate/split each relabel a handful), so the
-            # full-corpus collect_list shuffle + election runs ONCE per
-            # job, not twice. eager localCheckpoints pin both frames so
-            # finalize reads cached results instead of replaying the
-            # hygiene plan. Session-local only: on checkpoint-resume of a
-            # committed 04b stage this closure never runs and finalize
-            # falls back to a full election.
+        if out is not clustered:
+            # Barrier: the elections, merge, consolidate and split all read
+            # `out`; without it each read reruns the ensemble/attach plan.
+            out = out.localCheckpoint(eager=False)
+        if ccfg.merge_similar:
+            # Finalize reuses the pre-merge election for every cluster
+            # hygiene leaves untouched (on the benchmark corpora hygiene
+            # moves no doc), so the full-corpus collect_list shuffle +
+            # election runs ONCE per job. Eager localCheckpoints pin both
+            # frames. Session-local only: resuming from a committed 04b
+            # skips this closure and finalize runs a full election.
             canon0 = canonical_map(out, "cluster", "norm_text").localCheckpoint(
                 eager=True
             )
             _election_reuse["canon0"] = canon0
             _election_reuse["sig0"] = _cluster_sig(out).localCheckpoint(eager=True)
             out = merge_similar_clusters(out, canon0, cfg)
-        if cfg.clustering.consolidate_identical:
+        if ccfg.consolidate_identical:
             out = consolidate_identical_entities(out, "norm_text", "cluster")
-        if cfg.clustering.split_by_lang:
+        if ccfg.split_by_lang:
             out = split_clusters_by(out, "lang", "cluster")
         return out
 

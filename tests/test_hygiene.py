@@ -47,6 +47,17 @@ def test_soundex_key(spark):
     assert out[0] == out[1]  # phonetically equal names share the key
 
 
+def _doc_clusters(df) -> dict:
+    return {r["doc_id"]: r["cluster"] for r in df.select("doc_id", "cluster").collect()}
+
+
+def _split_id(spark, cluster: int, value: str) -> int:
+    """The id split_clusters_by mints for (cluster, value)."""
+    return spark.createDataFrame(
+        [(cluster, value)], "cluster long, lang string"
+    ).select(F.xxhash64(F.lit("split"), "cluster", "lang")).first()[0]
+
+
 def test_consolidate_identical_entities(spark):
     rows = [
         # key "a" appears in clusters 1 (2 rows) and 2 (1 row) -> all to 1
@@ -60,6 +71,25 @@ def test_consolidate_identical_entities(spark):
     assert ("a", 1) in got and ("a", 2) not in got
     assert ("b", 2) in got and ("c", 3) in got
     assert check_no_key_in_two_clusters(out) == 0
+
+    rows = [
+        # key "a" spans clusters 5 (size 3), 3 (size 2) and 7 (size 1):
+        # every "a" row moves to 5; the other rows of 3 stay put
+        (1, 5, "a"), (2, 5, "a"), (3, 5, None),
+        (4, 3, "a"), (5, 3, "b"),
+        (6, 7, "a"),
+        # key "t" in clusters 8 and 9, both of size 2: the tie goes to the
+        # smallest cluster id; the null key in 9 keeps its cluster
+        (7, 8, "t"), (8, 8, "c"),
+        (9, 9, "t"), (10, 9, None),
+        (11, 4, "z"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, cluster long, norm_text string")
+    out = consolidate_identical_entities(df)
+    assert out.columns == ["doc_id", "cluster", "norm_text"]
+    assert _doc_clusters(out) == {
+        1: 5, 2: 5, 3: 5, 4: 5, 5: 3, 6: 5, 7: 8, 8: 8, 9: 8, 10: 9, 11: 4,
+    }
 
 
 def test_split_clusters_by(spark):
@@ -78,6 +108,34 @@ def test_split_clusters_by(spark):
     assert out.where(F.col("norm_text").startswith("y")).select("cluster").distinct().count() == 1
     # minted ids are fresh: distinct per language and disjoint from input ids
     assert ids.isdisjoint({10, 20})
+
+    rows = [
+        # cluster 10 spans en and de; its null-lang row keeps the cluster
+        (1, 10, "en", "x1"), (2, 10, "en", "x2"), (3, 10, "de", "x3"),
+        (4, 10, None, "x4"),
+        # a null value does not count: {en, null} is one language
+        (5, 20, "en", "y1"), (6, 20, None, "y2"),
+        (7, 30, None, "z1"),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, cluster long, lang string, norm_text string"
+    )
+    out = split_clusters_by(df, "lang")
+    assert out.columns == ["cluster", "lang", "doc_id", "norm_text"]
+    en, de = _split_id(spark, 10, "en"), _split_id(spark, 10, "de")
+    assert _doc_clusters(out) == {1: en, 2: en, 3: de, 4: 10, 5: 20, 6: 20, 7: 30}
+
+    # key "p" spans clusters 1 (two de rows) and 2 (one en row, plus "q"):
+    # the sizes tie, so consolidate moves the en "p" row into 1, and split
+    # then divides 1 by language; "q" stays in 2
+    rows = [(1, 1, "p", "de"), (2, 1, "p", "de"), (3, 2, "p", "en"), (4, 2, "q", "en")]
+    df = spark.createDataFrame(
+        rows, "doc_id long, cluster long, norm_text string, lang string"
+    )
+    out = split_clusters_by(consolidate_identical_entities(df), "lang")
+    assert out.columns == ["cluster", "lang", "doc_id", "norm_text"]
+    de, en = _split_id(spark, 1, "de"), _split_id(spark, 1, "en")
+    assert _doc_clusters(out) == {1: de, 2: de, 3: en, 4: 2}
 
 
 def test_invariant_unique_canonical(spark):

@@ -3,7 +3,8 @@ full-iteration probe form it replaced: skipped keys contributed exact +0.0
 terms (which never change a finite IEEE accumulator) and array_intersect
 preserves vec_a's key order, so surviving products accumulate in the same
 order with the same values. The vector table's large-vocabulary fallback
-must build the same vectors as the broadcast-IDF path."""
+must build the same vectors as the broadcast-IDF path, and its doc-count
+gate may change only the join strategy, never a cosine."""
 
 import random
 
@@ -91,11 +92,9 @@ def _checkpoint_plans(spark, build) -> tuple[object, list[str]]:
     ]
 
 
-def test_vocabulary_fallback_matches_broadcast_path(spark, sf_dir):
-    """``broadcast_max_terms=0`` forces the exploded JVM form
-    (tfidf_weights -> doc_vectors), as the plan behind the returned
-    table's barrier shows: same keys per doc, float32 weights within 1e-6,
-    and bit-equal cosines on the LSH candidate pairs."""
+def _lsh_inputs(spark, sf_dir):
+    """The sf slice's normalized texts ``(doc_id, nt)`` and its LSH
+    candidate pairs, both materialized."""
     from gpu_entity_resolver_spark.functions.normalize import (
         normalize_entity_text,
     )
@@ -113,6 +112,29 @@ def test_vocabulary_fallback_matches_broadcast_path(spark, sf_dir):
         tokens=sort_token_table(norm, "doc_id", "nt"),
     ).localCheckpoint(eager=True)
     assert pairs.count() > 0
+    return norm, pairs
+
+
+def _cosine_diff(pairs, vecs_a, vecs_b):
+    """Pairs whose cosine differs between two vector tables (a full outer
+    join, so a pair missing on one side counts)."""
+    return (
+        pair_cosine_vecs(pairs, vecs_a)
+        .join(
+            pair_cosine_vecs(pairs, vecs_b).withColumnRenamed("tfidf_cos", "fb"),
+            ["src", "dst"],
+            "full_outer",
+        )
+        .where("tfidf_cos IS DISTINCT FROM fb")
+    )
+
+
+def test_vocabulary_fallback_matches_broadcast_path(spark, sf_dir):
+    """``broadcast_max_terms=0`` forces the exploded JVM form
+    (tfidf_weights -> doc_vectors), as the plan behind the returned
+    table's barrier shows: same keys per doc, float32 weights within 1e-6,
+    and bit-equal cosines on the LSH candidate pairs."""
+    norm, pairs = _lsh_inputs(spark, sf_dir)
     shipped, shipped_plans = _checkpoint_plans(
         spark, lambda: doc_vector_table(norm, "doc_id", "nt")
     )
@@ -132,13 +154,20 @@ def test_vocabulary_fallback_matches_broadcast_path(spark, sf_dir):
         for h, w in vec.items():
             assert abs(got[doc_id][h] - w) <= 1e-6, (doc_id, h)
 
-    diff = (
-        pair_cosine_vecs(pairs, shipped)
-        .join(
-            pair_cosine_vecs(pairs, fallback).withColumnRenamed("tfidf_cos", "fb"),
-            ["src", "dst"],
-            "full_outer",
-        )
-        .where("tfidf_cos IS DISTINCT FROM fb")
-    )
-    assert diff.count() == 0
+    assert _cosine_diff(pairs, shipped, fallback).count() == 0
+
+
+def test_doc_count_fallback_drops_the_broadcast_hint(spark, sf_dir):
+    """``broadcast_max_docs=0`` forces the large-corpus side of the
+    doc-count gate: the returned table carries no broadcast hint, so the
+    planner picks the cosine joins, and the cosines on the LSH candidate
+    pairs are bit-equal to the hinted default's."""
+    norm, pairs = _lsh_inputs(spark, sf_dir)
+
+    def hinted(df) -> bool:
+        return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+    shipped = doc_vector_table(norm, "doc_id", "nt")
+    unhinted = doc_vector_table(norm, "doc_id", "nt", broadcast_max_docs=0)
+    assert hinted(shipped) and not hinted(unhinted)
+    assert _cosine_diff(pairs, shipped, unhinted).count() == 0

@@ -2,6 +2,7 @@
 synthetic web corpus, extraction byte-identity, blocking recall, and
 checkpoint/resume."""
 
+import dataclasses
 import os
 import shutil
 import tempfile
@@ -171,7 +172,7 @@ def _resolved_rows(res):
 def test_checkpoint_resume(spark, corpus):
     """North rule: the pipeline resumes from the last committed stage, and
     the resumed run returns the fresh run's rows in every column. Resuming
-    after 03 reruns hygiene (finalize reuses the pre-merge election);
+    after 03 or 04 reruns hygiene (finalize reuses the pre-merge election);
     resuming after 04b takes finalize's full-election path instead."""
     workdir = tempfile.mkdtemp(prefix="ckpt_")
     try:
@@ -185,6 +186,7 @@ def test_checkpoint_resume(spark, corpus):
         # committed one.
         for dropped in (
             ["04_clusters", "04b_hygiene", "05_resolved"],
+            ["04b_hygiene", "05_resolved"],
             ["05_resolved"],
         ):
             for stage in dropped:
@@ -198,6 +200,81 @@ def test_checkpoint_resume(spark, corpus):
             )
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
+
+
+def _edge_config(edge_threshold: float) -> ResolverConfig:
+    cfg = ResolverConfig()
+    return dataclasses.replace(
+        cfg, scoring=dataclasses.replace(cfg.scoring, edge_threshold=edge_threshold)
+    )
+
+
+def test_attach_is_noop_within_its_bound(spark, corpus):
+    """With attachment_min_matching >= 1 and attach tau >= edge_threshold,
+    resolve skips attach_singletons: run on the committed 03 scores and 04
+    labels, the pass returns the 04 labels unchanged."""
+    from gpu_entity_resolver_spark.operators.hygiene import attach_singletons
+
+    docs = corpus.select(*INPUT_COLUMNS)
+    # At the default every scored pair is an edge (03 keeps rows at or above
+    # the 0.55 band floor), so no pair touches a singleton. At 0.82, the
+    # bound's edge (tau == edge_threshold), pairs in [0.55, 0.82) do, and
+    # the pass has singletons with neighbours to look at.
+    for edge in (0.55, 0.82):
+        cfg = _edge_config(edge)
+        ccfg = cfg.clustering
+        assert ccfg.attachment_min_matching >= 1
+        assert ccfg.attachment_similarity_threshold >= edge
+        workdir = tempfile.mkdtemp(prefix="ckpt_attach_")
+        try:
+            resolve_documents(spark, docs, cfg, checkpoint_dir=workdir)
+            scored = spark.read.parquet(os.path.join(workdir, "03_scored"))
+            labels = spark.read.parquet(
+                os.path.join(workdir, "04_clusters")
+            ).select("doc_id", "cluster")
+            sizes = labels.groupBy("cluster").count()
+            singles = labels.join(sizes.where("count = 1"), "cluster").select("doc_id")
+            touching = scored.join(
+                singles.withColumnRenamed("doc_id", "src"), "src", "left_semi"
+            ).unionByName(
+                scored.join(
+                    singles.withColumnRenamed("doc_id", "dst"), "dst", "left_semi"
+                )
+            )
+            assert (touching.count() > 0) == (edge > 0.55), edge
+            attached = attach_singletons(
+                scored.select("src", "dst", "score"),
+                labels,
+                tau=ccfg.attachment_similarity_threshold,
+                min_matching=ccfg.attachment_min_matching,
+                ratio_threshold=ccfg.attachment_ratio_threshold,
+            )
+            diff = attached.withColumnRenamed("cluster", "got").join(
+                labels, "doc_id", "full_outer"
+            ).where("got IS DISTINCT FROM cluster")
+            assert diff.count() == 0, edge
+        finally:
+            shutil.rmtree(workdir, ignore_errors=True)
+
+
+def test_attach_runs_outside_its_bound(spark, corpus, monkeypatch):
+    """Above tau (edge_threshold 0.9 > 0.82) an attach can move a doc, so
+    resolve calls the pass; at the defaults it does not."""
+    from gpu_entity_resolver_spark.operators import hygiene
+
+    calls = []
+    attach = hygiene.attach_singletons
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return attach(*args, **kwargs)
+
+    monkeypatch.setattr(hygiene, "attach_singletons", counting)
+    docs = corpus.select(*INPUT_COLUMNS).limit(100)
+    resolve_documents(spark, docs, _edge_config(0.9))
+    assert len(calls) == 1
+    resolve_documents(spark, docs)
+    assert len(calls) == 1
 
 
 def test_resolve_deterministic_across_parallelism(spark, corpus):

@@ -8,8 +8,11 @@ inferring phase costs from end-to-end walls.
 Usage:
     python bench_extra.py --what minhash
     python bench_extra.py --what simhash
-Prints one JSON line per phase set. Resolve stages are timed from the
-shipped plan by ``perfbench/run.py --trace 1``.
+    python bench_extra.py --what worker_floor
+Prints one JSON line per phase set. ``worker_floor`` reads no input: it
+times the fixed cost of a Python worker task (TUNING.md, "Python worker
+floor"). Resolve stages are timed from the shipped plan by
+``perfbench/run.py --trace 1``.
 """
 
 from __future__ import annotations
@@ -135,9 +138,56 @@ def bench_simhash(spark, docs, out: dict) -> None:
     )
 
 
+def bench_worker_floor(spark, out: dict, n_tasks: int = 97, rows: int = 128) -> None:
+    """The fixed cost of a Python worker task: ``n_tasks`` one-batch
+    identity ``mapInPandas`` tasks, and the ``importlib.invalidate_caches()``
+    call each task starts with, timed inside the workers (median over one
+    task per core, 5 calls each; min of N_REPS medians)."""
+    import statistics
+
+    import pandas as pd
+
+    def identity(batches):
+        yield from batches
+
+    tasks = spark.range(n_tasks * rows, numPartitions=n_tasks)
+    _timed(
+        spark,
+        "worker_floor_tasks_s",
+        lambda: _noop(tasks.mapInPandas(identity, tasks.schema)),
+        out,
+    )
+
+    def probe(batches):
+        import importlib
+
+        for _ in batches:
+            pass
+        ms = []
+        for _ in range(5):
+            t0 = time.perf_counter()
+            importlib.invalidate_caches()
+            ms.append((time.perf_counter() - t0) * 1e3)
+        yield pd.DataFrame({"ms": ms})
+
+    cores = spark.sparkContext.defaultParallelism
+    calls = spark.range(cores, numPartitions=cores).mapInPandas(probe, "ms double")
+    out["invalidate_caches_ms"] = round(
+        min(
+            statistics.median(r["ms"] for r in calls.collect())
+            for _ in range(N_REPS)
+        ),
+        3,
+    )
+    out["n_tasks"] = n_tasks
+    print(f"  invalidate_caches_ms: {out['invalidate_caches_ms']}", file=sys.stderr)
+
+
 def main() -> None:
     p = argparse.ArgumentParser()
-    p.add_argument("--what", default="minhash", choices=["minhash", "simhash"])
+    p.add_argument(
+        "--what", default="minhash", choices=["minhash", "simhash", "worker_floor"]
+    )
     args = p.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -149,6 +199,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     out: dict = {"what": args.what, "cpus": cpus}
+    if args.what == "worker_floor":
+        bench_worker_floor(spark, out)
+        print(json.dumps(out))
+        return
     # the operator queries read the documents parquet directly, exactly as
     # __spark_entry__.queries() does
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").localCheckpoint(

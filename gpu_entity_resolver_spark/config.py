@@ -7,7 +7,7 @@ partitions, block caps, salting) instead of GPU memory knobs.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 
 # Word replacements applied during name normalization.
@@ -134,9 +134,10 @@ class ScoringConfig:
     # consumer that thresholds at or above the floor (edge, attach tau,
     # merge centroid prefilter, assign winner) sees the same rows as with
     # no floor. The default matches the lowest engine threshold (edge
-    # 0.55); lower it if you move a threshold below (resolve lowers it to
-    # the ensemble recall threshold itself). 0.0 = every cosine survivor
-    # gets JW — the entity path uses this, where JW carries 35% weight.
+    # 0.55); resolve_documents and assign_new_documents lower it to any
+    # threshold they compare scores against that sits below it
+    # (with_band_floor). 0.0 = every cosine survivor gets JW — the entity
+    # path uses this, where JW carries 35% weight.
     jw_decision_band: float = 0.55
     # JW/Levenshtein run over a bounded "content sketch" (first+middle+last
     # sketch_chars of the normalized text) rather than a prefix truncation:
@@ -242,6 +243,18 @@ class ResolverConfig:
     clustering: ClusteringConfig = field(default_factory=ClusteringConfig)
     confidence: ConfidenceConfig = field(default_factory=ConfidenceConfig)
     runtime: RuntimeConfig = field(default_factory=RuntimeConfig)
+
+
+def with_band_floor(cfg: ResolverConfig, *thresholds: float) -> ResolverConfig:
+    """``cfg`` with ``scoring.jw_decision_band`` lowered to the lowest of
+    ``thresholds`` when one sits below it. score_pairs drops every pair
+    whose score provably falls below the floor, so a consumer comparing
+    scores against a lower threshold would silently lose the pairs between
+    the two. Returns ``cfg`` itself when no threshold is below the floor."""
+    floor = min(cfg.scoring.jw_decision_band, *thresholds)
+    if floor == cfg.scoring.jw_decision_band:
+        return cfg
+    return replace(cfg, scoring=replace(cfg.scoring, jw_decision_band=floor))
 
 
 # --- JSON round-trip (S3/S4) ------------------------------------------------

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..config import ResolverConfig
+from ..config import ResolverConfig, with_band_floor
 
 
 def consolidate_identical_entities(
@@ -765,6 +765,8 @@ def assign_new_documents(
     from .scoring import score_pairs
 
     cfg = cfg or ResolverConfig()
+    # the winner must reach edge_threshold: no pair at or above it may drop
+    cfg = with_band_floor(cfg, cfg.scoring.edge_threshold)
     # Barrier: blocking (two key families), both doc-vector passes, the
     # sketches and the output join all read the batch; without it each
     # read reruns the caller's prepare chain (extraction, normalize UDFs).

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import ResolverConfig
+from ..config import ResolverConfig, with_band_floor
 from ..functions.extraction import extracted_text
 from ..functions.normalize import confidence_bin, normalize_entity_text
 from ..operators.blocking import blocking_plan, candidate_pairs
@@ -125,21 +125,18 @@ def resolve_documents(
      review_reason).
     """
     cfg = cfg or ResolverConfig()
-    if cfg.clustering.ensemble_mutual_rank:
-        # the recall path thresholds scores BELOW the default band floor;
-        # lower the floor so that comparison stays exactly invariant
-        import dataclasses
-
-        cfg = dataclasses.replace(
-            cfg,
-            scoring=dataclasses.replace(
-                cfg.scoring,
-                jw_decision_band=min(
-                    cfg.scoring.jw_decision_band,
-                    cfg.clustering.ensemble_recall_threshold,
-                ),
-            ),
-        )
+    ccfg = cfg.clustering
+    # Every threshold the stage-03 scores are compared against: the edges,
+    # merge's centroid prefilter, attach tau (a skipped attach pass has tau
+    # >= edge_threshold, so listing it then lowers nothing) and the
+    # ensemble recall path.
+    cfg = with_band_floor(
+        cfg,
+        cfg.scoring.edge_threshold,
+        *([ccfg.centroid_similarity_threshold] if ccfg.merge_similar else []),
+        *([ccfg.attachment_similarity_threshold] if ccfg.attach_noise else []),
+        *([ccfg.ensemble_recall_threshold] if ccfg.ensemble_mutual_rank else []),
+    )
     ckpt = CheckpointManager(spark, checkpoint_dir or cfg.runtime.checkpoint_dir)
 
     # Parallelism guard: stage 1 (extraction UDF + normalization) is narrow,
@@ -200,9 +197,9 @@ def resolve_documents(
     pairs = ckpt.stage("02_pairs", build_pairs)
 
     # score_pairs returns exact rows only. Every consumer below thresholds
-    # at or above the band floor (edges, attach tau, the ensemble recall
-    # threshold — the floor is lowered to it above), so the dropped
-    # candidates — ~95% of the volume — never reach the stage table.
+    # at or above the band floor (it is lowered to the lowest of them
+    # above), so the dropped candidates — ~95% of the volume — never reach
+    # the stage table.
     scored = ckpt.stage(
         "03_scored",
         lambda: score_pairs(pairs, prepared, "doc_id", "norm_text", cfg.scoring),

@@ -3,8 +3,9 @@
 One place to set the scale-oriented defaults: AQE (runtime re-planning +
 skew-join handling), Arrow for every pandas-UDF boundary, and cores,
 driver memory and shuffle partitions sized by argument, environment or,
-failing both, the host. On a real cluster these come from spark-submit
-conf; locally we emulate with ``local[N]``.
+failing both, the host, and the Python worker daemon of ``worker_daemon``.
+On a real cluster these come from spark-submit conf; locally we emulate
+with ``local[N]``.
 """
 
 from __future__ import annotations
@@ -43,5 +44,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # local mode: the daemon imports the package from the driver's
+        # environment, as the UDF closures already require
+        .config(
+            "spark.python.daemon.module", "gpu_entity_resolver_spark.worker_daemon"
+        )
     )
     return builder.getOrCreate()

@@ -20,6 +20,14 @@ apply untouched; the job only sets AQE + Arrow (both required by the
 engine's design) and an optional shuffle-partition override. ``--config``
 takes a JSON file of partial ``ResolverConfig`` overrides deep-merged
 onto the defaults (same schema ``save_model`` writes).
+
+The job does not set ``spark.python.daemon.module``: under ``--py-files``
+the Python daemon starts before the package reaches the executor, so it
+could not import it. Where the package is installed on every executor,
+``--conf spark.python.daemon.module=gpu_entity_resolver_spark.worker_daemon``
+runs the workers under the daemon ``session.get_spark`` uses, which stops
+each Python task from re-reading ``pyspark.zip``'s index (TUNING.md,
+"Python worker floor").
 """
 
 from __future__ import annotations

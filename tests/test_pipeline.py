@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from gpu_entity_resolver_spark.config import ResolverConfig
+from gpu_entity_resolver_spark.config import ResolverConfig, with_band_floor
 from gpu_entity_resolver_spark.functions.extraction import extract_text_series
 from gpu_entity_resolver_spark.operators.blocking import (
     blocking_plan,
@@ -172,8 +172,9 @@ def _resolved_rows(res):
 def test_checkpoint_resume(spark, corpus):
     """North rule: the pipeline resumes from the last committed stage, and
     the resumed run returns the fresh run's rows in every column. Resuming
-    after 03 or 04 reruns hygiene (finalize reuses the pre-merge election);
-    resuming after 04b takes finalize's full-election path instead."""
+    after 01, 02, 03 or 04 reruns hygiene (finalize reuses the pre-merge
+    election); resuming after 04b takes finalize's full-election path
+    instead."""
     workdir = tempfile.mkdtemp(prefix="ckpt_")
     try:
         docs = corpus.select(*INPUT_COLUMNS).limit(300)
@@ -185,6 +186,8 @@ def test_checkpoint_resume(spark, corpus):
         # Simulate restarts by removing the stage tables after the last
         # committed one.
         for dropped in (
+            ["02_pairs", "03_scored", "04_clusters", "04b_hygiene", "05_resolved"],
+            ["03_scored", "04_clusters", "04b_hygiene", "05_resolved"],
             ["04_clusters", "04b_hygiene", "05_resolved"],
             ["04b_hygiene", "05_resolved"],
             ["05_resolved"],
@@ -207,6 +210,44 @@ def _edge_config(edge_threshold: float) -> ResolverConfig:
     return dataclasses.replace(
         cfg, scoring=dataclasses.replace(cfg.scoring, edge_threshold=edge_threshold)
     )
+
+
+def _half_and_half(spark, docs, n=40, shift=6):
+    """``docs`` plus ``n`` planted pages, each made of the first half of one
+    page's words and the start of another's, so that some pairs score
+    between 0.40 and the 0.55 floor: with the floor left at 0.55, edge
+    0.40 moves 0.5% of the labels."""
+    pdf = docs.orderBy("url").limit(n).toPandas()
+    words = pdf["text"].fillna("").str.split().tolist()
+    pdf["url"] = [f"planted://{i}" for i in range(n)]
+    pdf["html"] = None
+    pdf["text"] = [
+        " ".join(w[: len(w) // 2] + words[(i + shift) % n][: len(w) - len(w) // 2])
+        for i, w in enumerate(words)
+    ]
+    return docs.unionByName(spark.createDataFrame(pdf, schema=docs.schema))
+
+
+def test_sub_floor_edge_threshold_keeps_its_pairs(spark, corpus):
+    """An edge_threshold below the JW band floor (0.55) lowers the floor to
+    it, so no pair scoring between the two is dropped before it can become
+    an edge: the labels equal those of the same config with no floor."""
+    cfg = _edge_config(0.40)
+    assert with_band_floor(ResolverConfig(), 0.55, 0.75, 0.82) == ResolverConfig()
+    no_floor = dataclasses.replace(
+        cfg, scoring=dataclasses.replace(cfg.scoring, jw_decision_band=0.0)
+    )
+    docs = _half_and_half(spark, corpus.select(*INPUT_COLUMNS))
+    got, want = (
+        resolve_documents(spark, docs, c)
+        .select("doc_id", "cluster")
+        .toPandas()
+        .sort_values("doc_id")
+        .reset_index(drop=True)
+        for c in (cfg, no_floor)
+    )
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, want)
 
 
 def test_attach_is_noop_within_its_bound(spark, corpus):

@@ -9,10 +9,13 @@ Usage:
     python bench_extra.py --what minhash
     python bench_extra.py --what simhash
     python bench_extra.py --what worker_floor
+    python bench_extra.py --what spread
 Prints one JSON line per phase set. ``worker_floor`` reads no input: it
 times the fixed cost of a Python worker task (TUNING.md, "Python worker
-floor"). Resolve stages are timed from the shipped plan by
-``perfbench/run.py --trace 1``.
+floor"). ``spread`` times ``util.spread_input``'s decision on five frame
+kinds over the documents parquet and counts the Spark jobs each decision
+submits (TUNING.md, "01_normalized"). Resolve stages are timed from the
+shipped plan by ``perfbench/run.py --trace 1``.
 """
 
 from __future__ import annotations
@@ -183,10 +186,50 @@ def bench_worker_floor(spark, out: dict, n_tasks: int = 97, rows: int = 128) -> 
     print(f"  invalidate_caches_ms: {out['invalidate_caches_ms']}", file=sys.stderr)
 
 
+def bench_spread(spark, sf_dir: str, out: dict) -> None:
+    """``spread_input``'s decision on a scan, a narrow projection, a scan +
+    exchange, a localCheckpoint and an in-memory frame: ms per decision on
+    a freshly built frame (min of N_REPS), the Spark jobs it submitted
+    (max over the reps) and whether it spread the frame."""
+    import pandas as pd
+
+    from gpu_entity_resolver_spark.util import spread_input
+
+    path = f"{sf_dir}/documents.parquet"
+    checkpointed = spark.read.parquet(path).localCheckpoint(eager=True)
+    in_memory = pd.DataFrame({"doc_id": range(128), "text": ["x"] * 128})
+    kinds = {
+        "scan": lambda: spark.read.parquet(path),
+        "projection": lambda: spark.read.parquet(path).select("doc_id", "lang"),
+        "exchange": lambda: spark.read.parquet(path).groupBy("lang").count(),
+        "local_checkpoint": lambda: checkpointed.select("*"),
+        "in_memory": lambda: spark.createDataFrame(in_memory),
+    }
+    sc = spark.sparkContext
+    for kind, build in kinds.items():
+        best, jobs = float("inf"), 0
+        for rep in range(N_REPS):
+            df = build()
+            group = f"spread_{kind}_{rep}"
+            sc.setJobGroup(group, group)
+            t0 = time.perf_counter()
+            spread = spread_input(df) is not df
+            best = min(best, time.perf_counter() - t0)
+            jobs = max(jobs, len(sc.statusTracker().getJobIdsForGroup(group)))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+        out[f"{kind}_ms"] = round(best * 1e3, 1)
+        out[f"{kind}_jobs"] = jobs
+        out[f"{kind}_spread"] = spread
+        print(f"  {kind}: {out[f'{kind}_ms']} ms, {jobs} jobs", file=sys.stderr)
+
+
 def main() -> None:
     p = argparse.ArgumentParser()
     p.add_argument(
-        "--what", default="minhash", choices=["minhash", "simhash", "worker_floor"]
+        "--what",
+        default="minhash",
+        choices=["minhash", "simhash", "worker_floor", "spread"],
     )
     args = p.parse_args()
 
@@ -201,6 +244,10 @@ def main() -> None:
     out: dict = {"what": args.what, "cpus": cpus}
     if args.what == "worker_floor":
         bench_worker_floor(spark, out)
+        print(json.dumps(out))
+        return
+    if args.what == "spread":
+        bench_spread(spark, sf_dir, out)
         print(json.dumps(out))
         return
     # the operator queries read the documents parquet directly, exactly as

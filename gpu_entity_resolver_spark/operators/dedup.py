@@ -118,7 +118,7 @@ def simhash64_table(
     from ..util import spread_input
 
     # the fingerprint kernel is a pure map — a one-split scan would run it
-    # all on one core (spread_input is a no-op on well-partitioned input)
+    # all on one core (spread_input leaves big and non-file input alone)
     base = spread_input(
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
     )

@@ -35,6 +35,7 @@ from ..operators.canonical import canonical_map
 from ..operators.connected_components import connected_components
 from ..operators.scoring import edges_above_threshold, make_jw_udf, score_pairs
 from ..sources.checkpoint import CheckpointManager
+from ..util import spread_input
 
 
 def _cluster_sig(members: DataFrame) -> DataFrame:
@@ -139,47 +140,10 @@ def resolve_documents(
     )
     ckpt = CheckpointManager(spark, checkpoint_dir or cfg.runtime.checkpoint_dir)
 
-    # Parallelism guard: stage 1 (extraction UDF + normalization) is narrow,
-    # so it inherits the INPUT partitioning. A handful of SMALL input files
-    # would serialize the most expensive per-row work; never run it below
-    # cluster parallelism. File count alone is NOT the trigger: parquet
-    # scans split files larger than maxPartitionBytes on their own, so a
-    # handful of multi-GB files already scans at >= target parallelism and
-    # repartitioning would force a full-input shuffle (fatal at 100 TB).
-    # Gate on the ESTIMATED SCAN SPLITS — total bytes / maxPartitionBytes —
-    # and only shuffle when both file count and split count fall short:
-    # a cheap shuffle of genuinely tiny input. Sizes come from the Hadoop
-    # FileSystem API (works for file:/hdfs:/s3a:); if a size can't be
-    # fetched, assume the input is big and leave the scan alone (the
-    # false-negative costs an under-parallel scan of one stage; the
-    # false-positive costs shuffling the whole input). Non-file frames
-    # (in-memory test data, prior-stage results) return no files and keep
-    # their partitioning, which already defaults to cluster parallelism.
-    target = spark.sparkContext.defaultParallelism
-    files = docs.inputFiles()
-    if 0 < len(files) < target:
-        try:
-            jvm = spark._jvm
-            hconf = spark._jsc.hadoopConfiguration()
-            total = 0
-            for uri in files:
-                jpath = jvm.org.apache.hadoop.fs.Path(uri)
-                total += jpath.getFileSystem(hconf).getFileStatus(jpath).getLen()
-            mpb_raw = spark.conf.get(
-                "spark.sql.files.maxPartitionBytes", "134217728b"
-            )
-            mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "b": 1}
-            mpb_raw = mpb_raw.strip().lower()
-            mpb = (
-                int(mpb_raw[:-1]) * mult[mpb_raw[-1]]
-                if mpb_raw[-1] in mult
-                else int(mpb_raw)
-            )
-            est_splits = -(-total // max(mpb, 1))
-        except Exception:
-            est_splits = target
-        if est_splits < target:
-            docs = docs.repartition(target * 2)
+    # Stage 1 (extraction UDF + normalization) is narrow, so it inherits the
+    # INPUT partitioning: a handful of small files would serialize the most
+    # expensive per-row work. spread_input spreads only a small file scan.
+    docs = spread_input(docs)
 
     prepared = ckpt.stage("01_normalized", lambda: prepare_documents(docs, cfg))
 

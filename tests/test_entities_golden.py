@@ -31,7 +31,7 @@ def ckpt_dir(tmp_path_factory):
 @pytest.fixture(scope="module")
 def resolver(spark, ckpt_dir):
     """The README fit commits its stage tables to ``ckpt_dir`` (see
-    test_checkpoint_resume_after_clusters)."""
+    test_checkpoint_resume_after_each_stage)."""
     import dataclasses
 
     from gpu_entity_resolver_spark.config import ResolverConfig
@@ -189,12 +189,13 @@ def test_report_and_review(resolver, resolved):
     assert rev.count() >= 0
 
 
-def test_checkpoint_resume_after_clusters(resolver, resolved, ckpt_dir):
+def test_checkpoint_resume_after_each_stage(resolver, resolved, ckpt_dir):
     """The module fit ran with ``runtime.checkpoint_dir`` set, so each stage
-    committed a table. A fit resumed after ``e03_clusters`` (hygiene and
-    finalize rerun from the committed tables) returns the fresh fit's rows
-    in every column; floats within 1e-6, as in the resolve plan's
-    determinism test."""
+    committed a table. A fit resumed after ``e01_prepared``,
+    ``e02_edges``, ``e03_clusters`` or ``e04_hygiene`` (the later stages
+    rerun from the committed tables) returns the fresh fit's rows in every
+    column; floats within 1e-6, as in the resolve plan's determinism
+    test."""
     import os
     import shutil
 
@@ -204,16 +205,24 @@ def test_checkpoint_resume_after_clusters(resolver, resolved, ckpt_dir):
         "_lineage", "e01_prepared", "e02_edges", "e03_clusters",
         "e04_hygiene", "e05_resolved",
     ]
-    for stage in ("e04_hygiene", "e05_resolved"):
-        shutil.rmtree(os.path.join(ckpt_dir, stage))
-    resumed = EntityResolver(
-        config=resolver.config, spark=resolver._session()
-    ).fit_transform(pd.DataFrame(README_DATA))
-    assert os.path.isdir(os.path.join(ckpt_dir, "e05_resolved"))
-    pd.testing.assert_frame_equal(
-        resumed.sort_values("company_name").reset_index(drop=True),
-        resolved.sort_values("company_name").reset_index(drop=True),
-        check_exact=False,
-        rtol=0,
-        atol=1e-6,
-    )
+    fresh = resolved.sort_values("company_name").reset_index(drop=True)
+    for dropped in (
+        ["e02_edges", "e03_clusters", "e04_hygiene", "e05_resolved"],
+        ["e03_clusters", "e04_hygiene", "e05_resolved"],
+        ["e04_hygiene", "e05_resolved"],
+        ["e05_resolved"],
+    ):
+        for stage in dropped:
+            shutil.rmtree(os.path.join(ckpt_dir, stage))
+        resumed = EntityResolver(
+            config=resolver.config, spark=resolver._session()
+        ).fit_transform(pd.DataFrame(README_DATA))
+        assert os.path.isdir(os.path.join(ckpt_dir, "e05_resolved"))
+        pd.testing.assert_frame_equal(
+            resumed.sort_values("company_name").reset_index(drop=True),
+            fresh,
+            check_exact=False,
+            rtol=0,
+            atol=1e-6,
+            obj=str(dropped),
+        )

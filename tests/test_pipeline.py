@@ -318,6 +318,24 @@ def test_attach_runs_outside_its_bound(spark, corpus, monkeypatch):
     assert len(calls) == 1
 
 
+def test_resolve_spreads_its_input_once(spark, corpus, monkeypatch):
+    """resolve_documents passes its input through the package's one
+    small-input rule, once."""
+    from gpu_entity_resolver_spark.plans import resolve
+
+    seen = []
+    spread = resolve.spread_input
+
+    def counting(df):
+        seen.append(df)
+        return spread(df)
+
+    monkeypatch.setattr(resolve, "spread_input", counting)
+    docs = corpus.select(*INPUT_COLUMNS).limit(100)
+    resolve_documents(spark, docs)
+    assert len(seen) == 1 and seen[0] is docs
+
+
 def test_resolve_deterministic_across_parallelism(spark, corpus):
     """North-rule invariant, end to end: the RESOLVED output — cluster
     partition, canonical text, review flags — is identical no matter how
